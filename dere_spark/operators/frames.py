@@ -30,8 +30,9 @@ semantics equivalent for max_cardinality=1 slots).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
+from dere_spark.operators import sql_str
 from dere_spark.plans.compiler import PlanSpec
 
 
@@ -41,13 +42,12 @@ def score_pairs(pairs: DataFrame) -> DataFrame:
     score = 1 / (1 + |token_distance|); direction rules encode the slot
     semantics (Theme: forward-looking; Manner: immediately preceding).
     """
-    scored = pairs.withColumn(
-        "score", F.lit(1.0) / (F.lit(1.0) + F.abs(F.col("token_distance")))
+    return pairs.withColumn(
+        "score", F.expr("1.0D / (1.0D + abs(token_distance))")
+    ).where(
+        "(slot_name = 'Theme' AND token_distance > 0) "
+        "OR (slot_name = 'Manner' AND token_distance = -1)"
     )
-    keep = (
-        (F.col("slot_name") == "Theme") & (F.col("token_distance") > 0)
-    ) | ((F.col("slot_name") == "Manner") & (F.col("token_distance") == -1))
-    return scored.where(keep)
 
 
 def best_fillers(scored: DataFrame) -> DataFrame:
@@ -58,13 +58,16 @@ def best_fillers(scored: DataFrame) -> DataFrame:
     local[32].
     """
     # "bucket" is functionally dependent on anchor_idx (floor(idx/k)), so
-    # adding it to the partition key changes nothing semantically but lets
-    # the window reuse the banded join's (doc_id, bucket) hash distribution
-    # without a new exchange.
-    w = Window.partitionBy(
-        "doc_id", "bucket", "anchor_idx", "frame_type", "slot_name"
-    ).orderBy(F.abs(F.col("token_distance")).asc(), F.col("filler_idx").asc())
-    return scored.withColumn("filler_rank", F.row_number().over(w))
+    # it changes nothing semantically in the partition key; the doc_id
+    # hash partitioning the pairs arrive with satisfies the window's
+    # distribution either way, so the window adds no exchange.
+    return scored.withColumn(
+        "filler_rank",
+        F.expr(
+            "row_number() OVER (PARTITION BY doc_id, bucket, anchor_idx, frame_type, "
+            "slot_name ORDER BY abs(token_distance) ASC, filler_idx ASC)"
+        ),
+    )
 
 
 def assemble_frames(ranked: DataFrame, plan: PlanSpec) -> DataFrame:
@@ -76,54 +79,39 @@ def assemble_frames(ranked: DataFrame, plan: PlanSpec) -> DataFrame:
     reference's one-frame-per-anchor assembly (slot_classifier.py:180-196).
 
     Cardinality: per-slot max bound prunes by rank; frames lacking a
-    min-required slot are dropped via an anti-join on the violation set.
+    min-required slot are dropped by per-frame window counts.
     """
-    max_card = F.create_map(
-        *[
-            x
-            for lab in plan.relation_labels
-            for x in (
-                F.lit(lab.predicate),
-                F.lit(lab.max_cardinality if lab.max_cardinality is not None else 1 << 30),
-            )
-        ]
+    max_card = ", ".join(
+        f"{sql_str(lab.predicate)}, "
+        f"{lab.max_cardinality if lab.max_cardinality is not None else 1 << 30}"
+        for lab in plan.relation_labels
     )
-    fills = ranked.where(F.col("filler_rank") <= max_card[F.col("predicate")])
+    fills = ranked.where(f"filler_rank <= map({max_card})[predicate]")
 
     required = [lab for lab in plan.relation_labels if (lab.min_cardinality or 0) > 0]
     if required:
         # Anchors must satisfy EVERY min-cardinality slot of their frame
         # type. Expressed as per-frame window counts rather than a
         # groupBy + semi-join: the window's ClusteredDistribution over
-        # (doc_id, anchor_idx, frame_type) is already satisfied by the
-        # corpus's doc_id hash partitioning, so this adds NO exchange and
-        # never recomputes the fills subtree (a semi-join formulation was
-        # benchmarked: it doubled the plan and added two shuffles).
-        wf = Window.partitionBy("doc_id", "bucket", "anchor_idx", "frame_type")
-        cond = None
-        tmp_cols = []
+        # (doc_id, bucket, anchor_idx, frame_type) is already satisfied by
+        # the corpus's doc_id hash partitioning, so this adds NO exchange
+        # and never recomputes the fills subtree (a semi-join formulation
+        # was benchmarked: it doubled the plan and added two shuffles).
+        counts, conds = [], []
         for i, lab in enumerate(required):
-            col_name = f"_req_{i}"
-            tmp_cols.append(col_name)
-            fills = fills.withColumn(
-                col_name,
-                F.sum(
-                    F.when(
-                        (F.col("slot_name") == lab.slot_name)
-                        & (F.col("frame_type") == lab.frame_type),
-                        1,
-                    ).otherwise(0)
-                ).over(wf),
+            frame_type = sql_str(lab.frame_type)
+            counts.append(
+                f"sum(CASE WHEN slot_name = {sql_str(lab.slot_name)} AND frame_type = "
+                f"{frame_type} THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id, bucket, "
+                f"anchor_idx, frame_type) AS _req_{i}"
             )
-            c = (F.col("frame_type") != lab.frame_type) | (
-                F.col(col_name) >= lab.min_cardinality
-            )
-            cond = c if cond is None else (cond & c)
-        fills = fills.where(cond).drop(*tmp_cols)
+            conds.append(f"(frame_type != {frame_type} OR _req_{i} >= {lab.min_cardinality})")
+        # the _req_ columns fall away in the final projection
+        fills = fills.selectExpr("*", *counts).where(" AND ".join(conds))
 
-    return fills.select(
+    return fills.selectExpr(
         "doc_id",
-        F.col("anchor_idx").alias("frame_id"),
+        "anchor_idx AS frame_id",
         "frame_type",
         "anchor_idx",
         "anchor_type",
@@ -139,5 +127,5 @@ def assemble_frames(ranked: DataFrame, plan: PlanSpec) -> DataFrame:
         "filler_text",
         "token_distance",
         "score",
-        F.lit("predicted").alias("source"),
+        "'predicted' AS source",
     )

@@ -30,7 +30,15 @@ def gazetteer_df(
 ) -> DataFrame:
     """Gazetteer dimension table: (term, span_type). Lowercased terms,
     matching the reference's lowercased membership test
-    (span_classifier.py:316-319)."""
+    (span_classifier.py:316-319).
+
+    Built with ``createDataFrame`` on purpose: its RDD makes every plan
+    built on it distinct. Spark's cache manager substitutes any persisted
+    plan that is semantically equal, so a gazetteer that compares equal
+    across builds (an inline ``VALUES`` table) lets an uncached
+    ``webtext.build_stages`` read the spans and triples that
+    ``webtext.cached_stages`` persisted for the same path: stale after a
+    rewrite, and not the uncached pipeline the flagship timings measure."""
     rows = [
         (term.lower(), span_type)
         for span_type, terms in sorted(gazetteers.items())
@@ -48,21 +56,16 @@ def detect_spans(tokens: DataFrame, gazetteer: DataFrame) -> DataFrame:
     explicitly broadcast so the plan is a BroadcastHashJoin — the token
     stream never shuffles.
     """
-    return (
-        tokens.join(
-            F.broadcast(gazetteer),
-            F.lower(tokens["token"]) == gazetteer["term"],
-            "inner",
-        )
-        .select(
-            "doc_id",
-            "token_idx",
-            "span_type",
-            "left",
-            "right",
-            F.col("token").alias("text"),
-            F.lit("predicted").alias("source"),
-        )
+    return tokens.join(
+        F.broadcast(gazetteer), F.expr("lower(token) = term"), "inner"
+    ).selectExpr(
+        "doc_id",
+        "token_idx",
+        "span_type",
+        "`left`",
+        "`right`",
+        "token AS text",
+        "'predicted' AS source",
     )
 
 

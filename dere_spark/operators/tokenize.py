@@ -20,12 +20,21 @@ required distribution is ALREADY satisfied — Catalyst inserts no exchange,
 only a per-partition sort. Net shuffle cost of tokenization: zero. (An
 array-level higher-order-function prefix sum was benchmarked and rejected:
 array append inside ``aggregate`` is O(n²) per document.)
+
+Lost A/B, kept as numbers: a shuffle-free Arrow tokenizer (``mapInPandas``
+with a ragged numpy cumsum per batch) halved the plan's data exchanges
+(4 -> 2) and was ~20% faster on one local[32] JVM, but LOST in
+multi-executor mode (local-cluster[1x8], 100x corpus: window 31-42 s vs
+Arrow 36-59 s): the Python->JVM Arrow IPC of the full token stream costs
+more than the document shuffle it saves.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
+
+from dere_spark.operators import sql_str
 
 
 def tokenize(
@@ -46,103 +55,19 @@ def tokenize(
     """
     if sep_len is None:
         sep_len = len(sep)
-    toks = documents.select(
-        "doc_id",
-        F.posexplode(F.split(F.col(text_col), F.lit(sep), -1)).alias("token_idx", "token"),
+    return (
+        documents.selectExpr(
+            "doc_id",
+            f"posexplode(split(`{text_col}`, {sql_str(sep)}, -1)) AS (token_idx, token)",
+        )
+        .selectExpr(
+            "*",
+            f"CAST(coalesce(sum(length(token) + {int(sep_len)}) OVER (PARTITION BY doc_id "
+            "ORDER BY token_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) "
+            "AS INT) AS `left`",
+            "CAST(`left` + length(token) AS INT) AS `right`",
+        )
     )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("token_idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    toks = toks.withColumn(
-        "left",
-        F.coalesce(F.sum(F.length("token") + sep_len).over(w), F.lit(0)).cast("int"),
-    ).withColumn("right", (F.col("left") + F.length("token")).cast("int"))
-    return toks
-
-
-def tokenize_arrow(
-    documents: DataFrame,
-    sep: str = " ",
-    text_col: str = "text",
-    sep_len: int | None = None,
-) -> DataFrame:
-    """Shuffle-free tokenizer: offsets via a vectorized Arrow kernel.
-
-    Same output contract as `tokenize`, different physical strategy: the
-    prefix sum runs INSIDE each document row (ragged cumsum over the
-    batch's flattened token lengths — one numpy pass, no per-row Python),
-    so no shuffle, no sort, no window. On a bandwidth-bound cluster this
-    removes the pipeline's largest exchange: the full token stream.
-
-    Contract parity with `tokenize`: ``sep`` is split as a REGEX
-    (pandas defaults a 1-char pattern to a literal; the JVM path is
-    always Java-regex, so the kernel forces regex=True), NULL ``text``
-    rows emit no tokens (the JVM path's split(NULL) drops the row), and
-    ``sep_len`` overrides the offset step when the pattern's match
-    width differs from ``len(sep)``. Known dialect residue: a pattern
-    that can match the EMPTY string (e.g. a bare ``|``) still diverges —
-    Python's re.split keeps the leading zero-width field that Java
-    discards; don't use zero-width-capable separators with either path.
-
-    mapInPandas over (doc_id, text) -> exploded token rows; the kernel
-    flattens every document's tokens in the Arrow batch into single numpy
-    arrays, cumsums once, and re-bases each document's offsets by segment.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    if sep_len is None:
-        sep_len = len(sep)
-    out_schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("token_idx", IntegerType()),
-            StructField("token", StringType()),
-            StructField("left", IntegerType()),
-            StructField("right", IntegerType()),
-        ]
-    )
-
-    def kernel(batches):
-        for batch in batches:
-            batch = batch[batch[text_col].notna()]
-            if not len(batch):
-                continue
-            token_lists = batch[text_col].str.split(sep, regex=True)
-            counts = token_lists.str.len().to_numpy()
-            flat = np.concatenate([np.asarray(t, dtype=object) for t in token_lists])
-            lens = np.char.str_len(flat.astype(str)).astype(np.int64)
-            # exclusive prefix sum of (len + sep) over the flat stream
-            csum = np.concatenate(([0], np.cumsum(lens + sep_len)[:-1]))
-            # re-base each document's segment to start at 0
-            seg_starts = np.repeat(
-                csum[np.concatenate(([0], np.cumsum(counts)[:-1]))], counts
-            )
-            left = (csum - seg_starts).astype(np.int32)
-            right = (left + lens).astype(np.int32)
-            token_idx = (
-                np.arange(len(flat), dtype=np.int64)
-                - np.repeat(np.concatenate(([0], np.cumsum(counts)[:-1])), counts)
-            ).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(batch["doc_id"].to_numpy(), counts),
-                    "token_idx": token_idx,
-                    "token": flat,
-                    "left": left,
-                    "right": right,
-                }
-            )
-
-    return documents.select("doc_id", text_col).mapInPandas(kernel, out_schema)
 
 
 def fidelity_violations(documents: DataFrame, tokens: DataFrame) -> DataFrame:

@@ -10,16 +10,18 @@ nltk's quote-back conversion and ``align_tokens`` offset recovery — from
 the published description. Parity is pinned by recorded expected vectors
 in tests/test_treebank.py (including nltk's own documented example).
 
-Execution strategy: the regex chain is applied whole-document (one pass
-per rule per document — C-speed ``re`` over megabyte strings, never
-per-token Python), inside an Arrow-batched ``mapInPandas`` kernel that
-emits exploded token rows with exact offsets. Offsets come from a
-monotone left-to-right alignment (every Treebank rule only inserts
-spaces between substrings of the original text, so each emitted token is
-a verbatim substring and alignment is a single forward scan).
+Two implementations share this contract:
 
-Scale: same contract and partitioning story as ``tokenize_arrow`` — no
-shuffle, no window; the kernel is embarrassingly parallel per document.
+  * ``tokenize_treebank_sql`` — the shipped one (``webtext.build_stages``):
+    the rule chain compiled to JVM ``regexp_replace`` expressions over
+    whitespace words, with quote-back and offsets done by array
+    higher-order functions. No token byte crosses the Python boundary.
+  * ``tokenize_treebank`` — the parity reference: the regex chain applied
+    whole-document in Python ``re`` inside an Arrow-batched
+    ``mapInPandas`` kernel, with offsets from a monotone left-to-right
+    alignment (every Treebank rule only inserts spaces between substrings
+    of the original text, so each emitted token is a verbatim substring).
+    Tests compare the shipped tokenizer against it.
 """
 
 from __future__ import annotations
@@ -27,9 +29,9 @@ from __future__ import annotations
 import re
 from typing import Iterator, List, Tuple
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from dere_spark.operators import sql_str
 from dere_spark.operators.tokenize import tokenize
 
 # --- the nltk 3.3 TreebankWordTokenizer rule chain (published) ----------
@@ -175,9 +177,17 @@ def treebank_spans(text: str) -> List[Tuple[int, int]]:
         return tolerant()
 
 
-def _treebank_rule_chain(word, is_first, is_last):
-    """The nltk 3.3 rule chain over ONE whitespace-delimited word, as a
-    Catalyst Column (Java regex). Rules never merge across whitespace —
+def _rr(w: str, pattern: str, replacement: str) -> str:
+    return f"regexp_replace({w}, {sql_str(pattern)}, {sql_str(replacement)})"
+
+
+def _when(cond: str, then: str, otherwise: str) -> str:
+    return f"CASE WHEN {cond} THEN {then} ELSE {otherwise} END"
+
+
+def _treebank_rule_chain(word: str, is_first: str, is_last: str) -> str:
+    """The nltk 3.3 rule chain over ONE whitespace-delimited word, as Spark
+    SQL text (Java regex). Rules never merge across whitespace —
     they only insert it — so applying the chain per word is equivalent to
     applying it to the full text, with two text-anchored rules gated on
     the first/last word (``^"`` and the final-period splitter) and the
@@ -186,37 +196,33 @@ def _treebank_rule_chain(word, is_first, is_last):
     ``(?#X)`` comments from the published patterns are dropped (Java has
     no regex comments); otherwise the patterns are the nltk 3.3 chain
     verbatim, in order."""
-    w = F.when(is_first, F.regexp_replace(word, r'^"', "``")).otherwise(word)
+    w = _when(is_first, _rr(word, r'^"', "``"), word)
     # STARTING_QUOTES 2-3 (the space class gains ^: word-initial == after
     # an original inter-word space)
-    w = F.regexp_replace(w, r"(``)", " $1 ")
-    w = F.regexp_replace(w, r"(^|[ \(\[{<])(\"|'{2})", "$1 `` ")
+    w = _rr(w, r"(``)", " $1 ")
+    w = _rr(w, r"(^|[ \(\[{<])(\"|'{2})", "$1 `` ")
     # PUNCTUATION
-    w = F.regexp_replace(w, r"([:,])([^\d])", " $1 $2")
-    w = F.regexp_replace(w, r"([:,])$", " $1 ")
-    w = F.regexp_replace(w, r"\.\.\.", " ... ")
-    w = F.regexp_replace(w, r"[;@#$%&]", " $0 ")
-    w = F.when(
-        is_last,
-        F.regexp_replace(w, r'([^\.])(\.)([\]\)}>"\']*)\s*$', "$1 $2$3 "),
-    ).otherwise(w)
-    w = F.regexp_replace(w, r"[?!]", " $0 ")
-    w = F.when(
+    w = _rr(w, r"([:,])([^\d])", " $1 $2")
+    w = _rr(w, r"([:,])$", " $1 ")
+    w = _rr(w, r"\.\.\.", " ... ")
+    w = _rr(w, r"[;@#$%&]", " $0 ")
+    w = _when(is_last, _rr(w, r'([^\.])(\.)([\]\)}>"\']*)\s*$', "$1 $2$3 "), w)
+    w = _rr(w, r"[?!]", " $0 ")
+    w = _when(
         is_last,  # text-final quote keeps nltk's no-trailing-space no-op
-        F.regexp_replace(w, r"([^'])' ", "$1 ' "),
-    ).otherwise(F.regexp_replace(w, r"([^'])'( |$)", "$1 ' $2"))
-    # PARENS_BRACKETS + DOUBLE_DASHES
-    w = F.regexp_replace(w, r"[\]\[\(\)\{\}<>]", " $0 ")
-    w = F.regexp_replace(w, r"--", " -- ")
-    # nltk pads before the ending-quote/contraction rules
-    w = F.concat(F.lit(" "), w, F.lit(" "))
-    # ENDING_QUOTES
-    w = F.regexp_replace(w, r'"', " '' ")
-    w = F.regexp_replace(w, r"(\S)('')", "$1 $2 ")
-    w = F.regexp_replace(w, r"([^' ])('[sS]|'[mM]|'[dD]|') ", "$1 $2 ")
-    w = F.regexp_replace(
-        w, r"([^' ])('ll|'LL|'re|'RE|'ve|'VE|n't|N'T) ", "$1 $2 "
+        _rr(w, r"([^'])' ", "$1 ' "),
+        _rr(w, r"([^'])'( |$)", "$1 ' $2"),
     )
+    # PARENS_BRACKETS + DOUBLE_DASHES
+    w = _rr(w, r"[\]\[\(\)\{\}<>]", " $0 ")
+    w = _rr(w, r"--", " -- ")
+    # nltk pads before the ending-quote/contraction rules
+    w = f"concat(' ', {w}, ' ')"
+    # ENDING_QUOTES
+    w = _rr(w, r'"', " '' ")
+    w = _rr(w, r"(\S)('')", "$1 $2 ")
+    w = _rr(w, r"([^' ])('[sS]|'[mM]|'[dD]|') ", "$1 $2 ")
+    w = _rr(w, r"([^' ])('ll|'LL|'re|'RE|'ve|'VE|n't|N'T) ", "$1 $2 ")
     # MacIntyre contractions
     for pat in (
         r"(?i)\b(can)(not)\b",
@@ -227,33 +233,38 @@ def _treebank_rule_chain(word, is_first, is_last):
         r"(?i)\b(lem)(me)\b",
         r"(?i)\b(mor)('n)\b",
         r"(?i)\b(wan)(na)\s",
+        r"(?i) ('t)(is)\b",
+        r"(?i) ('t)(was)\b",
     ):
-        w = F.regexp_replace(w, pat, " $1 $2 ")
-    for pat in (r"(?i) ('t)(is)\b", r"(?i) ('t)(was)\b"):
-        w = F.regexp_replace(w, pat, " $1 $2 ")
+        w = _rr(w, pat, " $1 $2 ")
     return w
 
 
 #: Pure-alphanumeric words no rule can touch — except the all-letter
 #: contractions, which must take the slow path.
 _LETTER_CONTRACTIONS = ("cannot", "gimme", "gonna", "gotta", "lemme", "wanna")
+#: the converted-quote tokens, as an SQL IN list
+_QUOTE_TOKENS = "(" + ", ".join(sql_str(q) for q in ('"', "``", "''")) + ")"
 
 
 def tokenize_treebank_sql(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Treebank tokenization entirely JVM-side — the webtext default.
 
-    Physical strategy (why this beats the Arrow kernel at scale): the r2
-    A/B showed Python->JVM Arrow IPC of the full token stream LOSES to a
-    JVM shuffle (webtext.py module note). This variant keeps every byte in
-    the JVM: whitespace words come from the existing windowed ``tokenize``
-    (single doc_id exchange, reused downstream), then each word is
-    sub-split by the nltk 3.3 rule chain compiled to ``regexp_replace``
-    Catalyst expressions, with quote-back conversion and offsets done by
-    array higher-order functions. Sub-token offsets are per-word prefix
-    sums — exact, because after quote-back the sub-tokens partition the
-    word's characters (Treebank rules only insert whitespace). A fast
-    path skips the ~20-regex chain for purely alphanumeric words (the
+    Physical strategy: every byte stays in the JVM (an r2 A/B showed the
+    Python->JVM Arrow IPC of the full token stream losing to a JVM
+    shuffle): whitespace words come from the existing windowed
+    ``tokenize`` (single doc_id exchange, reused downstream), then each
+    word is sub-split by the nltk 3.3 rule chain compiled to
+    ``regexp_replace`` expressions, with quote-back conversion and offsets
+    done by array higher-order functions. Sub-token offsets are per-word
+    prefix sums — exact, because after quote-back the sub-tokens partition
+    the word's characters (Treebank rules only insert whitespace). A fast
+    path skips the ~30-regex chain for purely alphanumeric words (the
     overwhelming majority of web tokens).
+
+    Every expression is SQL text: the rule chain as one Column-API tree
+    cost ~300 py4j round trips per plan build, as one string it costs a
+    handful.
 
     Parity: equals the recorded-nltk-3.3 Arrow kernel (`tokenize_treebank`)
     on every recorded vector and fixture (tests/test_treebank.py). Known
@@ -264,91 +275,71 @@ def tokenize_treebank_sql(documents: DataFrame, text_col: str = "text") -> DataF
     variant stays word-local. Neither occurs in the reference corpora or
     the recorded vectors.
     """
-    from pyspark.sql import Window
-
-    words = tokenize(documents, sep=r"[\s]", text_col=text_col, sep_len=1)
-    wdoc = Window.partitionBy("doc_id")
-    words = words.withColumn(
-        "_last_idx",
-        F.max(F.when(F.length("token") > 0, F.col("token_idx"))).over(wdoc),
+    fast = (
+        "NOT (token RLIKE '[^A-Za-z0-9]') AND NOT (lower(token) IN ("
+        + ", ".join(sql_str(c) for c in _LETTER_CONTRACTIONS)
+        + "))"
     )
-    is_first = F.col("token_idx") == 0
-    is_last = F.col("token_idx") == F.col("_last_idx")
-    fast = (~F.col("token").rlike("[^A-Za-z0-9]")) & (
-        ~F.lower("token").isin(*_LETTER_CONTRACTIONS)
-    )
-    chain = _treebank_rule_chain(F.col("token"), is_first, is_last)
-    raw = F.when(fast, F.array(F.col("token"))).otherwise(
-        F.filter(F.split(chain, " ", -1), lambda t: t != F.lit(""))
-    )
-    sub = words.select(
-        "doc_id",
-        F.col("token_idx").alias("_widx"),
-        F.col("left").alias("_wleft"),
-        F.col("token").alias("_word"),
-        raw.alias("_raw"),
-    )
+    chain = _treebank_rule_chain("token", "token_idx = 0", "token_idx = _last_idx")
+    raw = _when(fast, "array(token)", f"filter(split({chain}, ' ', -1), t -> t != '')")
     # quote-back (nltk span_tokenize): the i-th converted-quote token maps
     # to the i-th quote-finder match in the ORIGINAL word, restoring the
     # verbatim substring so offsets stay exact. Gated on quote presence so
     # the regexp_extract_all + transform run only on quote-bearing words.
-    quoteish = lambda t: t.isin('"', "``", "''")  # noqa: E731
-    has_quote = F.col("_word").rlike("``|''|\"")
-    sub = sub.withColumn(
-        "_qm",
-        F.when(has_quote, F.regexp_extract_all("_word", F.lit("``|''|\""), 0)),
+    quote_finder = sql_str("``|''|\"")
+    has_quote = f"_word RLIKE {quote_finder}"
+    quote_back = (
+        f"transform(_raw, (t, i) -> CASE WHEN t IN {_QUOTE_TOKENS} THEN element_at(_qm, "
+        f"size(filter(slice(_raw, 1, i + 1), x -> x IN {_QUOTE_TOKENS}))) ELSE t END)"
     )
-    sub = sub.withColumn(
-        "_fixed",
-        F.filter(
-            F.when(
-                has_quote,
-                F.transform(
-                    "_raw",
-                    lambda t, i: F.when(
-                        quoteish(t),
-                        F.element_at(
-                            "_qm",
-                            F.size(
-                                F.filter(F.slice("_raw", F.lit(1), i + 1), quoteish)
-                            ),
-                        ),
-                    ).otherwise(t),
-                ),
-            ).otherwise(F.col("_raw")),
-            lambda t: F.length(t) > 0,
-        ),
-    ).withColumn("_lens", F.expr("transform(_fixed, t -> length(t))"))
     # global token numbering as a WORD-level prefix sum over sub-token
     # counts: same partition key + sort order as the tokenize window, so
     # Catalyst reuses one exchange + one sort (a row_number over the
-    # exploded sub-token stream would pay a second, bigger sort).
-    wword = (
-        Window.partitionBy("doc_id")
-        .orderBy("_widx")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    # exploded sub-token stream would pay a second, bigger sort). Later
+    # expressions of one selectExpr refer to earlier aliases, except
+    # inside a window expression.
+    return (
+        tokenize(documents, sep=r"[\s]", text_col=text_col, sep_len=1)
+        .selectExpr(
+            "doc_id",
+            "max(CASE WHEN length(token) > 0 THEN token_idx END) "
+            "OVER (PARTITION BY doc_id) AS _last_idx",
+            "token_idx AS _widx",
+            "`left` AS _wleft",
+            "token AS _word",
+            f"{raw} AS _raw",
+            f"CASE WHEN {has_quote} THEN regexp_extract_all(_word, {quote_finder}, 0) "
+            "END AS _qm",
+            f"filter({_when(has_quote, quote_back, '_raw')}, t -> length(t) > 0) AS _fixed",
+            "transform(_fixed, t -> length(t)) AS _lens",
+        )
+        .selectExpr(
+            "doc_id",
+            "_wleft",
+            "_lens",
+            "_fixed",
+            "coalesce(sum(size(_fixed)) OVER (PARTITION BY doc_id ORDER BY _widx "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS _base_idx",
+        )
+        .selectExpr(
+            "doc_id", "_base_idx", "_wleft", "_lens", "posexplode(_fixed) AS (_sidx, token)"
+        )
+        .selectExpr(
+            "doc_id",
+            "CAST(_base_idx + _sidx AS INT) AS token_idx",
+            "token",
+            "CAST(_wleft + aggregate(slice(_lens, 1, _sidx), 0, (a, x) -> a + x) AS INT) "
+            "AS `left`",
+            "CAST(`left` + length(token) AS INT) AS `right`",
+        )
     )
-    sub = sub.withColumn(
-        "_base_idx", F.coalesce(F.sum(F.size("_fixed")).over(wword), F.lit(0))
-    )
-    tok = sub.select(
-        "doc_id", "_base_idx", "_wleft", "_lens",
-        F.posexplode("_fixed").alias("_sidx", "token"),
-    )
-    rel_left = F.expr("aggregate(slice(_lens, 1, _sidx), 0, (a, x) -> a + x)")
-    return tok.select(
-        "doc_id",
-        (F.col("_base_idx") + F.col("_sidx")).cast("int").alias("token_idx"),
-        "token",
-        (F.col("_wleft") + rel_left).cast("int").alias("left"),
-    ).withColumn("right", (F.col("left") + F.length("token")).cast("int"))
 
 
 def tokenize_treebank(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """documents(doc_id, text, ...) -> tokens(doc_id, token_idx, token,
     left, right) with Treebank segmentation and exact offsets.
 
-    Same output contract as ``tokenize``/``tokenize_arrow`` (the fidelity
+    Same output contract as ``tokenize``/``tokenize_treebank_sql`` (the fidelity
     invariant ``substring(text, left+1, right-left) == token`` holds), so
     it drops into every downstream operator unchanged.
     """

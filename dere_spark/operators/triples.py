@@ -25,58 +25,39 @@ from typing import Mapping, Optional
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from dere_spark.operators import string_table
+
 
 def entity_dictionary(
     spark: SparkSession, aliases: Optional[Mapping[str, str]] = None
 ) -> DataFrame:
     """Tiny dimension (surface -> entity_id); broadcast at the link join."""
-    rows = sorted((aliases or {}).items())
-    return spark.createDataFrame(rows or [("", "")], "surface string, entity_id string").where(
-        F.col("surface") != ""
-    )
-
-
-def link_entities(
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    surface_col: str,
-    out_col: str,
-) -> DataFrame:
-    """Broadcast-dictionary entity link with deterministic fallback id.
-
-    Fallback: ``ent:<lowercased surface>`` — stable, collision-free within
-    the surface vocabulary, and computable without any shuffle.
-    """
-    d = dictionary.withColumnRenamed("surface", "__surface").withColumnRenamed(
-        "entity_id", "__entity_id"
-    )
-    return (
-        mentions.join(
-            F.broadcast(d),
-            F.lower(F.col(surface_col)) == F.col("__surface"),
-            "left",
-        )
-        .withColumn(
-            out_col,
-            F.coalesce(
-                F.col("__entity_id"), F.concat(F.lit("ent:"), F.lower(F.col(surface_col)))
-            ),
-        )
-        .drop("__surface", "__entity_id")
+    return string_table(
+        spark, ("surface", "entity_id"), sorted(kv for kv in (aliases or {}).items() if kv[0])
     )
 
 
 def frames_to_triples(frames: DataFrame, dictionary: DataFrame) -> DataFrame:
-    """frames edge-list -> triples(subj, pred, obj, doc_id, frame_id, confidence)."""
-    linked = link_entities(frames, dictionary, "anchor_text", "subj")
-    linked = link_entities(linked, dictionary, "filler_text", "obj")
-    return linked.select(
-        "subj",
-        F.col("predicate").alias("pred"),
-        "obj",
-        "doc_id",
-        "frame_id",
-        F.col("score").alias("confidence"),
+    """frames edge-list -> triples(subj, pred, obj, doc_id, frame_id, confidence).
+
+    Both mentions are linked through the broadcast dictionary (left joins
+    on the lowercased surface); an unresolved mention falls back to
+    ``ent:<lowercased surface>`` — stable, collision-free within the
+    surface vocabulary, and computable without any shuffle.
+    """
+    subj = dictionary.selectExpr("surface AS _subj_surface", "entity_id AS _subj_id")
+    obj = dictionary.selectExpr("surface AS _obj_surface", "entity_id AS _obj_id")
+    return (
+        frames.join(F.broadcast(subj), F.expr("lower(anchor_text) = _subj_surface"), "left")
+        .join(F.broadcast(obj), F.expr("lower(filler_text) = _obj_surface"), "left")
+        .selectExpr(
+            "coalesce(_subj_id, concat('ent:', lower(anchor_text))) AS subj",
+            "predicate AS pred",
+            "coalesce(_obj_id, concat('ent:', lower(filler_text))) AS obj",
+            "doc_id",
+            "frame_id",
+            "score AS confidence",
+        )
     )
 
 

@@ -8,9 +8,10 @@ we derive the same three at plan-compile time:
     span-fillable slots (reference: dere/models/_baseline/slot_classifier.py:64-86);
   * the plausible-relations whitelist: the set of
     ``(anchor_span_type, filler_span_type) -> [(frame_type, slot_name)]``
-    pairs that can ever hold, used to prune the candidate self-join BEFORE
-    the shuffle (reference: slot_classifier.py:170-178, 347-383) — this is
-    the single biggest work-saver at scale and we push it into the join;
+    pairs that can ever hold, used to prune candidate pairs right after
+    the per-document neighbourhood expansion (reference:
+    slot_classifier.py:170-178, 347-383) — this is the single biggest
+    work-saver at scale and we push it into the pair stage;
   * anchor slots: the first slot of each frame type
     (reference: slot_classifier.py:273-275).
 

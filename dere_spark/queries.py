@@ -135,7 +135,8 @@ triples AS (
 
 # ---------------------------------------------------------------------------
 # KG pipeline stages (S1-ish scan, F5/F7 offsets, J5 gazetteer join, J1
-# whitelist self-join, M5 assembly + M6 cardinality, triples flatten)
+# ±k pair window + whitelist join, M5 assembly + M6 cardinality, triples
+# flatten)
 # ---------------------------------------------------------------------------
 
 @register(
@@ -309,8 +310,8 @@ def q_kg_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     KG_CTES + "SELECT * FROM pairs",
 )
 def q_kg_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate-pair banded self theta-join with whitelist pushdown (J1).
-    The internal band bucket (exchange-reuse column) is dropped at the
+    """Candidate pairs from a per-document ±k token window with whitelist
+    pushdown (J1). The internal ``bucket`` column is dropped at the
     external boundary."""
     return cached_stages(spark, sf_dir)["pairs"].drop("bucket")
 

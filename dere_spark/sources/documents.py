@@ -51,9 +51,9 @@ def load_documents(
     ``partition_by_doc`` hash-partitions the corpus on doc_id with the
     session's shuffle-partition count. This is the ONE shuffle the pipeline
     pays up front: every downstream stage (tokenize, span detect, the
-    candidate self-join, frame assembly) is keyed by doc_id, so a single
-    up-front exchange co-locates the whole per-document dataflow and the
-    self-join needs no further exchange. It also fixes the small-file case
+    candidate-pair window, frame assembly) is keyed by doc_id, so a single
+    up-front exchange co-locates the whole per-document dataflow and no
+    later stage needs a further exchange. It also fixes the small-file case
     where a 1-partition scan would serialize the CPU-heavy explode. On an
     Iceberg corpus bucketed by url this becomes a no-op (storage-partitioned
     scan already satisfies the distribution).
@@ -63,12 +63,7 @@ def load_documents(
         df = df.withColumnRenamed("url", "doc_id")
     if "source" not in df.columns:
         df = df.withColumn("source", F.lit("unknown"))
-    df = df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.col("text"),
-        F.col("lang"),
-        F.col("source"),
-    )
+    df = df.selectExpr("CAST(doc_id AS STRING) AS doc_id", "text", "lang", "source")
     if columns is not None:
         keep = ["doc_id"] + [c for c in columns if c != "doc_id"]
         df = df.select(*keep)

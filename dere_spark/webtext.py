@@ -7,34 +7,30 @@ deterministic, fully relational instantiation of the DeRE predict lifecycle
 dere/models/_baseline/{span,slot}_classifier.py predict paths):
 
   documents --tokenize--> tokens --gazetteer ⋈--> spans
-            --whitelist self-⋈--> pairs --score+rank--> frames
+            --±k window + whitelist ⋈--> pairs --score+rank--> frames
             --entity link--> triples
 
 Every stage is pure DataFrame ops (broadcast joins, window functions) —
 zero Python UDFs — so the whole plan runs inside whole-stage codegen and
 scales linearly with executors; documents are the unit of parallelism end
-to end.
+to end. The corpus is scanned once and shuffled once (hash on doc_id in
+``load_documents``): the tokenizer windows, the pair neighbourhood window
+and the frame windows all reuse that distribution, and there is no
+shuffled join anywhere in the plan.
 
-Physical-strategy note (r2, measured): the shuffle-free Arrow tokenizer
-(`tokenize_arrow`) halves the plan's data exchanges (4 -> 2: documents
-are never repartitioned) and wins on single-JVM local[32] (~20% faster
-flagship), but LOSES in multi-executor mode (same-session A/B at
-local-cluster[1x8], 100x corpus: window 31-42 s vs arrow 36-59 s): the
-Python->JVM Arrow IPC of the full token stream costs more than the
-document shuffle it saves. Exchange COUNT is not the cost model —
-bytes x medium is. The windowed JVM tokenizer stays the base layer; the
-Arrow one remains available (equivalence-tested) for IO-bound corpora
-where token volume ~ document volume.
+The default tokenizer is Treebank segmentation (`tokenize_treebank_sql`) —
+the reference tokenizes Treebank-style (span_classifier.py:361). It builds
+ON the windowed JVM tokenizer (same single doc_id exchange) and sub-splits
+words with the nltk rule chain compiled to Catalyst regexp_replace
+expressions, so no token bytes ever cross the Python boundary; purely
+alphanumeric words (the vast majority) skip the regex chain via a
+one-rlike fast path.
 
-r3 update: the DEFAULT front door is now Treebank segmentation
-(`tokenize_treebank_sql`) — the reference tokenizes Treebank-style
-(span_classifier.py:361) and whitespace-by-default was only right for
-the synthetic corpus. The implementation keeps the measured-fastest
-physical shape: it builds ON the windowed JVM tokenizer (same single
-doc_id exchange) and sub-splits words with the nltk rule chain compiled
-to Catalyst regexp_replace expressions, so no token bytes ever cross the
-Python boundary; purely alphanumeric words (the vast majority) skip the
-regex chain entirely via a one-rlike fast path.
+Plan construction is Python-side work paid on every call: the operators
+build their constant expressions as SQL text, because every Column API
+call is one py4j round trip. A warm ``build_stages`` makes ~280 round
+trips, where the Column API build made ~4,100 (pinned in
+tests/test_plan_shape.py).
 """
 
 from __future__ import annotations
@@ -48,6 +44,7 @@ from dere_spark.operators.frames import assemble_frames, best_fillers, score_pai
 from dere_spark.operators.pairs import candidate_pairs, whitelist_df
 from dere_spark.operators.spans import detect_spans, gazetteer_df
 from dere_spark.operators.tokenize import tokenize
+from dere_spark.operators.treebank import tokenize_treebank_sql
 from dere_spark.operators.triples import entity_dictionary, frames_to_triples
 from dere_spark.plans.compiler import PlanSpec, compile_plan
 from dere_spark.sources.documents import load_documents
@@ -91,33 +88,18 @@ def build_stages(
     """Construct every stage of the pipeline lazily; nothing executes until
     an action runs. Returned dict keys are stage names -> DataFrames.
 
-    ``tokenizer``: "treebank" (DEFAULT since r3 — nltk-3.3-parity rule
-    chain compiled to JVM regexp_replace expressions, the reference's
-    front door for real punctuated web text: span_classifier.py:361;
-    identical output to whitespace on the space-separated synthetic
-    corpus, which is what keeps every kg_* oracle like-for-like),
-    "treebank_arrow" (same semantics, Arrow kernel — recorded-vector
-    ground truth), "whitespace" (plain JVM window tokenizer), or "arrow"
-    (whitespace semantics, shuffle-free kernel).
+    ``tokenizer``: "treebank" (the default — nltk-3.3-parity rule chain
+    compiled to JVM regexp_replace expressions, the reference's front door
+    for real punctuated web text: span_classifier.py:361; identical output
+    to whitespace on the space-separated synthetic corpus, which is what
+    keeps every kg_* oracle like-for-like) or "whitespace" (plain JVM
+    window tokenizer).
     """
     plan = webtext_plan()
+    documents = load_documents(spark, sf_dir)
     if tokenizer == "treebank":
-        from dere_spark.operators.treebank import tokenize_treebank_sql
-
-        documents = load_documents(spark, sf_dir)
         tokens = tokenize_treebank_sql(documents)
-    elif tokenizer == "treebank_arrow":
-        from dere_spark.operators.treebank import tokenize_treebank
-
-        documents = load_documents(spark, sf_dir, partition_by_doc=False)
-        tokens = tokenize_treebank(documents)
-    elif tokenizer == "arrow":
-        from dere_spark.operators.tokenize import tokenize_arrow
-
-        documents = load_documents(spark, sf_dir, partition_by_doc=False)
-        tokens = tokenize_arrow(documents)
     elif tokenizer == "whitespace":
-        documents = load_documents(spark, sf_dir)
         tokens = tokenize(documents)
     else:
         raise ValueError(f"unknown tokenizer: {tokenizer}")
@@ -149,9 +131,9 @@ def cached_stages(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
     """build_stages with the shared DAG prefix PERSISTED.
 
     A dozen gate/bench queries share the documents -> spans -> triples
-    prefix; rebuilding it per query re-pays the full scan + self-join
-    every time (~2 s fixed plan cost each at sf0.1, BENCH r1). Production
-    pattern at web scale: materialize the narrow span/triple stages once
+    prefix; rebuilding it per query re-pays the full scan + pair
+    expansion every time (~2 s fixed plan cost each at sf0.1, BENCH r1).
+    Production pattern at web scale: materialize the narrow span/triple stages once
     per batch (they are a small fraction of corpus bytes — spans carry no
     document text beyond the matched token) and let every downstream
     query start from the cache. Results are identical to build_stages;
@@ -170,17 +152,6 @@ def cached_stages(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
         stages["triples"] = stages["triples"].persist()
         _STAGE_CACHE[key] = stages
     return _STAGE_CACHE[key]
-
-
-def invalidate_cached_stages(spark: SparkSession, sf_dir: str) -> None:
-    """Unpersist and drop the live session's cached stages for ``sf_dir``
-    — required after rewriting the corpus under the same path, which the
-    memo key cannot see."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    stages = _STAGE_CACHE.pop(key, None)
-    if stages:
-        stages["spans"].unpersist()
-        stages["triples"].unpersist()
 
 
 def extract_triples(spark: SparkSession, sf_dir: str) -> DataFrame:

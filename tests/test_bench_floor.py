@@ -19,6 +19,13 @@ load can't flake it, high enough that any real plan regression (the
 smallest observed real regression, the Treebank tokenizer, cost 15-30%)
 still trips it.  Raise only with two independent quiet-session
 measurements; never lower it to paper over a regression.
+
+The session runs on the host's cores (``SPARK_GRAFT_CPUS``, else the
+process's CPU affinity) with bench.py's shuffle-partition rule,
+max(cpus, 16): the floor is checked on the configuration bench.py
+publishes, not on a fixed local[32] a smaller host cannot give (local[32]
+on 4 cores measured 8,542 triples/s where bench.py at local[4] measured
+27,012).
 """
 
 from __future__ import annotations
@@ -35,7 +42,7 @@ SF01 = "/root/testdata/sf0.1"
 TRIPLES_PER_SEC_FLOOR = 16_000
 
 
-@pytest.mark.slow  # own 32-core session + sf0.1 pipeline, ~1 min
+@pytest.mark.slow  # own session on the host's cores + sf0.1 pipeline, ~1 min
 def test_flagship_throughput_floor():
     if not os.path.isdir(SF01):
         pytest.skip("sf0.1 testdata not present")
@@ -45,7 +52,8 @@ def test_flagship_throughput_floor():
     from dere_spark.session import get_spark
     from dere_spark.webtext import build_stages
 
-    spark = get_spark("bench_floor", cpus=32, shuffle_partitions=32)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    spark = get_spark("bench_floor", cpus=cpus, shuffle_partitions=max(cpus, 16))
     try:
         build_stages(spark, SF01)["triples"].count()  # warm JVM/codegen
         n, wall = flagship_steady_state(spark, SF01, runs=2)

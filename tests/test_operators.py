@@ -396,42 +396,26 @@ def test_shortest_dep_paths_fixture(spark):
     assert rows[(2, 9)]["path_len"] == -1  # unreachable
 
 
-def test_tokenize_arrow_equals_window_tokenizer(spark, sf_dir):
-    """The Arrow tokenizer (pipeline default since r2) must produce the
-    exact token/offset rows of the windowed tokenizer."""
-    from dere_spark.operators.tokenize import tokenize, tokenize_arrow
-    from dere_spark.sources.documents import load_documents
-
-    docs = load_documents(spark, sf_dir, partition_by_doc=False)
-    a = sorted(map(tuple, tokenize_arrow(docs).collect()))
-    b = sorted(map(tuple, tokenize(docs).collect()))
-    assert a == b
-
-
-def test_tokenize_arrow_null_text_and_regex_sep_parity(spark):
-    """Contract-parity edges of the Arrow tokenizer: a NULL text row
-    emits no tokens (the JVM path's split(NULL) drops the row — the old
-    kernel crashed the task on np.concatenate), and a 1-char regex
-    separator splits as a REGEX like the JVM path (pandas would default
-    it to a literal)."""
-    from dere_spark.operators.tokenize import tokenize, tokenize_arrow
+def test_tokenize_null_text_and_regex_sep(spark):
+    """Tokenizer contract edges: a NULL text row emits no tokens
+    (split(NULL) drops the row), and ``sep`` splits as a Java REGEX, with
+    ``sep_len`` as the offset step of a width-1 character class."""
+    from dere_spark.operators.tokenize import tokenize
 
     docs = spark.createDataFrame(
         [("d1", "a b c"), ("d2", None), ("d3", "x")],
         "doc_id string, text string",
     )
-    a = sorted(map(tuple, tokenize_arrow(docs).collect()))
-    b = sorted(map(tuple, tokenize(docs).collect()))
-    assert a == b
-    assert {t[0] for t in a} == {"d1", "d3"}  # the NULL doc emits nothing
-    # regex separator (width-1 character class): both paths must split
-    # regex-style — pandas defaults a short pattern to a literal, which
-    # would leave "a,b;c" untokenized
+    rows = sorted(map(tuple, tokenize(docs).collect()))
+    assert rows == [
+        ("d1", 0, "a", 0, 1),
+        ("d1", 1, "b", 2, 3),
+        ("d1", 2, "c", 4, 5),
+        ("d3", 0, "x", 0, 1),
+    ]
     punct = spark.createDataFrame([("p1", "a,b;c")], "doc_id string, text string")
-    ar = sorted(map(tuple, tokenize_arrow(punct, sep="[;,]", sep_len=1).collect()))
-    jv = sorted(map(tuple, tokenize(punct, sep="[;,]", sep_len=1).collect()))
-    assert ar == jv
-    assert [t[2] for t in ar] == ["a", "b", "c"]
+    rows = sorted(map(tuple, tokenize(punct, sep="[;,]", sep_len=1).collect()))
+    assert rows == [("p1", 0, "a", 0, 1), ("p1", 1, "b", 2, 3), ("p1", 2, "c", 4, 5)]
 
 
 def test_strip_source_is_null_safe(spark):
