@@ -7,17 +7,21 @@ propagation over an edge list. Each round every node adopts the minimum
 component id in its neighborhood; rounds needed = graph diameter (alias
 groups and near-dup clusters are shallow, so typically 2-4).
 
-Scale notes: each round is one shuffle (groupBy node). `localCheckpoint`
-truncates lineage so plans don't grow exponentially across rounds. For
-power-law graphs the classic large-star/small-star optimization can be
-added, but alias/near-dup graphs are tiny-diameter, where plain hash-min
-is already optimal.
+Scale notes: the symmetric edge list is materialized once
+(`localCheckpoint`), so the plan that produced the edges (for near-dup
+clusters: scan, shingles, MinHash, LSH, Jaccard) runs once, not once per
+round. Each round is one Spark action — a join of the edges to the
+current labels, one shuffle (groupBy node) and a `localCheckpoint` that
+truncates lineage; the labels it changed are counted by an `Observation`
+on that same action, not by a second join and count. For power-law graphs
+use `connected_components_star`; alias/near-dup graphs are tiny-diameter,
+where plain hash-min is already optimal.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 
 def connected_components(
@@ -32,49 +36,57 @@ def connected_components(
     Deterministic: component ids are min() aggregates, independent of
     partitioning or row order.
     """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
+    # every round reads only the symmetric edge list: each edge row emits
+    # both directions (a union would plan `edges` twice) and the list is
+    # materialized once, so no round re-runs the plan behind `edges`
+    both = F.array(
+        F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+        F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
     )
-    labels = (
-        sym.select(F.col("a").alias("node"))
+    sym = (
+        edges.select(F.explode(both).alias("_e"))
+        .select("_e.a", "_e.b")
         .distinct()
-        .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    converged = False
+    # round 1 starts from the identity labelling: no label table to join.
+    # `_old` is each node's previous label, carried through the union and
+    # groupBy (max skips the neighbours' NULLs) so that the round's one job
+    # also counts the labels it changed
+    new_labels = (
+        sym.groupBy("a")
+        .agg(F.least(F.col("a"), F.min("b")).alias("component"))
+        .select(F.col("a").alias("node"), "component", F.col("a").alias("_old"))
+    )
     for _ in range(max_iterations):
-        # candidate labels: own label + neighbors' labels
-        nbr = (
-            sym.join(labels.withColumnRenamed("node", "b"), "b")
-            .select(F.col("a").alias("node"), "component")
+        changed = Observation()
+        labels = (
+            new_labels.observe(
+                changed,
+                F.sum((F.col("component") != F.col("_old")).cast("long")).alias("n"),
+            )
+            .select("node", "component")
+            .localCheckpoint(eager=True)
+        )
+        if not changed.get["n"]:
+            return labels
+        nbr = sym.join(labels.withColumnRenamed("node", "b"), "b").select(
+            F.col("a").alias("node"), "component"
         )
         new_labels = (
-            labels.unionByName(nbr)
+            labels.withColumn("_old", F.col("component"))
+            .unionByName(nbr, allowMissingColumns=True)
             .groupBy("node")
-            .agg(F.min("component").alias("component"))
-        ).localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
+            .agg(F.min("component").alias("component"), F.max("_old").alias("_old"))
         )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # exhausting the round budget mid-propagation would return labels
-        # that split one true component into several — fail loudly ("no
-        # silent caps"): the caller raises max_iterations, never guesses
-        raise ValueError(
-            f"connected_components did not converge within {max_iterations} "
-            f"iterations (graph diameter exceeds the round budget); raise "
-            f"max_iterations"
-        )
-    return labels
+    # exhausting the round budget mid-propagation would return labels
+    # that split one true component into several — fail loudly ("no
+    # silent caps"): the caller raises max_iterations, never guesses
+    raise ValueError(
+        f"connected_components did not converge within {max_iterations} "
+        f"iterations (graph diameter exceeds the round budget); raise "
+        f"max_iterations"
+    )
 
 
 def connected_components_star(

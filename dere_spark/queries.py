@@ -184,15 +184,16 @@ def q_kg_text_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_treebank_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Treebank-parity tokenizer (F5, nltk 3.3 semantics re-implemented in
-    an Arrow kernel): every token must address a verbatim substring of the
-    document — violations must be EMPTY on the punctuation-heavy corpus.
-    Rule-level parity vs recorded nltk vectors lives in
-    tests/test_treebank.py; this gate proves the offset contract at sf."""
-    from dere_spark.operators.treebank import tokenize_treebank
+    """Treebank-parity tokenizer (F5, nltk 3.3 semantics as the JVM-side
+    rule chain the flagship ships): every token must address a verbatim
+    substring of the document — violations must be EMPTY on the
+    punctuation-heavy corpus. Rule-level parity vs recorded nltk vectors
+    lives in tests/test_treebank.py; this gate proves the offset contract
+    at sf."""
+    from dere_spark.operators.treebank import tokenize_treebank_sql
 
     docs = load_documents(spark, sf_dir)
-    toks = tokenize_treebank(docs)
+    toks = tokenize_treebank_sql(docs)
     return fidelity_violations(docs, toks).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("token_idx").cast("int").alias("token_idx"),
@@ -926,7 +927,8 @@ def _register_dedup() -> None:
         + "SELECT doc_a, doc_b, round(jaccard, 6) AS jaccard FROM verified",
     )
     def q_jaccard_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Exact Jaccard verification of LSH candidates (shingle join)."""
+        """Exact Jaccard verification of LSH candidates (per-document
+        shingle sets, array intersection)."""
         sh = _shingles(spark, sf_dir)
         pairs = candidate_pairs_lsh(lsh_bands_minagg(explode_shingles(sh), 16, 4))
         return jaccard_verify(pairs, explode_shingles(sh)).withColumn(
