@@ -6,7 +6,8 @@ outputs bit-stable across engines and parallelism levels.
 
 Operators:
   * exact dedup — hash-groupBy on content (see queries.dedup_exact);
-  * n-gram shingling — token 3-grams per doc;
+  * n-gram shingling — token 3-grams per doc, one distinct-shingle array
+    per document (`shingle_arrays`);
   * MinHash signatures — k permutations simulated as md5(seed || shingle),
     min per (doc, seed) (standard MinHash; Broder '97);
   * LSH banding — k hashes split into b bands of r rows; band signature =
@@ -20,11 +21,15 @@ Operators:
     deRE_evaluation.py:92-99);
   * SimHash — 64-bit sign-of-weighted-bit-sums fingerprint (Charikar '02).
 
+`near_dup_stages` wires shingle rows -> bands -> candidates -> verified
+pairs once; every near-duplicate query (documents and entity surface
+forms alike) selects its stage from that dict.
+
 Scale notes: everything shuffles on (doc_id) or (shingle/bucket) keys only;
 the pairwise phase is restricted to LSH candidates so cost is output-bound,
 not O(n²). Shingle-frequency skew (boilerplate) is the known hot spot —
-`max_bucket` caps degenerate buckets explicitly (no silent cap: capped
-buckets are counted in the returned metrics when requested).
+`max_bucket` caps degenerate buckets explicitly (no silent cap:
+`capped_lsh_buckets` reports what the cap dropped).
 """
 
 from __future__ import annotations
@@ -33,6 +38,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from dere_spark.operators.graph import connected_components
+
+#: MinHash family size and LSH band count of every near-duplicate task:
+#: 16 hashes in 4 bands of 4 rows.
+NUM_HASHES = 16
+BANDS = 4
 
 
 def shingles(tokens: DataFrame, n: int = 3) -> DataFrame:
@@ -137,160 +147,38 @@ def minhash_signatures(shingle_df: DataFrame, num_hashes: int = 16) -> DataFrame
     return hashed.groupBy("doc_id", "seed").agg(F.min("h").alias("minhash"))
 
 
-def lsh_bands(signatures: DataFrame, bands: int = 4) -> DataFrame:
-    """(doc_id, seed, minhash) -> (doc_id, band, band_sig).
-
-    band = seed % bands; band signature = md5 of the band's row hashes
-    concatenated in seed order (sort_array on (seed, minhash) structs keeps
-    the order deterministic under any partitioning).
-    """
-    return (
-        signatures.withColumn("band", F.col("seed") % bands)
-        .groupBy("doc_id", "band")
-        .agg(
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.sort_array(F.collect_list(F.struct("seed", "minhash"))),
-                        lambda s: s["minhash"],
-                    ),
-                )
-            ).alias("band_sig")
-        )
-    )
-
-
-def lsh_bands_fused(
-    shingle_df: DataFrame, num_hashes: int = 16, bands: int = 4
-) -> DataFrame:
-    """(doc_id, shingle) -> (doc_id, band, band_sig) in ONE shuffle.
-
-    Value-identical to ``lsh_bands(minhash_signatures(df, num_hashes),
-    bands)`` (oracle-checked by the same gates), but the per-seed min and
-    the per-band signature are computed as array expressions inside a
-    single groupBy(doc_id) instead of two further shuffled aggregations:
-    collect the doc's shingles once, then for each band take the seeds
-    ``band, band+bands, ...`` (ascending == seed order), min-md5 per seed
-    via array_min, and md5 the comma-joined minhashes. Cuts the LSH chain
-    from 3 exchanges to 1 — at 100 TB the shuffle volume saved is 2x the
-    signature table; r4 measured ~1.4x on the warm entity-canonicalization
-    and document-LSH bench queries (BASELINE.md r4).
-
-    Degenerate config ``bands > num_hashes``: the staged chain emits rows
-    only for bands that own at least one seed (seed % bands covers just
-    the first num_hashes bands), so the fused band loop is capped at
-    ``min(bands, num_hashes)`` — an uncapped loop would hand F.sequence a
-    start > stop and fail at runtime with an opaque 'Illegal sequence
-    boundaries' error (ADVICE r4)."""
-    per_doc = shingle_df.groupBy("doc_id").agg(
-        F.collect_list("shingle").alias("_sh")
-    )
-    return _bands_from_array(per_doc, "_sh", num_hashes, bands)
-
-
-def _minhash_expr(sh_col, seed):
-    """min over the shingle array of md5(seed || '|' || shingle) — the md5
-    hash-family member every dedup gate's oracle pins."""
-    return F.array_min(
-        F.transform(sh_col, lambda s: F.md5(F.concat_ws("|", seed, s)))
-    )
-
-
-def _bands_from_array(
-    df: DataFrame, sh_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """(doc_id, <sh_col>: array<string>) -> (doc_id, band, band_sig)."""
-    band_sig = lambda b: F.md5(  # noqa: E731
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.sequence(F.lit(b), F.lit(num_hashes - 1), F.lit(bands)),
-                lambda seed: _minhash_expr(F.col(sh_col), seed),
-            ),
-        )
-    )
-    banded = df.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), band_sig(b).alias("band_sig")
-                    )
-                    for b in range(min(bands, num_hashes))
-                ]
-            )
-        ).alias("_b"),
-    )
-    return banded.select(
-        "doc_id", F.col("_b.band").alias("band"), F.col("_b.band_sig").alias("band_sig")
-    )
-
-
-def lsh_bands_rowwise(
-    shingle_arr: DataFrame, num_hashes: int = 16, bands: int = 4
-) -> DataFrame:
-    """(doc_id, shingles: array) -> (doc_id, band, band_sig) with ZERO
-    exchanges: the per-row twin of ``lsh_bands_fused`` for inputs that
-    already carry one shingle array per document (`shingle_arrays`).
-    Same band/minhash arithmetic, so the same oracles pin it; the
-    groupBy(doc_id) collect the fused variant pays is simply not needed.
-    """
-    return _bands_from_array(shingle_arr, "shingles", num_hashes, bands)
-
-
-def minhash_from_arrays(
-    shingle_arr: DataFrame, num_hashes: int = 16
-) -> DataFrame:
-    """(doc_id, shingles: array) -> (doc_id, seed, minhash), shuffle-free.
-
-    Value-identical to ``minhash_signatures`` (same md5 family, same min
-    per (doc, seed) — posexplode position IS the seed), but the min runs
-    as array_min inside the row instead of a shuffled min-aggregation
-    over num_hashes x shingles exploded rows.
-
-    Trade-off (r7, measured at sf1.0): this form wins when every
-    signature VALUE is consumed (1.67 vs 2.36 s noop — no 16x row
-    explode, no aggregation hash table), while
-    ``minhash_signatures(explode_shingles(arr))`` wins when a consumer
-    lets the optimizer prune the min(md5) aggregate (codegen md5 and a
-    prunable aggregate tail; 0.66 vs 1.75 s under a bare count)."""
-    # one expression per seed (NOT a lambda over sequence(0, k-1)): the
-    # k explicit references to `shingles` keep CollapseProject from
-    # inlining the shingle expression into this projection — a
-    # single-reference nested-lambda form re-evaluated the whole shingle
-    # build once per seed per row (measured 40x at sf1.0, r7)
-    mh = F.array(
-        *[
-            _minhash_expr(F.col("shingles"), F.lit(seed))
-            for seed in range(num_hashes)
-        ]
-    )
-    return shingle_arr.select(
-        "doc_id", F.posexplode(mh).alias("seed", "minhash")
-    )
-
-
 def lsh_bands_minagg(
-    shingle_rows: DataFrame, num_hashes: int = 16, bands: int = 4
+    shingle_rows: DataFrame, num_hashes: int = NUM_HASHES, bands: int = BANDS
 ) -> DataFrame:
-    """(doc_id, shingle) rows -> (doc_id, band, band_sig) via codegen md5
-    COLUMNS + a k-accumulator min aggregation (r7).
+    """(doc_id, shingle) rows -> (doc_id, band, band_sig), the one LSH
+    banding shape.
 
-    Same band/minhash arithmetic as ``lsh_bands_fused`` /
-    ``lsh_bands_rowwise`` (oracle-pinned), different physical strategy:
-    each shingle row computes its k seed-md5s as ordinary projected
-    columns (whole-stage codegen — no interpreted HOF lambda, no k-times
-    seed explode), groupBy(doc_id) folds k ``min`` accumulators (no
-    exchange when the input is doc_id-partitioned, the pipeline norm),
-    and the per-band signature is a plain projection over the k min
-    columns. Interleaved fresh-plan A/B at sf1.0 (candidate-pair query,
-    min-of-5): 2.00 s vs 2.38 s for the per-row-array form — codegen
-    md5 beats interpreted-HOF md5 once shingle volume dominates. The
-    per-row form (`lsh_bands_rowwise`) stays the right choice for
-    small, stage-count-bound inputs (the entity-canonicalization path):
-    it adds zero stages on top of its input.
+    Seed s hashes a shingle to md5(s || '|' || shingle); a document's
+    minhash for s is the min over its shingles. Band b owns the seeds
+    b, b+bands, ... and its signature is md5 of their minhashes joined by
+    ',' in seed order — the arithmetic every dedup and entity oracle pins.
+    Only bands that own a seed emit a row: ``bands > num_hashes`` yields
+    ``min(bands, num_hashes)`` bands instead of an empty seed range.
+
+    Physically each shingle row computes its k seed md5s as projected
+    columns (whole-stage codegen, no interpreted lambda, no k-fold row
+    explode), groupBy(doc_id) folds k ``min`` accumulators (no exchange on
+    doc_id-partitioned input, the pipeline norm) and the band signatures
+    are a projection over the k minima.
+
+    Shapes measured against it and deleted:
+      * per-row arrays (array_min over a transform of each document's
+        shingle array; zero exchanges): 2.38 s vs 2.00 s on the
+        candidate-pair query at sf1.0 (32 cores, fresh plans, min of 5) —
+        codegen md5 beats interpreted md5 once shingle volume dominates.
+        On the small entity-canonicalization path it was a little faster
+        (sf0.1, 4 vCPU, noop sink, fresh plans, min of 5 in each of two
+        interleaved rounds, identical output): entity_canon_candidates
+        0.97 / 0.77 s against 1.01 / 0.86 s here, entity_canon_clusters
+        2.89 / 2.46 s against 3.04 / 2.83 s — the price of one shape;
+      * the same arrays after a groupBy(doc_id) collect_list (1 exchange);
+      * minhash_signatures then a groupBy(doc_id, band) over
+        (seed, minhash) structs (3 exchanges).
     """
     hashed = shingle_rows.select(
         "doc_id",
@@ -418,6 +306,30 @@ def jaccard_verify(pairs: DataFrame, shingle_df: DataFrame) -> DataFrame:
             (F.col("_n") / (F.size("_sa") + F.size("_sb") - F.col("_n"))).alias("jaccard"),
         )
     )
+
+
+def near_dup_stages(shingle_arr: DataFrame) -> dict[str, DataFrame]:
+    """(doc_id, shingles: array) -> the near-duplicate chain as named stages:
+
+      * ``rows`` — (doc_id, shingle), built once and shared by the banding
+        and the verification;
+      * ``bands`` — (doc_id, band, band_sig), NUM_HASHES md5 MinHashes in
+        BANDS bands;
+      * ``candidates`` — (doc_a, doc_b) pairs sharing a band bucket;
+      * ``verified`` — (doc_a, doc_b, jaccard) over the candidates.
+
+    Clusters are not a stage: `connected_components` runs Spark actions,
+    so building them belongs to the caller that wants them
+    (``near_dup_clusters(stages["verified"], threshold)``)."""
+    rows = explode_shingles(shingle_arr)
+    bands = lsh_bands_minagg(rows, NUM_HASHES, BANDS)
+    candidates = candidate_pairs_lsh(bands)
+    return {
+        "rows": rows,
+        "bands": bands,
+        "candidates": candidates,
+        "verified": jaccard_verify(candidates, rows),
+    }
 
 
 def near_dup_clusters(verified: DataFrame, threshold: float = 0.8) -> DataFrame:

@@ -21,7 +21,7 @@ from __future__ import annotations
 from typing import Dict, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 #: marker tokens per language for the synthetic corpus heuristic — stands in
 #: for character-n-gram profiles of a real lang-id model.
@@ -32,15 +32,6 @@ DEFAULT_MARKERS: Dict[str, Sequence[str]] = {
     "fr": ("le", "la", "les"),
     "zh": ("zh",),
 }
-
-
-def language_markers_df(spark: SparkSession, markers=None) -> DataFrame:
-    rows = [
-        (lang, tok)
-        for lang, toks in sorted((markers or DEFAULT_MARKERS).items())
-        for tok in sorted(toks)
-    ]
-    return spark.createDataFrame(rows, "cand_lang string, marker string")
 
 
 def language_id(tokens: DataFrame, markers: DataFrame) -> DataFrame:

@@ -871,12 +871,11 @@ verified AS (
 
 def _register_dedup() -> None:
     from dere_spark.operators.dedup import (
-        candidate_pairs_lsh,
         explode_shingles,
-        jaccard_verify,
-        lsh_bands_minagg,
+        filter_near_dups,
         minhash_signatures,
         near_dup_clusters,
+        near_dup_stages,
         shingle_arrays,
         simhash,
     )
@@ -917,9 +916,7 @@ def _register_dedup() -> None:
     )
     def q_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         """LSH banding (4 bands x 4 rows): candidate near-dup pairs."""
-        return candidate_pairs_lsh(
-            lsh_bands_minagg(explode_shingles(_shingles(spark, sf_dir)), 16, 4)
-        )
+        return near_dup_stages(_shingles(spark, sf_dir))["candidates"]
 
     @register(
         "dedup_jaccard_verified",
@@ -929,14 +926,13 @@ def _register_dedup() -> None:
     def q_jaccard_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Exact Jaccard verification of LSH candidates (per-document
         shingle sets, array intersection)."""
-        sh = _shingles(spark, sf_dir)
-        pairs = candidate_pairs_lsh(lsh_bands_minagg(explode_shingles(sh), 16, 4))
-        return jaccard_verify(pairs, explode_shingles(sh)).withColumn(
-            "jaccard", F.round("jaccard", 6)
-        )
+        verified = near_dup_stages(_shingles(spark, sf_dir))["verified"]
+        return verified.withColumn("jaccard", F.round("jaccard", 6))
 
-    @register(
-        "dedup_clusters",
+    # dedup_clusters_star gated the large-star/small-star CC variant, now
+    # deleted (its numbers are in operators/graph.py). Its oracle is this
+    # same text, so both gates run the one hash-min builder.
+    CLUSTERS_ORACLE = (
         SHINGLE_CTES.replace("WITH raw_tokens", "WITH RECURSIVE raw_tokens", 1)
         + """,
         edges AS (SELECT doc_a AS a, doc_b AS b FROM verified WHERE jaccard >= 0.8),
@@ -949,15 +945,17 @@ def _register_dedup() -> None:
             ON e.y = reach.node
         )
         SELECT node, min(r) AS component FROM reach GROUP BY node
-        """,
+        """
     )
+
+    @register("dedup_clusters_star", CLUSTERS_ORACLE)
+    @register("dedup_clusters", CLUSTERS_ORACLE)
     def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Near-dup clusters: connected components (hash-min label
         propagation) over verified pairs — the scaled-up Equiv closure
         (reference: deRE_evaluation.py:92-99)."""
-        sh = _shingles(spark, sf_dir)
-        pairs = candidate_pairs_lsh(lsh_bands_minagg(explode_shingles(sh), 16, 4))
-        return near_dup_clusters(jaccard_verify(pairs, explode_shingles(sh)), threshold=0.8)
+        verified = near_dup_stages(_shingles(spark, sf_dir))["verified"]
+        return near_dup_clusters(verified, threshold=0.8)
 
     @register(
         "dedup_filtered_corpus",
@@ -984,47 +982,12 @@ def _register_dedup() -> None:
     def q_dedup_filtered_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         """The dedup END-USE a training-data pipeline actually runs:
         corpus minus near-dup cluster non-representatives (keep the
-        component-min doc, pass untouched docs through). Broadcast
-        anti-join of the tiny loser list against the corpus scan."""
-        from dere_spark.operators.dedup import filter_near_dups
-
-        sh = _shingles(spark, sf_dir)
-        pairs = candidate_pairs_lsh(lsh_bands_minagg(explode_shingles(sh), 16, 4))
-        clusters = near_dup_clusters(jaccard_verify(pairs, explode_shingles(sh)), threshold=0.8)
+        component-min doc, pass untouched docs through). Anti-join of the
+        loser list against the corpus scan."""
+        verified = near_dup_stages(_shingles(spark, sf_dir))["verified"]
+        clusters = near_dup_clusters(verified, threshold=0.8)
         docs = load_documents(spark, sf_dir, columns=[]).select("doc_id")
         return filter_near_dups(docs, clusters)
-
-    @register(
-        "dedup_clusters_star",
-        SHINGLE_CTES.replace("WITH raw_tokens", "WITH RECURSIVE raw_tokens", 1)
-        + """,
-        edges AS (SELECT doc_a AS a, doc_b AS b FROM verified WHERE jaccard >= 0.8),
-        nodes AS (SELECT a AS node FROM edges UNION SELECT b FROM edges),
-        reach AS (
-          SELECT node, node AS r FROM nodes
-          UNION
-          SELECT e.x, reach.r FROM reach
-          JOIN (SELECT a AS x, b AS y FROM edges UNION ALL SELECT b, a FROM edges) e
-            ON e.y = reach.node
-        )
-        SELECT node, min(r) AS component FROM reach GROUP BY node
-        """,
-    )
-    def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Same clusters via alternating large-star/small-star contraction
-        (Kiveris et al., SoCC'14) — the power-law-safe CC variant: O(log^2)
-        rounds on a monotonically shrinking edge list instead of
-        O(diameter) rounds over all edges. Must match the hash-min answer
-        (and this shared oracle) exactly."""
-        from dere_spark.operators.graph import connected_components_star
-
-        sh = _shingles(spark, sf_dir)
-        pairs = candidate_pairs_lsh(lsh_bands_minagg(explode_shingles(sh), 16, 4))
-        verified = jaccard_verify(pairs, explode_shingles(sh))
-        edges = verified.where(F.col("jaccard") >= 0.8).select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        return connected_components_star(edges)
 
     @register(
         "dedup_simhash",
@@ -1580,13 +1543,7 @@ _register_round1_extras()
 
 
 def _register_entity_canonicalization() -> None:
-    from dere_spark.operators.dedup import (
-        candidate_pairs_lsh,
-        explode_shingles,
-        jaccard_verify,
-        lsh_bands_rowwise,
-        near_dup_clusters,
-    )
+    from dere_spark.operators.dedup import near_dup_clusters, near_dup_stages
 
     # char-3-gram shingles over entity surface forms drawn from the graph
     ENT_CTES = (
@@ -1688,8 +1645,7 @@ ent_verified AS (
         """Entity canonicalization blocking (north star): char-3-gram
         MinHash-LSH candidate pairs over graph entity surface forms —
         the scaled Equiv closure's blocking stage."""
-        sh = _entity_shingles(spark, sf_dir)
-        pairs = candidate_pairs_lsh(lsh_bands_rowwise(sh, 16, 4))
+        pairs = near_dup_stages(_entity_shingles(spark, sf_dir))["candidates"]
         return pairs.select(
             F.col("doc_a").alias("ent_a"), F.col("doc_b").alias("ent_b")
         )
@@ -1713,11 +1669,8 @@ ent_verified AS (
     def q_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Entity canonicalization: verified near-dup surface forms
         collapsed by connected components -> (entity, canonical id)."""
-        sh = _entity_shingles(spark, sf_dir)
-        pairs = candidate_pairs_lsh(lsh_bands_rowwise(sh, 16, 4))
-        clusters = near_dup_clusters(
-            jaccard_verify(pairs, explode_shingles(sh)), threshold=0.5
-        )
+        verified = near_dup_stages(_entity_shingles(spark, sf_dir))["verified"]
+        clusters = near_dup_clusters(verified, threshold=0.5)
         return clusters.select(
             F.col("node").alias("entity"), F.col("component").alias("canonical")
         )

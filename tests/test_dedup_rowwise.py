@@ -6,19 +6,16 @@ bucket aggregation; no expensive expression pushed into the scan filter).
 
 from __future__ import annotations
 
+import hashlib
 import re
+from collections import defaultdict
 
-import pyspark.sql.functions as F
 import pytest
 
 from dere_spark.operators.dedup import (
     candidate_pairs_lsh,
     explode_shingles,
-    lsh_bands_fused,
     lsh_bands_minagg,
-    lsh_bands_rowwise,
-    minhash_from_arrays,
-    minhash_signatures,
     shingle_arrays,
     shingles,
     simhash,
@@ -53,33 +50,33 @@ def test_shingle_arrays_match_row_formulation(spark, docs):
     assert row_form  # non-vacuous
 
 
-def test_minhash_from_arrays_matches_staged(spark, docs):
-    sh_rows = shingles(tokenize(docs), n=3)
-    staged = _rows(minhash_signatures(sh_rows, num_hashes=16))
-    rowwise = _rows(minhash_from_arrays(shingle_arrays(docs, n=3), num_hashes=16))
-    assert rowwise == staged
-    assert staged
+def _md5(s):
+    return hashlib.md5(s.encode("utf-8")).hexdigest()
 
 
-def test_lsh_bands_rowwise_matches_fused(spark, docs):
-    sh_rows = shingles(tokenize(docs), n=3)
-    fused = _rows(lsh_bands_fused(sh_rows, num_hashes=16, bands=4))
-    rowwise = _rows(lsh_bands_rowwise(shingle_arrays(docs, n=3), 16, 4))
-    assert rowwise == fused
-    assert fused
+def bands_reference(rows, num_hashes, bands):
+    """Brute-force LSH banding over (doc_id, shingle) rows: minhash of seed
+    s = min md5('s|shingle') over the document's shingles; band b =
+    md5 of the minhashes of seeds b, b+bands, ... joined by ','. Bands
+    that own no seed emit nothing."""
+    by_doc = defaultdict(set)
+    for doc_id, shingle in rows:
+        by_doc[doc_id].add(shingle)
+    out = []
+    for doc_id, shs in by_doc.items():
+        mins = [min(_md5(f"{seed}|{s}") for s in shs) for seed in range(num_hashes)]
+        for b in range(min(bands, num_hashes)):
+            out.append((doc_id, b, _md5(",".join(mins[b::bands]))))
+    return sorted(out)
 
 
 def test_lsh_bands_minagg_matches_fused(spark, docs):
-    """The codegen min-agg band path must equal the fused/rowwise
-    formulations bit-for-bit (same md5 family, same seed-order band
-    signature)."""
-    sh_rows = shingles(tokenize(docs), n=3)
-    fused = _rows(lsh_bands_fused(sh_rows, num_hashes=16, bands=4))
-    minagg = _rows(
-        lsh_bands_minagg(explode_shingles(shingle_arrays(docs, n=3)), 16, 4)
-    )
-    assert minagg == fused
-    assert fused
+    """The codegen min-agg band path must equal a brute-force md5 MinHash
+    banding bit-for-bit (same md5 family, seed-order band signature)."""
+    rows = explode_shingles(shingle_arrays(docs, n=3))
+    want = bands_reference(_rows(rows), 16, 4)
+    assert _rows(lsh_bands_minagg(rows, 16, 4)) == want
+    assert want
 
 
 def test_lsh_bands_minagg_no_exchange_on_partitioned_input(spark, docs):
@@ -151,19 +148,14 @@ def test_simhash_identical_across_shingle_fronts(spark, docs):
 def test_rowwise_chain_plan_shapes(spark, docs):
     """The physical contract the rewrite bought (r7):
 
-    * minhash/bands over shingle arrays add ZERO data exchanges on top of
-      their input;
+    * shingle arrays and their row form add ZERO data exchanges on top
+      of their input;
     * no plan evaluates the shingle expression inside a scan-side filter
       (the InferFiltersFromGenerate / filter-pushdown trap that ran
       split(text) per lambda element single-threaded, measured 17-40x).
     """
     sa = shingle_arrays(docs, n=3)
-    for df in (
-        sa,
-        minhash_from_arrays(sa, 16),
-        lsh_bands_rowwise(sa, 16, 4),
-        explode_shingles(sa),
-    ):
+    for df in (sa, explode_shingles(sa)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert not re.findall(r"(?<!Broadcast)Exchange hashpartitioning", plan), plan[:1500]
         for filt in re.findall(r"Filter \(*(.*)", plan):

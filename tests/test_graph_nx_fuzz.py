@@ -1,9 +1,8 @@
-"""Randomized parity of both connected-component variants (J9: hash-min
-label propagation and the Kiveris-style large-star/small-star variant)
-against networkx on seeded random graphs: the PARTITION must match
+"""Randomized parity of hash-min connected components (J9) against
+networkx on seeded random graphs: the PARTITION must match
 nx.connected_components exactly, and every component label must be the
 string-min node id of its component (the documented determinism
-contract), regardless of which algorithm produced it."""
+contract)."""
 
 from __future__ import annotations
 
@@ -23,13 +22,9 @@ def _random_edges(seed: int, n_nodes: int, n_edges: int):
     return sorted(edges)
 
 
-@pytest.mark.parametrize("variant", ["hashmin", "star"])
 @pytest.mark.parametrize("seed", [13, 57])
-def test_connected_components_match_networkx(spark, variant, seed):
-    from dere_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+def test_connected_components_match_networkx(spark, seed):
+    from dere_spark.operators.graph import connected_components
 
     rng = random.Random(seed + 1)
     n_nodes = rng.randrange(20, 60)
@@ -44,10 +39,9 @@ def test_connected_components_match_networkx(spark, variant, seed):
             want[node] = label
 
     df = spark.createDataFrame(edges, "src string, dst string")
-    fn = connected_components if variant == "hashmin" else connected_components_star
-    got = {r["node"]: r["component"] for r in fn(df).collect()}
+    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
     assert got == want, (
-        f"{variant}/seed{seed}: component mismatch "
+        f"seed{seed}: component mismatch "
         f"(only-ours {set(got) - set(want)}, diffs "
         f"{ {k: (got.get(k), want.get(k)) for k in want if got.get(k) != want[k]} })"
     )

@@ -1,4 +1,5 @@
-"""Source hygiene gates: patterns the engine bans in any Arrow kernel.
+"""Source hygiene gates: patterns the engine bans in any Arrow kernel,
+and operators nothing calls.
 
 Cheap greps over the package source keep scale anti-patterns from
 creeping back in (VERDICT r2 "What's wrong" #3: per-row pandas
@@ -7,9 +8,11 @@ iteration inside kernels).
 
 from __future__ import annotations
 
+import ast
 import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "dere_spark"
+PERFBENCH = PKG.parent / "perfbench"
 
 
 def _grep(pattern: str) -> list[str]:
@@ -30,3 +33,50 @@ def test_no_iterrows_anywhere():
 def test_no_rdd_map_in_package():
     # the engine is DataFrame-first: per-row RDD lambdas bypass codegen
     assert _grep(".rdd.map(") == []
+
+
+def _references(path: pathlib.Path) -> set[tuple[str, str | None]]:
+    """(name, enclosing top-level function) for every name load and
+    attribute access in ``path`` — imports alone do not count."""
+    refs = set()
+    for top in ast.parse(path.read_text()).body:
+        owner = top.name if isinstance(top, ast.FunctionDef) else None
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                refs.add((node.id, owner))
+            elif isinstance(node, ast.Attribute):
+                refs.add((node.attr, owner))
+    return refs
+
+
+def test_dedup_graph_operators_have_callers():
+    """Each operator ships one physical shape: a public function in
+    operators/dedup.py or operators/graph.py that nothing in the engine
+    (outside its own definition) or in perfbench calls is a variant that
+    lost its A/B and belongs in a docstring, not in the module."""
+    # the window formulation is the parity reference tests pin
+    # shingle_arrays against
+    exempt = {"shingles"}
+    public = {
+        (node.name, mod)
+        for mod in ("dedup.py", "graph.py")
+        for node in ast.parse((PKG / "operators" / mod).read_text()).body
+        if isinstance(node, ast.FunctionDef) and not node.name.startswith("_")
+    }
+    refs = {
+        path: _references(path)
+        for path in sorted(PKG.rglob("*.py")) + sorted(PERFBENCH.rglob("*.py"))
+    }
+
+    def called(name: str, mod: str) -> bool:
+        home = PKG / "operators" / mod
+        return any(
+            ref == name and not (path == home and owner == name)
+            for path, pairs in refs.items()
+            for ref, owner in pairs
+        )
+
+    uncalled = sorted(
+        f"{mod}:{name}" for name, mod in public if name not in exempt and not called(name, mod)
+    )
+    assert uncalled == [], f"public operators with no caller: {uncalled}"

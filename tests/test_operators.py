@@ -431,13 +431,31 @@ def test_strip_source_is_null_safe(spark):
     assert kept == {"d2", "d3"}
 
 
+def _union_find_labels(edges):
+    """Reference CC labels: union-find over the edge list, each node
+    labelled with the min node id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 def test_star_cc_matches_hashmin(spark):
-    """large-star/small-star must produce exactly the labels of hash-min
-    propagation on chains, stars, cliques and singleton-ish graphs."""
-    from dere_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    """Hash-min propagation must produce exactly the union-find labels on
+    a long chain, a star whose hub is not the minimum, a triangle with a
+    pendant and a two-node component. (Named for the large-star/small-star
+    variant it once compared against; that variant is deleted.)"""
+    from dere_spark.operators.graph import connected_components
 
     edges = []
     # long chain c00..c19 (diameter stress)
@@ -451,19 +469,11 @@ def test_star_cc_matches_hashmin(spark):
     # two-node component
     edges += [("z9", "z8")]
     df = spark.createDataFrame(edges, "src string, dst string")
-    want = {
-        (r["node"], r["component"])
-        for r in connected_components(df).collect()
-    }
-    got = {
-        (r["node"], r["component"])
-        for r in connected_components_star(df).collect()
-    }
-    assert got == want
+    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    assert got == _union_find_labels(edges)
     # sanity: chain collapses to its minimum
-    comp = dict(got)
-    assert comp["c19"] == "c00"
-    assert comp["s_hub"] == min(["s_hub"] + [f"s_leaf{i:02d}" for i in range(12)])
+    assert got["c19"] == "c00"
+    assert got["s_hub"] == min(["s_hub"] + [f"s_leaf{i:02d}" for i in range(12)])
 
 
 def test_count_vectorizer_sklearn_parity(spark):
@@ -566,28 +576,20 @@ def test_resize_and_frame_sample_plumbing(spark):
 
 
 def test_fused_lsh_matches_staged_when_bands_exceed_hashes(spark):
-    """ADVICE r4: bands > num_hashes used to crash lsh_bands_fused with an
-    opaque 'Illegal sequence boundaries' while the staged chain handled it
-    (bands owning no seed just emit no rows). The fused band loop is now
-    capped at min(bands, num_hashes); both paths must agree exactly."""
-    from dere_spark.operators.dedup import (
-        lsh_bands,
-        lsh_bands_fused,
-        minhash_signatures,
-    )
+    """ADVICE r4: bands > num_hashes once crashed a banding shape with an
+    opaque 'Illegal sequence boundaries'. The band loop is capped at
+    min(bands, num_hashes) — bands owning no seed emit no rows — and the
+    output must equal a brute-force md5 banding for every config."""
+    from dere_spark.operators.dedup import lsh_bands_minagg
+    from tests.test_dedup_rowwise import bands_reference
 
-    sh = spark.createDataFrame(
-        [(f"d{i}", f"sh{j}") for i in range(4) for j in range(6)],
-        "doc_id string, shingle string",
-    )
+    rows = [(f"d{i}", f"sh{j}") for i in range(4) for j in range(6)]
+    sh = spark.createDataFrame(rows, "doc_id string, shingle string")
     for num_hashes, bands in [(2, 4), (1, 3), (16, 4), (4, 4)]:
-        fused = lsh_bands_fused(sh, num_hashes, bands)
-        staged = lsh_bands(minhash_signatures(sh, num_hashes), bands)
-        assert fused.exceptAll(staged).count() == 0
-        assert staged.exceptAll(fused).count() == 0
+        got = sorted(tuple(r) for r in lsh_bands_minagg(sh, num_hashes, bands).collect())
+        assert got == bands_reference(rows, num_hashes, bands)
         # only bands that own >= 1 seed appear
-        n_bands = fused.select("band").distinct().count()
-        assert n_bands == min(bands, num_hashes)
+        assert len({band for _, band, _ in got}) == min(bands, num_hashes)
 
 
 def test_capped_lsh_buckets_audit(spark):
@@ -645,24 +647,16 @@ def test_cc_nonconvergence_raises_loudly(spark):
 
 
 def test_star_cc_numeric_ids_match_hashmin(spark):
-    """connected_components_star must agree with connected_components on
-    NUMERIC ids too: a string cast would pick lexicographic minima
-    ('10' < '2') and change the output type."""
-    from dere_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    """Hash-min on NUMERIC ids picks numeric minima and keeps the native
+    type: a string cast would pick lexicographic minima ('10' < '2')."""
+    from dere_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(2, 10), (10, 30), (5, 7)], "src int, dst int"
     )
     hm = {r["node"]: r["component"] for r in connected_components(edges).collect()}
-    st = {
-        r["node"]: r["component"]
-        for r in connected_components_star(edges).collect()
-    }
-    assert hm == st == {2: 2, 10: 2, 30: 2, 5: 5, 7: 5}
-    assert all(isinstance(k, int) for k in st)  # native type preserved
+    assert hm == {2: 2, 10: 2, 30: 2, 5: 5, 7: 5}
+    assert all(isinstance(k, int) and isinstance(v, int) for k, v in hm.items())
 
 
 def test_span_paths_empty_token_sets_get_sentinel(spark):

@@ -170,23 +170,6 @@ def test_filter_near_dups_no_forced_broadcast(spark, sf_dir):
     assert out.count() == 900
 
 
-def test_fused_lsh_single_exchange(spark):
-    """lsh_bands_fused must add exactly ONE data exchange (the
-    groupBy(doc_id) that collects each doc's shingles) on top of its
-    input — the whole point of fusing minhash + banding is that the
-    signature table and the band pre-aggregation never cross the wire
-    (the staged chain pays 3 exchanges)."""
-    from dere_spark.operators.dedup import lsh_bands_fused
-
-    sh = spark.createDataFrame(
-        [(f"d{i}", f"sh{j}") for i in range(5) for j in range(8)],
-        "doc_id string, shingle string",
-    )
-    plan = _executed_plan(lsh_bands_fused(sh, 16, 4))
-    data_exchanges = len(re.findall(r"(?<!Broadcast)Exchange hashpartitioning", plan))
-    assert data_exchanges == 1, f"fused LSH gained an exchange:\n{plan[:1500]}"
-
-
 def test_jaccard_verify_plans_candidates_once(spark, sf_dir):
     """Jaccard verification joins each candidate pair to its two
     per-document shingle sets, so the plan holds the candidate-pair
@@ -196,19 +179,12 @@ def test_jaccard_verify_plans_candidates_once(spark, sf_dir):
     a broadcast; the sets' aggregation itself adds none. The
     shingle-level join it replaced planned the generator twice and had 14
     (10 shuffles, 4 broadcasts), on this corpus and at sf0.01 and sf0.1
-    alike."""
-    from dere_spark.operators.dedup import (
-        candidate_pairs_lsh,
-        explode_shingles,
-        jaccard_verify,
-        lsh_bands_minagg,
-        shingle_arrays,
-    )
+    alike. Pinned on the shipped wiring, ``near_dup_stages``."""
+    from dere_spark.operators.dedup import near_dup_stages, shingle_arrays
     from dere_spark.sources.documents import load_documents
 
     docs = load_documents(spark, sf_dir, columns=["text"])
-    sh = explode_shingles(shingle_arrays(docs, n=3))
-    plan = _executed_plan(jaccard_verify(candidate_pairs_lsh(lsh_bands_minagg(sh, 16, 4)), sh))
+    plan = _executed_plan(near_dup_stages(shingle_arrays(docs, n=3))["verified"])
     generators = re.findall(r"Generate explode\(flatten", plan)
     assert len(generators) == 1, plan[:3000]
     exchanges = re.findall(r"\w*Exchange\b", plan)
