@@ -1,4 +1,5 @@
-"""Candidate (anchor, filler) pair generation — the J1 theta-join.
+"""Candidate (anchor, filler) pair generation — the J1 theta-join — and the
+±k neighbourhood window it shares with frame assembly.
 
 The reference enumerates ``product(instance.spans, instance.spans)`` and
 keeps only pairs whose (anchor_type, filler_type) is plausible under the
@@ -6,24 +7,30 @@ schema (dere/models/_baseline/slot_classifier.py:347-383). Done naively at
 web scale that is quadratic per page; we instead expand each span's
 **token neighbourhood** in a single pass over one spans input:
 
-  * a window ``PARTITION BY doc_id ORDER BY token_idx RANGE BETWEEN k
-    PRECEDING AND k FOLLOWING`` collects, for every anchor span, the spans
-    within ±k tokens (k = the distance bound) into one array, which is
-    exploded into (anchor, filler) rows; self-pairs (same token) are
-    dropped. A document with n spans materializes O(n·k) rows — the range
-    frame IS the distance bound, so a giant page never builds O(n²) pairs.
+  * ``neighbourhood``: a window ``PARTITION BY doc_id ORDER BY token_idx
+    RANGE BETWEEN k PRECEDING AND k FOLLOWING`` collects, for every span,
+    the spans within ±k tokens (k = the distance bound) into one array.
+    ``candidate_pairs`` explodes it into (anchor, filler) rows, dropping
+    self-pairs (same token); ``frames.frames_from_spans`` selects each
+    slot's fillers inside it and never builds the pair rows. A document
+    with n spans materializes O(n·k) pairs — the range frame IS the
+    distance bound, so a giant page never builds O(n²) pairs.
   * the window's distribution (doc_id) is the one the corpus already has:
     ``load_documents`` hash-partitions on doc_id and the tokenizer windows
     keep it. The spans are read ONCE, with no join between two copies of
-    them — the triples plan has one documents scan, one exchange and no
-    shuffled join.
+    them.
   * the compiled plausible-relations whitelist is a broadcast dimension
     joined right after the expansion, so implausible pairs die before they
     leave the stage (the reference's biggest pruner, kept as pushdown).
   * the anchor's ``bucket`` = floor(anchor_idx / k) stays an output
-    column. It is a pure function of ``anchor_idx``; downstream windows
-    carry it in their partition keys, which the doc_id partitioning still
-    satisfies.
+    column. It is a pure function of ``anchor_idx``; the ranking window of
+    ``frames.best_fillers`` carries it in its partition key, which the
+    doc_id partitioning still satisfies.
+
+The pair rows serve the gates that read pairs (``kg_pairs``,
+``kernel_pair_scores``, ``kg_gold_arc_join``, ``regex_class_rewrite``) and
+a model that scores pairs through a Python kernel; the triples plan does
+not contain them (operators/frames.py has the A/B).
 
 Lost A/Bs, kept as numbers:
 
@@ -64,6 +71,26 @@ def whitelist_df(spark: SparkSession, plan: PlanSpec) -> DataFrame:
     )
 
 
+def neighbourhood(spans: DataFrame, k: int) -> DataFrame:
+    """Each span with ``_near``: every span of its document within ±k
+    tokens (its own token included), as structs
+    (token_idx, span_type, left, right, text).
+
+    The one definition of the ±k frame: ``candidate_pairs`` explodes it
+    and ``frames.frames_from_spans`` selects fillers inside it."""
+    return spans.selectExpr(
+        "doc_id",
+        "token_idx",
+        "span_type",
+        "`left`",
+        "`right`",
+        "text",
+        "collect_list(struct(token_idx, span_type, `left`, `right`, text)) OVER ("
+        f"PARTITION BY doc_id ORDER BY token_idx RANGE BETWEEN {k} PRECEDING "
+        f"AND {k} FOLLOWING) AS _near",
+    )
+
+
 def candidate_pairs(
     spans: DataFrame,
     whitelist: DataFrame,
@@ -79,18 +106,7 @@ def candidate_pairs(
     """
     d = int(max_token_distance)
     k = max(1, d)
-    near = spans.selectExpr(
-        "doc_id",
-        "token_idx",
-        "span_type",
-        "`left`",
-        "`right`",
-        "text",
-        "collect_list(struct(token_idx, span_type, `left`, `right`, text)) OVER ("
-        f"PARTITION BY doc_id ORDER BY token_idx RANGE BETWEEN {k} PRECEDING "
-        f"AND {k} FOLLOWING) AS _near",
-    )
-    expanded = near.selectExpr(
+    expanded = neighbourhood(spans, k).selectExpr(
         "*",
         "explode(filter(_near, f -> f.token_idx != token_idx "
         f"AND abs(f.token_idx - token_idx) <= {d})) AS _f",

@@ -1,12 +1,21 @@
-"""Span detection — gazetteer detector as a broadcast-hash join.
+"""Span detection — the gazetteer detector as an inline map lookup.
 
 The reference's span stage has two feature sources: token shape features
 and per-type gazetteer membership (dere/models/_baseline/span_classifier.py:294-322,
 gazetteer file model-specs/training_gazetteer_bionlp). Its deterministic
-core — "token surface form is in the gazetteer for type T" — is exactly a
-broadcast dictionary join, which is how we run it: the gazetteer is a tiny
-dimension DataFrame, broadcast to every executor, joined against the token
-stream with zero shuffle of the big side.
+core — "token surface form is in the gazetteer for type T" — is a
+dictionary lookup, which is how we run it: the gazetteer is compiled into
+a constant ``map(term -> array(span types))`` and every token looks up its
+lowercased surface in one generator over the token stream. One row per
+(token, type) comes out, the rows a dimension join would give, with no
+join, no broadcast job and no exchange beyond the corpus's doc_id one.
+
+Lost A/B, kept as numbers: the gazetteer (and the entity dictionary of
+operators/triples.py) as a broadcast dimension join. Each broadcast is a
+Spark job of its own that competes with the scan for the cores; kg_dense
+``extract_triples`` + ``write_triples`` (4 vCPU, local[4], 10 interleaved
+pairs, seed 303) ran 2.35 s median with both dictionaries broadcast and
+2.08 s with both inline (see operators/frames.py for the whole A/B).
 
 Output schema mirrors the reference Span (dere/corpus.py:174-220):
 identity = (doc_id, span_type, left, right); ``text`` is the surface form,
@@ -19,65 +28,36 @@ gazetteer path needs no Python at all.
 
 from __future__ import annotations
 
-from typing import Dict, Iterable, Mapping, Tuple
+from typing import Dict, Iterable, List, Mapping
 
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-
-def gazetteer_df(
-    spark: SparkSession, gazetteers: Mapping[str, Iterable[str]]
-) -> DataFrame:
-    """Gazetteer dimension table: (term, span_type). Lowercased terms,
-    matching the reference's lowercased membership test
-    (span_classifier.py:316-319).
-
-    Built with ``createDataFrame`` on purpose: its RDD makes every plan
-    built on it distinct. Spark's cache manager substitutes any persisted
-    plan that is semantically equal, so a gazetteer that compares equal
-    across builds (an inline ``VALUES`` table) lets an uncached
-    ``webtext.build_stages`` read the spans and triples that
-    ``webtext.cached_stages`` persisted for the same path: stale after a
-    rewrite, and not the uncached pipeline the flagship timings measure."""
-    rows = [
-        (term.lower(), span_type)
-        for span_type, terms in sorted(gazetteers.items())
-        for term in sorted(set(terms))
-    ]
-    return spark.createDataFrame(rows, "term string, span_type string")
+from dere_spark.operators import sql_str
 
 
-def detect_spans(tokens: DataFrame, gazetteer: DataFrame) -> DataFrame:
-    """tokens × broadcast(gazetteer) -> spans.
+def detect_spans(tokens: DataFrame, gazetteers: Mapping[str, Iterable[str]]) -> DataFrame:
+    """tokens -> spans(doc_id, token_idx, span_type, left, right, text,
+    source='predicted').
 
-    spans(doc_id, token_idx, span_type, left, right, text, source='predicted')
-
-    The join key is the lowercased surface form; the gazetteer side is
-    explicitly broadcast so the plan is a BroadcastHashJoin — the token
-    stream never shuffles.
+    ``gazetteers`` maps a span type to its terms. Membership is tested on
+    the lowercased surface, as the reference does (span_classifier.py:316-319);
+    a term listed under two types gives two spans, a NULL token none.
     """
-    return tokens.join(
-        F.broadcast(gazetteer), F.expr("lower(token) = term"), "inner"
-    ).selectExpr(
+    types: Dict[str, List[str]] = {}
+    for span_type, terms in sorted(gazetteers.items()):
+        for term in sorted({t.lower() for t in terms}):
+            types.setdefault(term, []).append(span_type)
+    lookup = ", ".join(
+        f"{sql_str(term)}, array({', '.join(map(sql_str, ts))})"
+        for term, ts in sorted(types.items())
+    )
+    return tokens.selectExpr(
         "doc_id",
         "token_idx",
-        "span_type",
+        f"explode(element_at(CAST(map({lookup}) AS MAP<STRING, ARRAY<STRING>>), "
+        "lower(token))) AS span_type",
         "`left`",
         "`right`",
         "token AS text",
         "'predicted' AS source",
     )
-
-
-def strip_source(df: DataFrame, source: str = "gold") -> DataFrame:
-    """Provenance filter: drop rows with the given source tag.
-
-    Reference: Corpus.strip_gold deletes gold-sourced spans/frames before
-    prediction (dere/corpus.py:161-171); evaluation conversely ignores
-    'given' annotations (dere/evaluation.py:18-21).
-
-    Null-safe: a row with source=NULL is NOT the stripped tag and is
-    kept (a plain ``!=`` comparison would silently drop it — NULL != x
-    is NULL, which `where` treats as false).
-    """
-    return df.where(~F.col("source").eqNullSafe(source))

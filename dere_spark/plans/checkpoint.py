@@ -173,11 +173,10 @@ def run_checkpointed_extraction(
         MAX_TOKEN_DISTANCE,
         webtext_plan,
     )
-    from dere_spark.operators.frames import assemble_frames, best_fillers, score_pairs
-    from dere_spark.operators.pairs import candidate_pairs, whitelist_df
-    from dere_spark.operators.spans import detect_spans, gazetteer_df
+    from dere_spark.operators.frames import frames_from_spans
+    from dere_spark.operators.spans import detect_spans
     from dere_spark.operators.tokenize import tokenize
-    from dere_spark.operators.triples import entity_dictionary, frames_to_triples
+    from dere_spark.operators.triples import frames_to_triples
     from dere_spark.sources.documents import load_documents
 
     plan = webtext_plan()
@@ -191,27 +190,18 @@ def run_checkpointed_extraction(
 
     spans = cp.stage(
         "spans",
-        lambda: detect_spans(
-            tokenize(load_documents(spark, sf_dir)), gazetteer_df(spark, GAZETTEERS)
-        ),
+        lambda: detect_spans(tokenize(load_documents(spark, sf_dir)), GAZETTEERS),
         params=params,
     )
     frames = cp.stage(
         "frames",
-        lambda: assemble_frames(
-            best_fillers(
-                score_pairs(
-                    candidate_pairs(spans, whitelist_df(spark, plan), MAX_TOKEN_DISTANCE)
-                )
-            ),
-            plan,
-        ),
+        lambda: frames_from_spans(spans, plan, MAX_TOKEN_DISTANCE),
         params=params,
         upstream=["spans"],
     )
     triples = cp.stage(
         "triples",
-        lambda: frames_to_triples(frames, entity_dictionary(spark, ENTITY_ALIASES)),
+        lambda: frames_to_triples(frames, ENTITY_ALIASES),
         params=params,
         upstream=["frames"],
     )

@@ -38,7 +38,7 @@ def register(name: str, oracle: str | None = None):
 # ---------------------------------------------------------------------------
 # Shared oracle SQL: the whole webtext KG pipeline as DuckDB CTEs.
 # Mirrors dere_spark.webtext stage-for-stage; gazetteers/whitelist/aliases
-# are inlined VALUES (they are broadcast literals in the Spark plan too).
+# are inlined VALUES (they are inline literals in the Spark plan too).
 # ---------------------------------------------------------------------------
 
 def _gaz_values() -> str:
@@ -302,7 +302,7 @@ def q_treebank_punct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     KG_CTES + 'SELECT doc_id, token_idx, span_type, "left", "right", text, source FROM spans',
 )
 def q_kg_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gazetteer span detection as broadcast-hash join (SURVEY §2.3 J5)."""
+    """Gazetteer span detection as an inline map lookup (SURVEY §2.3 J5)."""
     return cached_stages(spark, sf_dir)["spans"]
 
 

@@ -43,11 +43,10 @@ def stream_extract_triples(
     dynamic partition overwrite, so a replayed batch REPLACES its own
     partition instead of appending a duplicate copy.
     """
-    from dere_spark.operators.frames import assemble_frames, best_fillers, score_pairs
-    from dere_spark.operators.pairs import candidate_pairs, whitelist_df
-    from dere_spark.operators.spans import detect_spans, gazetteer_df
+    from dere_spark.operators.frames import frames_from_spans
+    from dere_spark.operators.spans import detect_spans
     from dere_spark.operators.tokenize import tokenize
-    from dere_spark.operators.triples import entity_dictionary, frames_to_triples
+    from dere_spark.operators.triples import frames_to_triples
     from dere_spark.webtext import (
         ENTITY_ALIASES,
         GAZETTEERS,
@@ -56,9 +55,6 @@ def stream_extract_triples(
     )
 
     plan = webtext_plan()
-    gaz = gazetteer_df(spark, GAZETTEERS)
-    wl = whitelist_df(spark, plan)
-    dictionary = entity_dictionary(spark, ENTITY_ALIASES)
 
     stream = (
         spark.readStream.schema(DOCUMENTS_DDL).parquet(source_dir)
@@ -68,11 +64,9 @@ def stream_extract_triples(
         docs = batch_df.select(
             F.col("doc_id").cast("string").alias("doc_id"), "text", "lang", "source"
         )
-        tokens = tokenize(docs)
-        spans = detect_spans(tokens, gaz)
-        pairs = candidate_pairs(spans, wl, MAX_TOKEN_DISTANCE)
-        frames = assemble_frames(best_fillers(score_pairs(pairs)), plan)
-        triples = frames_to_triples(frames, dictionary)
+        spans = detect_spans(tokenize(docs), GAZETTEERS)
+        frames = frames_from_spans(spans, plan, MAX_TOKEN_DISTANCE)
+        triples = frames_to_triples(frames, ENTITY_ALIASES)
         (
             triples.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")

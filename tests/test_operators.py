@@ -418,17 +418,70 @@ def test_tokenize_null_text_and_regex_sep(spark):
     assert rows == [("p1", 0, "a", 0, 1), ("p1", 1, "b", 2, 3), ("p1", 2, "c", 4, 5)]
 
 
-def test_strip_source_is_null_safe(spark):
-    """strip_source keeps rows whose source is NULL: NULL is not the
-    stripped tag, and a plain != comparison would silently drop them."""
-    from dere_spark.operators.spans import strip_source
+def _tokens(spark, rows):
+    from dere_spark.operators.treebank import tokenize_treebank_sql
 
-    df = spark.createDataFrame(
-        [("d1", "gold"), ("d2", "predicted"), ("d3", None)],
-        "doc_id string, source string",
+    return tokenize_treebank_sql(
+        spark.createDataFrame(rows, "doc_id string, text string").repartition(2, "doc_id")
     )
-    kept = {r["doc_id"] for r in strip_source(df, "gold").collect()}
-    assert kept == {"d2", "d3"}
+
+
+def test_detect_spans_empty_gazetteer_keeps_schema(spark):
+    """An empty gazetteer is a typed empty map: no spans, same schema."""
+    from dere_spark.operators.spans import detect_spans
+    from dere_spark.webtext import GAZETTEERS
+
+    tokens = _tokens(spark, [("d1", "join the table")])
+    empty = detect_spans(tokens, {})
+    assert empty.count() == 0
+    assert empty.schema.simpleString() == detect_spans(tokens, GAZETTEERS).schema.simpleString()
+
+
+def test_detect_spans_term_under_two_types(spark):
+    """A term listed under two types gives one span per type; the lookup
+    is on the lowercased surface, and the span keeps the surface."""
+    from dere_spark.operators.spans import detect_spans
+
+    tokens = _tokens(spark, [("d1", "Merge rows")])
+    gaz = {"Operator": ("merge",), "Object": ("MERGE", "rows")}
+    rows = sorted(
+        (r["token_idx"], r["span_type"], r["text"], r["left"], r["right"])
+        for r in detect_spans(tokens, gaz).collect()
+    )
+    assert rows == [
+        (0, "Object", "Merge", 0, 5), (0, "Operator", "Merge", 0, 5),
+        (1, "Object", "rows", 6, 10),
+    ]
+
+
+def test_detect_spans_null_and_empty_text(spark):
+    """NULL text, empty text and whitespace-only text give no spans, even
+    when the gazetteer lists the empty string."""
+    from dere_spark.operators.spans import detect_spans
+
+    tokens = _tokens(spark, [("d1", None), ("d2", ""), ("d3", "  "), ("d4", "join")])
+    got = detect_spans(tokens, {"Operator": ("join", "")}).collect()
+    assert [(r["doc_id"], r["text"]) for r in got] == [("d4", "join")]
+
+
+def test_frames_to_triples_empty_aliases(spark):
+    """With no aliases every mention links to ``ent:<lowercased surface>``;
+    a NULL surface stays NULL."""
+    from dere_spark.operators.triples import frames_to_triples
+
+    frames = spark.createDataFrame(
+        [("d1", 0, "Spark", "Operation.Theme", "Table", 0.5),
+         ("d1", 2, "join", "Operation.Manner", None, 0.5)],
+        "doc_id string, frame_id int, anchor_text string, predicate string, "
+        "filler_text string, score double",
+    )
+    got = sorted(tuple(r) for r in frames_to_triples(frames, {}).collect())
+    assert got == [
+        ("ent:join", "Operation.Manner", None, "d1", 2, 0.5),
+        ("ent:spark", "Operation.Theme", "ent:table", "d1", 0, 0.5),
+    ]
+    linked = frames_to_triples(frames, {"spark": "ent:apache_spark"}).collect()
+    assert {r["subj"] for r in linked} == {"ent:apache_spark", "ent:join"}
 
 
 def _union_find_labels(edges):
