@@ -110,7 +110,10 @@ class CheckpointedPipeline:
         """Run (or resume) one stage; returns its DataFrame.
 
         ``upstream`` names prior stages whose fingerprints chain into this
-        one; ``params`` captures stage configuration (spec hash, thresholds).
+        one; ``params`` must cover every input ``build`` reads that no
+        upstream fingerprint covers: the constants and source data of the
+        stage (for the webtext chain: the input signature and gazetteers,
+        the spec text and k, the entity aliases).
         """
         up_fps = [self.stages[u].fingerprint for u in (upstream or [])]
         fp = fingerprint(name, params, *up_fps)
@@ -163,46 +166,36 @@ class CheckpointedPipeline:
         return self.stages[name].reused
 
 
+#: The chain stages materialized to parquet; a step between two of them
+#: (tokens) runs inside the later one's build.
+CHECKPOINTED = ("spans", "frames", "triples")
+
+
 def run_checkpointed_extraction(
     spark: SparkSession, sf_dir: str, root: str
 ) -> Dict[str, DataFrame]:
-    """The webtext pipeline with a checkpoint after each major stage."""
-    from dere_spark.webtext import (
-        ENTITY_ALIASES,
-        GAZETTEERS,
-        MAX_TOKEN_DISTANCE,
-        webtext_plan,
-    )
-    from dere_spark.operators.frames import frames_from_spans
-    from dere_spark.operators.spans import detect_spans
-    from dere_spark.operators.tokenize import tokenize
-    from dere_spark.operators.triples import frames_to_triples
+    """The webtext extraction chain (``webtext.extraction_chain``) with a
+    checkpoint after spans, frames and triples.
+
+    Each checkpointed stage fingerprints the constants of the steps it
+    runs; the spans stage also covers the input directory and its file
+    listing. Every stage after the first starts from the previous
+    stage's parquet, so lineage is cut at each boundary."""
     from dere_spark.sources.documents import load_documents
+    from dere_spark.webtext import extraction_chain
 
-    plan = webtext_plan()
     cp = CheckpointedPipeline(spark, root)
-    params = fingerprint(
-        sf_dir,
-        input_signature(sf_dir),  # in-place corpus regeneration invalidates
-        json.dumps(sorted(GAZETTEERS.items())),
-        str(MAX_TOKEN_DISTANCE),
-    )
-
-    spans = cp.stage(
-        "spans",
-        lambda: detect_spans(tokenize(load_documents(spark, sf_dir)), GAZETTEERS),
-        params=params,
-    )
-    frames = cp.stage(
-        "frames",
-        lambda: frames_from_spans(spans, plan, MAX_TOKEN_DISTANCE),
-        params=params,
-        upstream=["spans"],
-    )
-    triples = cp.stage(
-        "triples",
-        lambda: frames_to_triples(frames, ENTITY_ALIASES),
-        params=params,
-        upstream=["frames"],
-    )
-    return {"spans": spans, "frames": frames, "triples": triples, "_pipeline": cp}
+    df = load_documents(spark, sf_dir)
+    # in-place corpus regeneration invalidates the first stage
+    params, upstream = [sf_dir, input_signature(sf_dir)], []
+    for name, step, constants in extraction_chain():
+        df = step(df)
+        params.append(constants)
+        if name in CHECKPOINTED:
+            df = cp.stage(
+                name, lambda out=df: out, params=fingerprint(*params), upstream=upstream
+            )
+            params, upstream = [], [name]
+    out = {name: cp.stages[name].df for name in CHECKPOINTED}
+    out["_pipeline"] = cp
+    return out

@@ -2323,8 +2323,8 @@ def _register_web_graph() -> None:
     re-derives the OPERATOR's expected output independently (template-level
     expectations in plain SQL, never a re-run of the same regex/expression
     chain). This upgrades the family from tested-only to driver-oracle-
-    checked; the WARC parser itself stays covered by its 16 unit tests
-    (multi-member gzip, truncation, streaming parity)."""
+    checked; the WARC parser itself stays covered by its unit tests
+    (multi-member gzip, truncation, input-hint shape)."""
     from dere_spark.operators.pagerank import pagerank
     from dere_spark.operators.weblinks import extract_links, host_edges
     from dere_spark.operators.weburl import latest_snapshot

@@ -8,8 +8,10 @@ corpus) while remaining correct on local[N]:
   * Arrow enabled for every pandas-UDF kernel;
   * shuffle partitions sized from parallelism (overridable; on a real
     cluster set ~2-3x total cores / target ~128-256MB per partition);
-  * broadcast threshold left at default — dimension tables (gazetteers,
-    entity dictionaries) are broadcast explicitly with F.broadcast.
+  * broadcast threshold left at default — small dimension tables (the
+    pair whitelist, language markers) are broadcast explicitly with
+    F.broadcast; the gazetteers and the entity dictionary are inline map
+    literals in the plan, not tables.
 """
 
 from __future__ import annotations

@@ -144,14 +144,20 @@ def iter_warc_records(data: bytes) -> Iterator[dict]:
         pos = block_start + length
 
 
-def make_parse_kernel(
+def load_warc(
+    spark: SparkSession,
+    path: str,
     record_types: tuple = ("response",),
     max_payload_bytes: int = 8 * 1024 * 1024,
-):
-    """Build the ``mapInPandas`` kernel shared by the batch reader
-    (``load_warc``) and the streaming reader
-    (``streaming/pipeline.stream_web_pages``) — ONE parse code path, so
-    batch and streaming ingest cannot drift."""
+) -> DataFrame:
+    """Parse WARC archives under ``path`` into one row per kept record.
+
+    Output: ``WARC_RECORD_SCHEMA``.  For ``response`` records carrying an
+    HTTP message, ``html`` is the HTTP BODY (headers stripped); for other
+    kept types it is the raw block.  Payloads longer than
+    ``max_payload_bytes`` are cut with ``truncated=true`` — the cap is in
+    the row, never silent.  One archive = one task; see module docstring.
+    """
     kept = tuple(record_types)
     cap = int(max_payload_bytes)
 
@@ -197,37 +203,8 @@ def make_parse_kernel(
                 ],
             )
 
-    return parse
-
-
-def load_warc(
-    spark: SparkSession,
-    path: str,
-    record_types: tuple = ("response",),
-    max_payload_bytes: int = 8 * 1024 * 1024,
-) -> DataFrame:
-    """Parse WARC archives under ``path`` into one row per kept record.
-
-    Output: ``WARC_RECORD_SCHEMA``.  For ``response`` records carrying an
-    HTTP message, ``html`` is the HTTP BODY (headers stripped); for other
-    kept types it is the raw block.  Payloads longer than
-    ``max_payload_bytes`` are cut with ``truncated=true`` — the cap is in
-    the row, never silent.  One archive = one task; see module docstring.
-    """
-    parse = make_parse_kernel(record_types, max_payload_bytes)
     files = spark.read.format("binaryFile").load(path).select("path", "content")
     return files.mapInPandas(parse, WARC_RECORD_SCHEMA)
-
-
-def page_table(records: DataFrame, markers: dict) -> DataFrame:
-    """Kept-record table -> the BASELINE input-hint page table — the
-    post-parse projection shared by batch and streaming ingest."""
-    return (
-        records.where(F.col("url").isNotNull())
-        .select("url", "warc_ts", "html")
-        .withColumn("text", html_to_text(F.col("html")))
-        .withColumn("lang", _lang_expr(F.col("text"), markers))
-    )
 
 
 #: html entities decoded by the baseline extractor (the ones that occur in
@@ -305,7 +282,10 @@ def web_pages_from_warc(
     no shuffle, no second pass over 100 TB of gzip."""
     from dere_spark.operators.text import DEFAULT_MARKERS
 
-    records = load_warc(
-        spark, path, record_types=("response",), max_payload_bytes=max_payload_bytes
+    return (
+        load_warc(spark, path, record_types=("response",), max_payload_bytes=max_payload_bytes)
+        .where(F.col("url").isNotNull())
+        .select("url", "warc_ts", "html")
+        .withColumn("text", html_to_text(F.col("html")))
+        .withColumn("lang", _lang_expr(F.col("text"), markers or DEFAULT_MARKERS))
     )
-    return page_table(records, markers or DEFAULT_MARKERS)

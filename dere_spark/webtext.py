@@ -23,33 +23,42 @@ window reuse that distribution. A warm kg_dense batch runs 3 Spark jobs
 (schema, scan, result); with the gazetteer, whitelist and entity
 dictionary as broadcast joins it ran 6 (numbers in operators/frames.py).
 
-The default tokenizer is Treebank segmentation (`tokenize_treebank_sql`) —
-the reference tokenizes Treebank-style (span_classifier.py:361). It builds
-ON the windowed JVM tokenizer (same single doc_id exchange) and sub-splits
-words with the nltk rule chain compiled to Catalyst regexp_replace
-expressions, so no token bytes ever cross the Python boundary; purely
-alphanumeric words (the vast majority) skip the regex chain via a
-one-rlike fast path.
+The tokenizer is Treebank segmentation (`tokenize_treebank_sql`) — the
+reference tokenizes Treebank-style (span_classifier.py:361), and on the
+space-separated synthetic corpus its output equals the whitespace split,
+which keeps every kg_* oracle like-for-like. It builds ON the windowed
+JVM tokenizer (same single doc_id exchange) and sub-splits words with the
+nltk rule chain compiled to Catalyst regexp_replace expressions, so no
+token bytes ever cross the Python boundary; purely alphanumeric words
+(the vast majority) skip the regex chain via a one-rlike fast path.
 
 Plan construction is Python-side work paid on every call: the operators
 build their constant expressions as SQL text, because every Column API
 call is one py4j round trip. A warm ``build_stages`` makes ~190 round
 trips, where the broadcast-join build made ~280 and the Column API build
-~4,100 (pinned in tests/test_plan_shape.py). ``extract_triples`` builds
-the extraction chain without the ``pairs`` stage.
+~4,100 (pinned in tests/test_plan_shape.py).
+
+This module is the only one that knows the extraction chain
+(``extraction_chain``; pinned by tests/test_hygiene.py). Its consumers:
+``build_stages`` and ``cached_stages`` (the chain plus the ``pairs``
+stage the pair gates read), ``extract_triples`` (the chain alone) and
+``plans/checkpoint.run_checkpointed_extraction`` (the chain with a
+parquet checkpoint after spans, frames and triples).
 """
 
 from __future__ import annotations
 
+import json
 import os
-from typing import Dict
+from functools import partial
+from importlib import resources
+from typing import Callable, Dict, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
 from dere_spark.operators.frames import frames_from_spans
 from dere_spark.operators.pairs import candidate_pairs, whitelist_df
 from dere_spark.operators.spans import detect_spans
-from dere_spark.operators.tokenize import tokenize
 from dere_spark.operators.treebank import tokenize_treebank_sql
 from dere_spark.operators.triples import frames_to_triples
 from dere_spark.plans.compiler import PlanSpec, compile_plan
@@ -88,39 +97,52 @@ def webtext_plan() -> PlanSpec:
     return compile_plan(load_webtext_spec())
 
 
-def build_stages(
-    spark: SparkSession, sf_dir: str, tokenizer: str = "treebank"
-) -> Dict[str, DataFrame]:
+def extraction_chain() -> Tuple[Tuple[str, Callable[[DataFrame], DataFrame], str], ...]:
+    """The one extraction chain, as ordered (stage, step, constants).
+
+    Each step maps the previous stage's DataFrame to this stage's;
+    ``constants`` serializes every module constant the step reads, read
+    when the chain is built, so a fingerprint over it goes stale when one
+    is edited. ``_extraction`` folds the steps over the documents;
+    ``plans/checkpoint.run_checkpointed_extraction`` folds the same steps
+    and materializes spans, frames and triples."""
+    # through the import system: inside a --py-files zip SPEC_PATH is no file
+    spec = resources.files("dere_spark").joinpath("specs/webtext.xml").read_text()
+    return (
+        ("tokens", tokenize_treebank_sql, ""),
+        (
+            "spans",
+            partial(detect_spans, gazetteers=GAZETTEERS),
+            json.dumps(GAZETTEERS, sort_keys=True),
+        ),
+        (
+            "frames",
+            partial(
+                frames_from_spans, plan=webtext_plan(), max_token_distance=MAX_TOKEN_DISTANCE
+            ),
+            f"{spec}\x00{MAX_TOKEN_DISTANCE}",
+        ),
+        (
+            "triples",
+            partial(frames_to_triples, aliases=ENTITY_ALIASES),
+            json.dumps(ENTITY_ALIASES, sort_keys=True),
+        ),
+    )
+
+
+def build_stages(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
     """Construct every stage of the pipeline lazily; nothing executes until
-    an action runs. Returned dict keys are stage names -> DataFrames.
-
-    ``tokenizer``: "treebank" (the default — nltk-3.3-parity rule chain
-    compiled to JVM regexp_replace expressions, the reference's front door
-    for real punctuated web text: span_classifier.py:361; identical output
-    to whitespace on the space-separated synthetic corpus, which is what
-    keeps every kg_* oracle like-for-like) or "whitespace" (plain JVM
-    window tokenizer).
-    """
-    return _with_pairs(spark, _extraction(load_documents(spark, sf_dir), tokenizer))
+    an action runs. Returned dict keys are stage names -> DataFrames."""
+    return _with_pairs(spark, _extraction(load_documents(spark, sf_dir)))
 
 
-def _extraction(documents: DataFrame, tokenizer: str = "treebank") -> Dict[str, DataFrame]:
+def _extraction(documents: DataFrame) -> Dict[str, DataFrame]:
     """documents -> tokens -> spans -> frames -> triples."""
-    if tokenizer == "treebank":
-        tokens = tokenize_treebank_sql(documents)
-    elif tokenizer == "whitespace":
-        tokens = tokenize(documents)
-    else:
-        raise ValueError(f"unknown tokenizer: {tokenizer}")
-    spans = detect_spans(tokens, GAZETTEERS)
-    frames = frames_from_spans(spans, webtext_plan(), MAX_TOKEN_DISTANCE)
-    return {
-        "documents": documents,
-        "tokens": tokens,
-        "spans": spans,
-        "frames": frames,
-        "triples": frames_to_triples(frames, ENTITY_ALIASES),
-    }
+    stages = {"documents": documents}
+    df = documents
+    for name, step, _constants in extraction_chain():
+        df = stages[name] = step(df)
+    return stages
 
 
 def _with_pairs(spark: SparkSession, stages: Dict[str, DataFrame]) -> Dict[str, DataFrame]:

@@ -82,3 +82,27 @@ def test_dedup_graph_operators_have_callers():
         f"{mod}:{name}" for name, mod in public if name not in exempt and not called(name, mod)
     )
     assert uncalled == [], f"public operators with no caller: {uncalled}"
+
+
+def test_only_webtext_wires_the_extraction_chain():
+    """One pipeline per task: ``webtext.extraction_chain`` is the only
+    place the flagship steps and their constants are wired together.
+    Any other engine module that references them is a second copy of the
+    chain, free to drift (a copy with the whitespace tokenizer gave 0
+    triples on punctuated text where the flagship gave 20)."""
+    chain = {
+        "detect_spans",
+        "frames_from_spans",
+        "frames_to_triples",
+        "ENTITY_ALIASES",
+        "MAX_TOKEN_DISTANCE",
+        "webtext_plan",
+    }
+    forks = sorted(
+        f"{path.relative_to(PKG.parent)}: {name}"
+        for path in PKG.rglob("*.py")
+        if path != PKG / "webtext.py"
+        for name, _owner in _references(path)
+        if name in chain
+    )
+    assert forks == [], f"extraction chain wired outside webtext.py: {forks}"

@@ -1,4 +1,9 @@
-"""Checkpoint/lineage resumability, skew helpers, splits, tuning, streaming."""
+"""Checkpoint/lineage resumability of the webtext extraction chain, skew
+helpers, splits and tuning.
+
+The checkpointed run folds ``webtext.extraction_chain``, the chain
+``extract_triples`` runs, so its triples must equal the direct ones row
+for row, and each stage's fingerprint must cover the constants it reads."""
 
 from __future__ import annotations
 
@@ -16,16 +21,61 @@ from dere_spark.sources.documents import load_documents
 from dere_spark.webtext import extract_triples
 
 
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _write_punctuated_corpus(spark, tmp_path) -> str:
+    rows = [
+        (f"u{i}", f"Spark join, table {i}. customer sort fast!", "en", "web")
+        for i in range(20)
+    ]
+    out = str(tmp_path / "punct")
+    spark.createDataFrame(
+        rows, "doc_id string, text string, lang string, source string"
+    ).write.parquet(f"{out}/documents.parquet")
+    return out
+
+
 def test_checkpointed_pipeline_matches_direct(spark, sf_dir, tmp_path):
     root = str(tmp_path / "cp")
     out = run_checkpointed_extraction(spark, sf_dir, root)
-    direct = extract_triples(spark, sf_dir)
-    assert out["triples"].count() == direct.count()
+    direct = _rows(extract_triples(spark, sf_dir))
+    assert direct and _rows(out["triples"]) == direct
     # manifests carry lineage: per-partition row counts + chained fingerprints
     m = json.load(open(f"{root}/triples/manifest.json"))
-    assert m["rows"] == direct.count()
+    assert m["rows"] == len(direct)
     assert m["partitions"] and all("rows" in p for p in m["partitions"])
     assert m["upstream"]["frames"]
+
+
+def test_checkpointed_pipeline_matches_direct_on_punctuated_text(spark, tmp_path):
+    """The checkpointed run tokenizes like the flagship (Treebank), so
+    comma- and period-glued terms still yield triples."""
+    src = _write_punctuated_corpus(spark, tmp_path)
+    out = run_checkpointed_extraction(spark, src, str(tmp_path / "cp"))
+    direct = _rows(extract_triples(spark, src))
+    assert direct and _rows(out["triples"]) == direct
+
+
+def test_checkpoint_alias_edit_recomputes_only_triples(spark, sf_dir, tmp_path, monkeypatch):
+    """An entity-alias edit changes only the triples stage's constants:
+    spans and frames resume from checkpoint, triples recompute and carry
+    the new canonical id."""
+    from dere_spark import webtext
+
+    root = str(tmp_path / "cp")
+    run_checkpointed_extraction(spark, sf_dir, root)
+    monkeypatch.setattr(
+        webtext, "ENTITY_ALIASES", {**webtext.ENTITY_ALIASES, "table": "ent:db_table"}
+    )
+    out = run_checkpointed_extraction(spark, sf_dir, root)
+    cp = out["_pipeline"]
+    assert cp.reused("spans") and cp.reused("frames")
+    assert not cp.reused("triples")
+    linked = out["triples"].where("subj = 'ent:db_table' OR obj = 'ent:db_table'")
+    assert linked.count() > 0
+    assert _rows(out["triples"]) == _rows(extract_triples(spark, sf_dir))
 
 
 def test_checkpoint_resume_skips_clean_stages(spark, sf_dir, tmp_path):
@@ -150,116 +200,3 @@ def test_grid_search_argmax_and_early_stop():
     r = grid_search({"c": [1, 2, 3, 4, 5]}, ev, early_stop_at=1.0)
     assert r.best_params == {"c": 3} and r.best_score == 1.0
     assert len(calls) == 3  # stopped at the perfect score
-
-
-def test_streaming_matches_batch(spark, sf_dir, tmp_path):
-    from dere_spark.streaming.pipeline import stream_extract_triples
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    cp = str(tmp_path / "cp")
-    load_documents(spark, sf_dir).withColumn(
-        "n_chars", F.length("text").cast("long")
-    ).write.parquet(src)
-    q = stream_extract_triples(spark, src, out, cp, available_now=True)
-    q.awaitTermination(300)
-    streamed = spark.read.parquet(out)
-    batch = extract_triples(spark, sf_dir)
-    assert streamed.count() == batch.count()
-    # exactly-once: re-triggering with the same checkpoint appends nothing
-    q2 = stream_extract_triples(spark, src, out, cp, available_now=True)
-    q2.awaitTermination(300)
-    assert spark.read.parquet(out).count() == batch.count()
-    # crash-replay simulation: foreachBatch is at-least-once, so wipe the
-    # streaming checkpoint and replay EVERY batch with the same batch_ids
-    # — the per-batch dynamic partition overwrite must replace each
-    # batch's partition, not append a duplicate copy of the corpus
-    shutil.rmtree(cp)
-    q3 = stream_extract_triples(spark, src, out, cp, available_now=True)
-    q3.awaitTermination(300)
-    assert spark.read.parquet(out).count() == batch.count()
-
-
-def test_merge_sessions_gap_semantics():
-    """The stateful sessionizer's pure merge kernel: late events within
-    the gap extend the open session DOWNWARD; late events beyond the gap
-    form their own (immediately closed) session — a plain `t - end <=
-    gap` test would swallow arbitrarily-early events and never lower the
-    recorded start."""
-    from dere_spark.streaming.pipeline import _merge_sessions
-
-    gap = 1000
-    # in-order: split at > gap
-    assert _merge_sessions(
-        [[0, 0, 1], [500, 500, 1], [3000, 3000, 1]], gap
-    ) == [[0, 500, 2], [3000, 3000, 1]]
-    # late event within the gap BEFORE the open session lowers its start
-    assert _merge_sessions([[5000, 6000, 3], [4500, 4500, 1]], gap) == [
-        [4500, 6000, 4]
-    ]
-    # late event beyond the gap: its own closed session, boundaries intact
-    assert _merge_sessions([[5000, 6000, 3], [1000, 1000, 1]], gap) == [
-        [1000, 1000, 1],
-        [5000, 6000, 3],
-    ]
-    assert _merge_sessions([], gap) == []
-
-
-def test_streaming_windowed_counts(spark, sf_dir, tmp_path):
-    from dere_spark.streaming.pipeline import stream_windowed_event_counts
-    from dere_spark.sources.documents import load_table
-
-    src = str(tmp_path / "ev")
-    load_table(spark, sf_dir, "events").write.parquet(src)
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    ).parquet(src)
-    windowed = stream_windowed_event_counts(stream)
-    q = (
-        windowed.writeStream.format("memory")
-        .queryName("wincounts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.sql("select sum(n_events) n from wincounts").collect()[0]["n"]
-    assert got == load_table(spark, sf_dir, "events").count()
-
-
-def test_streaming_stateful_sessions(spark, sf_dir, tmp_path):
-    """applyInPandasWithState sessionization: closed sessions from the
-    stream must agree with the batch sessionizer for sessions that end
-    well before the max event time (open/late-boundary sessions stay in
-    state at stream end)."""
-    from dere_spark.sources.documents import load_table
-    from dere_spark.streaming.pipeline import stream_stateful_sessions
-
-    src = str(tmp_path / "ev2")
-    load_table(spark, sf_dir, "events").write.parquet(src)
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    ).parquet(src)
-    q = (
-        stream_stateful_sessions(stream)
-        .writeStream.format("memory")
-        .queryName("statesess")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.sql(
-        "select user_id, session_start, n_events from statesess"
-    ).collect()
-    assert len(got) > 0
-    # cross-check a sample of closed sessions against the batch sessionizer
-    from dere_spark.queries import QUERIES
-
-    batch_rows = QUERIES["window_sessionize"](spark, sf_dir).collect()
-    batch_total = sum(r["n_events"] for r in batch_rows)
-    stream_total = sum(r["n_events"] for r in got)
-    # closed sessions cover most events; the remainder is open state at
-    # stream end (per-user final sessions with no event past their gap)
-    assert 0 < stream_total <= batch_total
-    assert stream_total >= batch_total * 0.8

@@ -226,61 +226,6 @@ def test_web_pages_plan_is_single_pass(spark, tmp_path):
     assert "Exchange" not in plan
 
 
-def test_stream_web_pages_incremental(spark, tmp_path):
-    """Streaming ingest drains new archives exactly once per file: the
-    first availableNow pass lands the first archive's pages; a second
-    archive then lands in a later pass WITHOUT re-emitting the first
-    (file-source checkpoint semantics), and the rows match the batch
-    reader byte-for-byte — same kernel, same projection."""
-    from dere_spark.streaming.pipeline import stream_web_pages
-
-    warc_dir = tmp_path / "crawl"
-    warc_dir.mkdir()
-    out = str(tmp_path / "pages_out")
-    cp = str(tmp_path / "cp")
-    (warc_dir / "c0.warc").write_bytes(make_warc())
-
-    def drain():
-        q = (
-            stream_web_pages(spark, str(warc_dir))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain()
-    first = spark.read.parquet(out).collect()
-    assert {r["url"] for r in first} == {"http://a.example/", "http://b.example/"}
-    assert {r["lang"] for r in first} == {"en", "es"}
-
-    # second archive with distinct urls arrives; only its rows are new
-    second = make_warc().replace(b"a.example", b"c.example").replace(
-        b"b.example", b"d.example"
-    )
-    # replacement preserved lengths (same-length hostnames), so framing holds
-    (warc_dir / "c1.warc").write_bytes(second)
-    drain()
-    rows = spark.read.parquet(out).collect()
-    assert len(rows) == 4  # 2 + 2, no re-emission of the first archive
-    urls = sorted(r["url"] for r in rows)
-    assert urls == [
-        "http://a.example/",
-        "http://b.example/",
-        "http://c.example/",
-        "http://d.example/",
-    ]
-    # parity with the batch reader on the same directory
-    batch = {
-        (r["url"], r["text"], r["lang"])
-        for r in web_pages_from_warc(spark, str(warc_dir)).collect()
-    }
-    stream = {(r["url"], r["text"], r["lang"]) for r in rows}
-    assert batch == stream
-
-
 def test_crawl_to_kg_end_to_end(spark, tmp_path):
     """The full story the round is about: raw WARC archives -> streamed/
     batch page table -> canonical documents table -> the flagship

@@ -74,8 +74,9 @@ def test_web_shape_text_fidelity(spark, tmp_path):
 def test_treebank_tokenizer_pipeline_on_punctuated_text(spark, tmp_path):
     """On punctuated web text the whitespace tokenizer glues terms to
     punctuation ("join," never matches the gazetteer); the treebank
-    front door recovers the extraction."""
-    import pyspark.sql.functions as F
+    front door of ``build_stages`` recovers the extraction."""
+    from dere_spark.operators.spans import detect_spans
+    from dere_spark.webtext import GAZETTEERS
 
     rows = [
         (f"u{i}", f"spark join, table {i}. customer sort fast!", "en", "web")
@@ -85,9 +86,12 @@ def test_treebank_tokenizer_pipeline_on_punctuated_text(spark, tmp_path):
     out = str(tmp_path / "punct")
     df.write.mode("overwrite").parquet(f"{out}/documents.parquet")
 
-    ws = build_stages(spark, out, tokenizer="whitespace")["triples"]
-    tb = build_stages(spark, out, tokenizer="treebank")["triples"]
-    n_ws, n_tb = ws.count(), tb.count()
-    assert n_tb > n_ws, (n_ws, n_tb)
+    ws_tokens = tokenize(load_documents(spark, out))
+    assert ws_tokens.where(F.col("token") == "join,").count() == 20
+    ws_spans = detect_spans(ws_tokens, GAZETTEERS)
+    assert ws_spans.where(F.col("text").startswith("join")).count() == 0
+
+    stages = build_stages(spark, out)
+    assert stages["spans"].where(F.col("text") == "join").count() == 20
     # and the treebank path finds the comma-glued operator
-    assert tb.where(F.col("pred").startswith("Operation")).count() > 0
+    assert stages["triples"].where(F.col("pred").startswith("Operation")).count() > 0
