@@ -134,8 +134,9 @@ class CheckpointedPipeline:
         stale = self._manifest_path(name)
         if os.path.exists(stale):
             os.remove(stale)
-        df = build()
-        df.write.mode("overwrite").parquet(data_path)
+        # rebalanced, AQE sizes the files (one per shuffle partition
+        # without it), like the graph sink's
+        build().hint("rebalance").write.mode("overwrite").parquet(data_path)
         out = self.spark.read.parquet(data_path)
         # lineage/metrics: per-partition row counts of the materialized table
         part_counts = [
@@ -178,16 +179,19 @@ def run_checkpointed_extraction(
     checkpoint after spans, frames and triples.
 
     Each checkpointed stage fingerprints the constants of the steps it
-    runs; the spans stage also covers the input directory and its file
-    listing. Every stage after the first starts from the previous
-    stage's parquet, so lineage is cut at each boundary."""
+    runs; the spans stage also covers the documents table and its file
+    listing (the chain reads no other table, so the corpus's sibling
+    tables do not invalidate it). Every stage after the first starts
+    from the previous stage's parquet, so lineage is cut at each
+    boundary."""
     from dere_spark.sources.documents import load_documents
     from dere_spark.webtext import extraction_chain
 
     cp = CheckpointedPipeline(spark, root)
     df = load_documents(spark, sf_dir)
-    # in-place corpus regeneration invalidates the first stage
-    params, upstream = [sf_dir, input_signature(sf_dir)], []
+    # in-place regeneration of the documents table invalidates the first stage
+    docs = f"{sf_dir}/documents.parquet"
+    params, upstream = [docs, input_signature(docs)], []
     for name, step, constants in extraction_chain():
         df = step(df)
         params.append(constants)

@@ -106,3 +106,42 @@ def test_only_webtext_wires_the_extraction_chain():
         if name in chain
     )
     assert forks == [], f"extraction chain wired outside webtext.py: {forks}"
+
+
+def _parquet_writes(path: pathlib.Path) -> list[int]:
+    """Lines of ``path`` that write parquet through a DataFrameWriter:
+    a ``.parquet(...)``, ``.save(...)`` or ``.saveAsTable(...)`` call whose
+    receiver chain goes through ``.write``."""
+    lines = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        chain, cur = [], node
+        while isinstance(cur, (ast.Call, ast.Attribute)):
+            if isinstance(cur, ast.Attribute):
+                chain.append(cur.attr)
+                cur = cur.value
+            else:
+                cur = cur.func
+        if (
+            isinstance(node, ast.Call)
+            and chain[:1] in (["parquet"], ["save"], ["saveAsTable"])
+            and "write" in chain[1:]
+        ):
+            lines.append(node.lineno)
+    return lines
+
+
+def test_parquet_writes_only_at_the_sinks():
+    """The graph sink (operators/triples.py) and the stage checkpoints
+    (plans/checkpoint.py) own the file-sizing rule: rebalance, then let
+    AQE size the files. A parquet write anywhere else in the engine
+    writes one file per task, however few rows it holds."""
+    sinks = {PKG / "operators" / "triples.py", PKG / "plans" / "checkpoint.py"}
+    # the detector sees the sinks' own writes
+    assert all(_parquet_writes(path) for path in sinks)
+    stray = [
+        f"{path.relative_to(PKG.parent)}:{line}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path not in sinks
+        for line in _parquet_writes(path)
+    ]
+    assert stray == [], f"parquet written outside the sinks: {stray}"

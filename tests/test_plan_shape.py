@@ -4,6 +4,7 @@ partition pruning at the graph sink."""
 
 from __future__ import annotations
 
+import os
 import re
 from collections import Counter
 
@@ -157,9 +158,11 @@ def test_spans_plan_has_no_join(spark, sf_dir):
 
 def test_warm_flagship_batch_runs_three_jobs(spark, sf_dir, tmp_path):
     """A warm flagship batch (``extract_triples`` then ``write_triples``)
-    runs 3 Spark jobs: the parquet schema, the scan up to the doc_id
-    shuffle, and the rest of the plan with the write. Each broadcast
-    dimension it used to join was a job of its own (6 in all)."""
+    runs 3 Spark jobs: the scan up to the doc_id shuffle, the extraction
+    up to the sink's rebalance on pred (its shuffle-map stage), and the
+    write. ``load_documents`` reads the parquet footer on the driver, so
+    no job infers the schema; each broadcast dimension the extraction
+    used to join was a job of its own (6 in all)."""
     from dere_spark.webtext import extract_triples
 
     sc = spark.sparkContext
@@ -171,6 +174,51 @@ def test_warm_flagship_batch_runs_three_jobs(spark, sf_dir, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("flagship_batch")) <= 3
+
+
+def _part_files(path: str) -> Counter:
+    """part files per ``pred=`` directory of a written triples table"""
+    return Counter(
+        os.path.basename(root)
+        for root, _dirs, names in os.walk(path)
+        for name in names
+        if name.startswith("part-")
+    )
+
+
+def test_triples_sink_sizes_files_by_predicate(spark, tmp_path):
+    """``write_triples`` rebalances on pred, so AQE sizes the files: on a
+    small input every predicate is one file (each task used to open one
+    file per predicate it held); with the advisory partition size lowered
+    below a skewed predicate's bytes, that predicate is split over several
+    files. The rows read back unchanged either way."""
+    cols = ["subj", "pred", "obj", "doc_id", "frame_id", "confidence"]
+    triples = spark.range(4000).selectExpr(
+        "concat('ent:s', id) AS subj",
+        "CASE WHEN id < 3800 THEN 'Op.Big' WHEN id % 2 = 0 THEN 'Op.A' ELSE 'Op.B' END AS pred",
+        "concat('ent:o', id) AS obj",
+        "CAST(id % 97 AS STRING) AS doc_id",
+        "concat('f', id) AS frame_id",
+        "0.5D AS confidence",
+    ).repartition(8, "doc_id")
+    expected = sorted(tuple(r) for r in triples.collect())
+
+    small = str(tmp_path / "small")
+    write_triples(triples, small)
+    assert _part_files(small) == {"pred=Op.Big": 1, "pred=Op.A": 1, "pred=Op.B": 1}
+    assert sorted(tuple(r) for r in spark.read.parquet(small).select(*cols).collect()) == expected
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    skewed = str(tmp_path / "skewed")
+    try:
+        spark.conf.set(key, "16k")
+        write_triples(triples, skewed)
+    finally:
+        spark.conf.set(key, prev)
+    files = _part_files(skewed)
+    assert files["pred=Op.Big"] >= 2, files
+    assert sorted(tuple(r) for r in spark.read.parquet(skewed).select(*cols).collect()) == expected
 
 
 def test_filter_near_dups_no_forced_broadcast(spark, sf_dir):

@@ -8,6 +8,7 @@ for row, and each stage's fingerprint must cover the constants it reads."""
 from __future__ import annotations
 
 import json
+import os
 import shutil
 
 import pyspark.sql.functions as F
@@ -15,7 +16,11 @@ import pytest
 
 from dere_spark.operators.corpus_ops import deterministic_split
 from dere_spark.operators.skew import salted_count, salted_dim_join
-from dere_spark.plans.checkpoint import CheckpointedPipeline, run_checkpointed_extraction
+from dere_spark.plans.checkpoint import (
+    CHECKPOINTED,
+    CheckpointedPipeline,
+    run_checkpointed_extraction,
+)
 from dere_spark.plans.tuning import grid_search
 from dere_spark.sources.documents import load_documents
 from dere_spark.webtext import extract_triples
@@ -134,24 +139,41 @@ def test_checkpoint_crash_mid_rebuild_never_resurrects_stale_manifest(
 def test_checkpoint_invalidates_on_input_regeneration(spark, sf_dir, tmp_path):
     """Fingerprinting only the input PATH string would reuse a stale
     checkpoint after the corpus is regenerated in place under the same
-    directory — input_signature folds the file listing (name, size,
-    mtime) into the first stage's fingerprint."""
-    import os
-
+    directory — input_signature folds the documents table's file listing
+    (name, size, mtime) into the first stage's fingerprint. The chain
+    reads no other table, so touching a sibling table reuses every
+    stage."""
     src = str(tmp_path / "corpus")
     os.makedirs(src)
-    doc_table = f"{src}/documents.parquet"
+    doc_table, sibling = f"{src}/documents.parquet", f"{src}/region.parquet"
     shutil.copy(f"{sf_dir}/documents.parquet", doc_table)
+    shutil.copy(f"{sf_dir}/region.parquet", sibling)
     root = str(tmp_path / "cp")
     first = run_checkpointed_extraction(spark, src, root)
     n = first["triples"].count()
+    os.utime(sibling, ns=(1, 1))
     second = run_checkpointed_extraction(spark, src, root)
-    assert second["_pipeline"].reused("spans")
+    assert all(second["_pipeline"].reused(name) for name in CHECKPOINTED)
     # "regenerate" the corpus in place: same path, new file mtime
     os.utime(doc_table, ns=(1, 1))
     third = run_checkpointed_extraction(spark, src, root)
-    assert not third["_pipeline"].reused("spans")
+    assert not any(third["_pipeline"].reused(name) for name in CHECKPOINTED)
     assert third["triples"].count() == n
+
+
+def test_checkpoint_stage_files_are_aqe_sized(spark, sf_dir, tmp_path):
+    """Stage checkpoints are rebalanced before the write, so AQE sizes
+    the files instead of writing one per shuffle partition; the
+    manifest's row count still matches what reads back."""
+    root = str(tmp_path / "cp")
+    run_checkpointed_extraction(spark, sf_dir, root)
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for name in CHECKPOINTED:
+        data = f"{root}/{name}/data"
+        parts = [f for f in os.listdir(data) if f.startswith("part-")]
+        assert 0 < len(parts) < shuffle_partitions, (name, parts)
+        manifest = json.load(open(f"{root}/{name}/manifest.json"))
+        assert manifest["rows"] == spark.read.parquet(data).count()
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
