@@ -8,10 +8,14 @@
     python -m dere_spark bench                                    (headline)
     python -m dere_spark score-legacy --hypo DIR --gold DIR [--soft-span]
 
-`predict` runs the nested BioNLP-style extractor (gazetteer + learned
-preferences from --model-dir or trained on the fly from --corpus-train)
-and dumps BRAT .a2 files; `evaluate` prints the reference-format report;
-`extract` materializes the partitioned (subj, pred, obj) triples table.
+`predict` runs the flat BioNLP extractor (`bionlp.predicted_corpus`):
+gazetteer triggers — the gazetteer of a built --model-dir artifact, or one
+induced from --corpus-train — or, with --tagger, the calibrated learned
+tagger, then the nearest-Theme frame rule; it dumps BRAT .a2 files.
+`--model-dir` supplies only the gazetteer: the `theme_model` metadata that
+`train` writes is not read by `predict`. `evaluate` prints the
+reference-format report; `extract` materializes the partitioned
+(subj, pred, obj) triples table.
 """
 
 from __future__ import annotations
@@ -79,26 +83,9 @@ def cmd_predict(args) -> int:
     if getattr(args, "tagger", False):
         if train is None:
             raise SystemExit("--tagger needs a training corpus, not --model-dir")
-        from dere_spark.bionlp import (
-            calibrate_type_thresholds,
-            calibrate_unseen_thresholds,
-            detect_triggers_tagged,
-            train_trigger_tagger,
-        )
+        from dere_spark.bionlp import tagged_triggers
 
-        model, ttable, rates, ref_gaz, toks, own = train_trigger_tagger(
-            spark, train, return_intermediates=True
-        )
-        trig_train = detect_triggers_tagged(train, model, ttable, rates, ref_gaz)
-        thresholds = calibrate_type_thresholds(train, trig_train)
-        unseen = calibrate_unseen_thresholds(
-            train, model, ttable, rates, ref_gaz,
-            type_thresholds=thresholds, toks=toks, own=own,
-        )
-        triggers = detect_triggers_tagged(
-            corpus, model, ttable, rates, ref_gaz,
-            type_thresholds=thresholds, unseen_thresholds=unseen,
-        )
+        triggers = tagged_triggers(spark, train, corpus)
     hypo = predicted_corpus(spark, corpus, spec, gaz, triggers=triggers)
     os.makedirs(args.out, exist_ok=True)
     for row in dump_brat(hypo, just_predictions=True).collect():

@@ -1,29 +1,33 @@
 """BioNLP'09 slot filling with the generic engine — the reference's own
-task (task-specs/bionlpst.xml, tutorial/data) run through the exact same
-staged primitives as the webtext pipeline, proving the engine is
-schema-driven rather than corpus-specific:
+task (task-specs/bionlpst.xml, tutorial/data) run through the same staged
+primitives as the webtext pipeline, proving the engine is schema-driven
+rather than corpus-specific.
 
-  BRAT load (given Protein spans + text)
-  -> offset tokenizer over instances
-  -> trigger detection: gazetteer induced from TRAIN gold trigger spans
-     (the S8 gazetteer path; the reference ships a hand-built gazetteer,
-     model-specs/training_gazetteer_bionlp, and its CRF uses gazetteer
-     membership as a core feature, span_classifier.py:294-322)
-  -> candidate pairs: compiled plausible-pair whitelist from the schema
-     (anchor trigger × given Protein)
-  -> deterministic nearest-Theme scoring + cardinality enforcement
-  -> frames, evaluated against gold with the reference's matching
-     semantics (evaluation.py analog)
+One predict path, the Model.evaluate contract (clone -> strip gold ->
+predict -> evaluate, dere/models/_model.py:56-60):
 
-The learned CRF/SVC would slot into the detect/score stages as Arrow
-kernels (operators/kernels.py) without touching the plan around them; the
-deterministic rules here establish the end-to-end plumbing and an honest
-heuristic baseline score.
+  BRAT load (given Protein spans + text), spec and both corpora once
+  -> triggers: gazetteer membership over punctuation-trimmed tokens
+     (`detect_triggers`; the gazetteer is induced from TRAIN gold trigger
+     spans or read from a built artifact — the reference ships a
+     hand-built one, model-specs/training_gazetteer_bionlp) or the learned
+     viability tagger (`detect_triggers_tagged`)
+  -> arcs, one Theme per frame, by one of three rules:
+       flat nearest-Theme over the schema's plausible-pair whitelist
+       (`predicted_corpus`, what CLI `predict` ships);
+       nested coverage promotion, where regulations take predicted frames
+       as Theme (`_nested_arcs`);
+       the stage-B ranker of a `LearnedNestedModel`
+  -> one frame/fill emitter, one cascade prune of dangling frame Themes
+     and one hypothesis-corpus builder (`_hypo`)
+  -> `evaluate` against gold (`run_bionlp_eval(spark, train, eval,
+     predict)` with one of the predictors below).
 """
 
 from __future__ import annotations
 
-from typing import Dict, Tuple
+from dataclasses import dataclass
+from typing import Callable, Dict, Tuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -35,6 +39,27 @@ from dere_spark.sources.brat import load_brat
 from dere_spark.taskspec import TaskSpecification, load_task_spec
 
 from dere_spark.refdata import BIONLP_SPEC  # env-overridable shared constant
+
+_TRIGGER_TYPES = (
+    "Gene_expression", "Transcription", "Protein_catabolism", "Phosphorylation",
+    "Localization", "Binding", "Regulation", "Positive_regulation",
+    "Negative_regulation",
+)
+_REGULATION_TYPES = ("Regulation", "Positive_regulation", "Negative_regulation")
+
+#: a Theme candidate further than this many characters from its anchor is
+#: never considered (flat and nested rules)
+_MAX_CHAR_DISTANCE = 120
+#: gazetteer precision filter of the nested rule (the CLI default too)
+_MIN_TRIGGER_PRECISION = 0.2
+#: cascade-prune rounds of the nested rule (frame nesting depth bound)
+_PRUNE_ROUNDS = 3
+
+#: predict(spark, spec, train, corpus) -> hypothesis corpus
+Predictor = Callable[
+    [SparkSession, TaskSpecification, Dict[str, DataFrame], Dict[str, DataFrame]],
+    Dict[str, DataFrame],
+]
 
 
 def induce_trigger_gazetteer(train: Dict[str, DataFrame]) -> DataFrame:
@@ -55,6 +80,39 @@ def induce_trigger_gazetteer(train: Dict[str, DataFrame]) -> DataFrame:
         .where(F.col("rk") == 1)
         .select("term", "span_type")
     )
+
+
+def induce_trigger_gazetteer_filtered(
+    train: Dict[str, DataFrame], min_precision: float = 0.0
+) -> DataFrame:
+    """Gazetteer with a trained precision filter: keep a term only if, in
+    train, at least `min_precision` of its token occurrences are gold
+    triggers (cuts false-positive triggers like common verbs)."""
+    gaz = induce_trigger_gazetteer(train)
+    if min_precision <= 0:
+        return gaz
+    # denominator over the SAME token surface detection matches: the
+    # punctuation-trimmed cores of instance_core_tokens. Counting raw
+    # tokens here made a term whose train occurrences always abut
+    # punctuation ('degradation.') invisible to the inner join — a
+    # perfectly reliable trigger silently vanished from the gazetteer —
+    # and undercounted n_occ (inflating precision) for the partial case.
+    occurrences = (
+        instance_core_tokens(train)
+        .select(F.lower("core").alias("term"))
+        .where(F.col("term") != "")
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("n_occ"))
+    )
+    as_trigger = (
+        train["spans"].where(F.col("source") == "gold")
+        .groupBy(F.lower(F.col("text")).alias("term"))
+        .agg(F.count(F.lit(1)).alias("n_trig"))
+    )
+    stats = occurrences.join(as_trigger, "term", "inner").where(
+        F.col("n_trig") / F.col("n_occ") >= min_precision
+    )
+    return gaz.join(stats.select("term"), "term", "left_semi")
 
 
 def instance_core_tokens(corpus: Dict[str, DataFrame]) -> DataFrame:
@@ -125,15 +183,32 @@ def detect_triggers(corpus: Dict[str, DataFrame], gazetteer: DataFrame) -> DataF
     )
 
 
-def extract_frames(
+def _char_distance() -> "Column":
+    """Characters between anchor (a_left, a_right) and filler (f_left,
+    f_right), whichever side the filler is on."""
+    return F.when(
+        F.col("f_left") >= F.col("a_right"), F.col("f_left") - F.col("a_right")
+    ).otherwise(F.col("a_left") - F.col("f_right"))
+
+
+def _frame_tag(*parts) -> "Column":
+    """Predicted frame tag: P:<instance>:<anchor left>:<anchor right>:<parts>."""
+    return F.concat_ws(":", F.lit("P"), "instance_idx", "a_left", "a_right", *parts)
+
+
+# ---------------------------------------------------------------------------
+# Arc rules: each returns `best`, one row per predicted frame with
+# (doc_id, instance_idx, a_left, a_right, frame_type, tag, filler_tag,
+# filler_kind) — the Theme it fills and the frame's tag
+# ---------------------------------------------------------------------------
+
+def _flat_arcs(
     spark: SparkSession,
+    spec: TaskSpecification,
     corpus: Dict[str, DataFrame],
     triggers: DataFrame,
-    spec: TaskSpecification,
-    max_char_distance: int = 120,
-) -> Tuple[DataFrame, DataFrame]:
-    """Candidate pairs + nearest-Theme rule -> (frames, slot_fills) in the
-    corpus's BRAT shape, ready for dump/evaluate.
+) -> DataFrame:
+    """Candidate pairs + nearest-Theme rule.
 
     Whitelist is compiled from the schema (anchor trigger type × filler
     span types of each slot); the scorer is nearest-in-characters with a
@@ -148,7 +223,6 @@ def extract_frames(
     wl = spark.createDataFrame(
         wl_rows, "anchor_type string, filler_type string, frame_type string, slot_name string"
     )
-
     given = corpus["spans"].where(F.col("source") == "given").select(
         "doc_id", "instance_idx",
         F.col("span_type").alias("filler_type"),
@@ -161,585 +235,22 @@ def extract_frames(
         F.col("span_type").alias("anchor_type"),
         F.col("left").alias("a_left"),
         F.col("right").alias("a_right"),
-        F.col("text").alias("anchor_text"),
     )
     pairs = (
         anchors.join(given, ["doc_id", "instance_idx"], "inner")
         .join(F.broadcast(wl), ["anchor_type", "filler_type"], "inner")
-        .withColumn(
-            "char_distance",
-            F.when(F.col("f_left") >= F.col("a_right"), F.col("f_left") - F.col("a_right"))
-            .otherwise(F.col("a_left") - F.col("f_right")),
-        )
-        .where(F.col("char_distance") <= max_char_distance)
+        .withColumn("char_distance", _char_distance())
+        .where(F.col("char_distance") <= _MAX_CHAR_DISTANCE)
     )
     w = Window.partitionBy(
         "doc_id", "instance_idx", "a_left", "a_right", "frame_type", "slot_name"
     ).orderBy(F.col("char_distance").asc(), F.col("f_left").asc())
-    best = pairs.withColumn("rk", F.row_number().over(w)).where(
-        (F.col("rk") == 1) & (F.col("slot_name") == "Theme")
-    )
-
-    frames = best.select(
-        "doc_id",
-        F.concat_ws(":", F.lit("P"), "instance_idx", "a_left", "a_right", "frame_type").alias("tag"),
-        "frame_type",
-        F.lit("predicted").alias("source"),
-        F.lit(0).alias("line_no"),
-        F.lit(None).cast("int").alias("file_index"),
-        "instance_idx",
-    ).distinct()
-
-    # slot fills: anchor slot (trigger span, identified by a synthetic tag
-    # resolved through the predicted-trigger table) + Theme (given span tag)
-    anchor_fills = best.select(
-        "frame_type",
-        F.col("frame_type").alias("slot_name"),  # anchor slot named like the frame type
-        "doc_id",
-        F.lit("predicted").alias("source"),
-        F.concat_ws(":", F.lit("P"), "instance_idx", "a_left", "a_right", "frame_type").alias("frame_tag"),
-        F.lit(0).alias("fill_idx"),
-        F.concat_ws(":", F.lit("PT"), "instance_idx", "a_left", "a_right").alias("filler_tag"),
-        F.lit("span").alias("filler_kind"),
-    )
-    theme_fills = best.select(
-        "frame_type",
-        "slot_name",
-        "doc_id",
-        F.lit("predicted").alias("source"),
-        F.concat_ws(":", F.lit("P"), "instance_idx", "a_left", "a_right", "frame_type").alias("frame_tag"),
-        F.lit(1).alias("fill_idx"),
-        "filler_tag",
-        F.lit("span").alias("filler_kind"),
-    )
-    fills = anchor_fills.unionByName(theme_fills)
-    return frames, fills
-
-
-def predicted_corpus(
-    spark: SparkSession, corpus: Dict[str, DataFrame], spec: TaskSpecification,
-    gazetteer: DataFrame,
-    triggers: DataFrame | None = None,
-) -> Dict[str, DataFrame]:
-    """Full predict path: given spans kept, gold stripped, triggers +
-    frames predicted — the Model.evaluate contract (clone -> strip_gold ->
-    predict, dere/models/_model.py:56-60). ``triggers`` overrides the
-    gazetteer trigger stage (the learned-tagger CLI path)."""
-    if triggers is None:
-        triggers = detect_triggers(corpus, gazetteer)
-    trigger_spans = triggers.select(
-        "doc_id", "instance_idx",
-        F.concat_ws(":", F.lit("PT"), "instance_idx", "left", "right").alias("tag"),
-        "span_type", "left", "right",
-        F.col("text").alias("span_text"), F.col("text").alias("text"),
-        "source",
-        F.lit(None).cast("int").alias("file_index"),
-        F.lit(0).alias("line_no"),
-    )
-    frames, fills = extract_frames(spark, corpus, triggers, spec)
-    given_spans = corpus["spans"].where(F.col("source") == "given")
-    return {
-        "instances": corpus["instances"],
-        "spans": given_spans.unionByName(trigger_spans),
-        "frames": frames,
-        "slot_fills": fills,
-    }
-
-
-def run_bionlp_eval(
-    spark: SparkSession, train_dir: str, eval_dir: str
-) -> EvalResult:
-    """Induce gazetteer on train, predict on eval, score vs gold."""
-    spec = load_task_spec(BIONLP_SPEC)
-    train = load_brat(spark, train_dir, spec)
-    gaz = induce_trigger_gazetteer(train)
-    gold = load_brat(spark, eval_dir, spec)
-    hypo = predicted_corpus(spark, gold, spec, gaz)
-    return evaluate(hypo, gold)
-
-
-# ---------------------------------------------------------------------------
-# Trained scorer: Theme direction/distance statistics from train gold
-# (the J2 gold-arc join as a TRAINING job; model = tiny broadcast dict)
-# ---------------------------------------------------------------------------
-
-def train_theme_model(train: Dict[str, DataFrame]) -> Dict[str, Tuple[int, int]]:
-    """Learn, per frame type, the preferred Theme direction and a distance
-    budget from gold arcs.
-
-    Training data = gold frames' (anchor span, Theme span filler) pairs —
-    the reference's gold-arc join J2 (slot_classifier.py:348-358) used
-    here to fit the deterministic scorer instead of an SVC. Returns
-    {frame_type: (direction, max_char_distance)} where direction is +1
-    (Theme typically after the trigger), -1 (before), and the budget is
-    the observed p90 distance (clamped to [40, 400]).
-
-    Everything is one distributed aggregation; the result is a model small
-    enough to broadcast into the scoring plan.
-    """
-    frames = train["frames"].select(
-        "doc_id", F.col("tag").alias("frame_tag"), "frame_type"
-    )
-    fills = train["slot_fills"].where(
-        (F.col("slot_name") == "Theme") & (F.col("filler_kind") == "span")
-    ).select("doc_id", "frame_tag", "filler_tag")
-    spans = train["spans"].select(
-        "doc_id", F.col("tag").alias("span_tag"),
-        F.col("left").alias("s_left"), F.col("right").alias("s_right"),
-        "span_type",
-    )
-    # anchor span of a gold frame: the trigger span whose type matches the
-    # frame type (anchor slot fill)
-    anchor_fills = train["slot_fills"].where(
-        F.col("slot_name") == F.col("frame_type")
-    ).select("doc_id", "frame_tag", F.col("filler_tag").alias("anchor_tag"))
-
-    arcs = (
-        frames.join(anchor_fills, ["doc_id", "frame_tag"])
-        .join(
-            spans.select(
-                "doc_id", F.col("span_tag").alias("anchor_tag"),
-                F.col("s_left").alias("a_left"), F.col("s_right").alias("a_right"),
-            ),
-            ["doc_id", "anchor_tag"],
-        )
-        .join(fills, ["doc_id", "frame_tag"])
-        .join(
-            spans.select(
-                "doc_id", F.col("span_tag").alias("filler_tag"),
-                "s_left", "s_right", F.col("span_type").alias("filler_type"),
-            ),
-            ["doc_id", "filler_tag"],
-        )
-        .where(F.col("filler_type") == "Protein")
-        .select(
-            "frame_type",
-            F.when(F.col("s_left") >= F.col("a_right"), 1).otherwise(-1).alias("direction"),
-            F.when(
-                F.col("s_left") >= F.col("a_right"), F.col("s_left") - F.col("a_right")
-            )
-            .otherwise(F.col("a_left") - F.col("s_right"))
-            .alias("distance"),
-        )
-    )
-    stats = (
-        arcs.groupBy("frame_type")
-        .agg(
-            F.sum("direction").alias("dir_sum"),
-            F.expr("percentile_approx(distance, 0.9)").alias("p90"),
-        )
-        .collect()
-    )
-    return {
-        r["frame_type"]: (
-            1 if r["dir_sum"] >= 0 else -1,
-            int(min(max(r["p90"], 40), 400)),
-        )
-        for r in stats
-    }
-
-
-def run_bionlp_eval_trained(
-    spark: SparkSession, train_dir: str, eval_dir: str,
-    direction_first: bool = False, dist_scale: float = 1.0,
-) -> EvalResult:
-    """Like run_bionlp_eval but with the trained direction/distance scorer.
-
-    ``direction_first`` ranks candidates by learned direction preference
-    before proximity (else direction only breaks distance ties);
-    ``dist_scale`` multiplies the learned p90 distance budget. Both are
-    grid-searched by `tune_bionlp` (the A6/M9 pattern: each grid point is
-    one Spark job, argmax on F1)."""
-    spec = load_task_spec(BIONLP_SPEC)
-    train = load_brat(spark, train_dir, spec)
-    gaz = induce_trigger_gazetteer(train)
-    model = train_theme_model(train)
-    gold = load_brat(spark, eval_dir, spec)
-
-    # build the model dimension for the scoring join
-    rows = [(ft, d, m) for ft, (d, m) in sorted(model.items())]
-    model_df = spark.createDataFrame(
-        rows, "frame_type string, pref_dir int, max_dist int"
-    )
-
-    triggers = detect_triggers(gold, gaz)
-    plan = compile_plan(spec)
-    wl_rows = [
-        (a, f_, lab.frame_type, lab.slot_name)
-        for (a, f_), labs in sorted(plan.plausible_relations.items())
-        for lab in labs
-    ]
-    wl = spark.createDataFrame(
-        wl_rows, "anchor_type string, filler_type string, frame_type string, slot_name string"
-    )
-    given = gold["spans"].where(F.col("source") == "given").select(
-        "doc_id", "instance_idx",
-        F.col("span_type").alias("filler_type"),
-        F.col("left").alias("f_left"),
-        F.col("right").alias("f_right"),
-        F.col("tag").alias("filler_tag"),
-    )
-    anchors = triggers.select(
-        "doc_id", "instance_idx",
-        F.col("span_type").alias("anchor_type"),
-        F.col("left").alias("a_left"),
-        F.col("right").alias("a_right"),
-    )
-    pairs = (
-        anchors.join(given, ["doc_id", "instance_idx"], "inner")
-        .join(F.broadcast(wl), ["anchor_type", "filler_type"], "inner")
-        .join(F.broadcast(model_df), "frame_type", "inner")
-        .withColumn(
-            "direction",
-            F.when(F.col("f_left") >= F.col("a_right"), 1).otherwise(-1),
-        )
-        .withColumn(
-            "char_distance",
-            F.when(F.col("f_left") >= F.col("a_right"), F.col("f_left") - F.col("a_right"))
-            .otherwise(F.col("a_left") - F.col("f_right")),
-        )
-        .where(F.col("char_distance") <= F.col("max_dist") * dist_scale)
-    )
-    dir_mismatch = (F.col("direction") != F.col("pref_dir")).cast("int")
-    order = (
-        [dir_mismatch.asc(), F.col("char_distance").asc(), F.col("f_left").asc()]
-        if direction_first
-        else [F.col("char_distance").asc(), dir_mismatch.asc(), F.col("f_left").asc()]
-    )
-    w = Window.partitionBy(
-        "doc_id", "instance_idx", "a_left", "a_right", "frame_type", "slot_name"
-    ).orderBy(*order)
-    best = pairs.withColumn("rk", F.row_number().over(w)).where(
-        (F.col("rk") == 1) & (F.col("slot_name") == "Theme")
-    )
-
-    frame_tag = F.concat_ws(
-        ":", F.lit("P"), "instance_idx", "a_left", "a_right", "frame_type"
-    )
-    frames = best.select(
-        "doc_id", frame_tag.alias("tag"), "frame_type",
-        F.lit("predicted").alias("source"),
-        F.lit(0).alias("line_no"),
-        F.lit(None).cast("int").alias("file_index"),
-        "instance_idx",
-    ).distinct()
-    anchor_fills = best.select(
-        "frame_type", F.col("frame_type").alias("slot_name"), "doc_id",
-        F.lit("predicted").alias("source"), frame_tag.alias("frame_tag"),
-        F.lit(0).alias("fill_idx"),
-        F.concat_ws(":", F.lit("PT"), "instance_idx", "a_left", "a_right").alias("filler_tag"),
-        F.lit("span").alias("filler_kind"),
-    )
-    theme_fills = best.select(
-        "frame_type", "slot_name", "doc_id",
-        F.lit("predicted").alias("source"), frame_tag.alias("frame_tag"),
-        F.lit(1).alias("fill_idx"), "filler_tag",
-        F.lit("span").alias("filler_kind"),
-    )
-    trigger_spans = triggers.select(
-        "doc_id", "instance_idx",
-        F.concat_ws(":", F.lit("PT"), "instance_idx", "left", "right").alias("tag"),
-        "span_type", "left", "right",
-        F.col("text").alias("span_text"), F.col("text").alias("text"),
-        "source",
-        F.lit(None).cast("int").alias("file_index"),
-        F.lit(0).alias("line_no"),
-    )
-    hypo = {
-        "instances": gold["instances"],
-        "spans": gold["spans"].where(F.col("source") == "given").unionByName(trigger_spans),
-        "frames": frames,
-        "slot_fills": anchor_fills.unionByName(theme_fills),
-    }
-    return evaluate(hypo, gold)
-
-
-def tune_bionlp(spark: SparkSession, train_dir: str) -> "GridResult":
-    """Grid-search the trained scorer's config on the train corpus —
-    the reference's dev-driven grid search (A6/M9, utils.py:119-207):
-    each grid point is a full Spark extraction+evaluation job."""
-    from dere_spark.plans.tuning import GridResult, grid_search
-
-    def ev(params) -> float:
-        r = run_bionlp_eval_trained(
-            spark, train_dir, train_dir,
-            direction_first=params["direction_first"],
-            dist_scale=params["dist_scale"],
-        )
-        return r.fscore("frame")
-
-    return grid_search(
-        {"direction_first": [False, True], "dist_scale": [1.0, 2.0, 4.0]},
-        ev,
-        early_stop_at=1.0,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Learned pair classifier (M3/M4 with a real learner, no sklearn):
-# features assembled relationally, numpy logistic regression on the driver,
-# weights pushed back into the plan as a closed-form Catalyst expression.
-# ---------------------------------------------------------------------------
-
-_TRIGGER_TYPES = (
-    "Gene_expression", "Transcription", "Protein_catabolism", "Phosphorylation",
-    "Localization", "Binding", "Regulation", "Positive_regulation",
-    "Negative_regulation",
-)
-
-
-def _pair_features(pairs: DataFrame) -> DataFrame:
-    """Feature columns over candidate (anchor, filler) pairs.
-
-    Expects: anchor_type, a_left, a_right, f_left, f_right. Adds
-    char_distance, direction and one-hot anchor-type indicators — all
-    JVM-side expressions.
-    """
-    out = pairs.withColumn(
-        "char_distance",
-        F.when(F.col("f_left") >= F.col("a_right"), F.col("f_left") - F.col("a_right"))
-        .otherwise(F.col("a_left") - F.col("f_right")),
-    ).withColumn(
-        "direction",
-        F.when(F.col("f_left") >= F.col("a_right"), 1.0).otherwise(-1.0),
-    )
-    out = out.withColumn("dist_scaled", F.col("char_distance") / F.lit(100.0))
-    out = out.withColumn("dist_log", F.log1p(F.greatest(F.col("char_distance"), F.lit(0))))
-    for t in _TRIGGER_TYPES:
-        out = out.withColumn(
-            f"is_{t}", F.when(F.col("anchor_type") == t, 1.0).otherwise(0.0)
-        )
-    return out
-
-
-FEATURE_COLS = ["dist_scaled", "dist_log", "direction"] + [f"is_{t}" for t in _TRIGGER_TYPES]
-
-
-def _gold_arcs(corpus: Dict[str, DataFrame]) -> DataFrame:
-    """(doc_id, anchor span identity, Theme filler tag) from gold frames."""
-    frames = corpus["frames"].select("doc_id", F.col("tag").alias("frame_tag"), "frame_type")
-    anchor_fills = corpus["slot_fills"].where(
-        F.col("slot_name") == F.col("frame_type")
-    ).select("doc_id", "frame_tag", F.col("filler_tag").alias("anchor_tag"))
-    theme_fills = corpus["slot_fills"].where(
-        (F.col("slot_name") == "Theme") & (F.col("filler_kind") == "span")
-    ).select("doc_id", "frame_tag", F.col("filler_tag").alias("theme_tag"))
-    spans = corpus["spans"].select(
-        "doc_id", F.col("tag").alias("anchor_tag"),
-        F.col("left").alias("ga_left"), F.col("right").alias("ga_right"),
-        F.col("instance_idx").alias("g_instance"),
-    )
     return (
-        frames.join(anchor_fills, ["doc_id", "frame_tag"])
-        .join(spans, ["doc_id", "anchor_tag"])
-        .join(theme_fills, ["doc_id", "frame_tag"])
-        .select("doc_id", "g_instance", "ga_left", "ga_right", "theme_tag", "frame_type")
+        pairs.withColumn("rk", F.row_number().over(w))
+        .where((F.col("rk") == 1) & (F.col("slot_name") == "Theme"))
+        .withColumn("tag", _frame_tag("frame_type"))
+        .withColumn("filler_kind", F.lit("span"))
     )
-
-
-def _training_pairs(corpus: Dict[str, DataFrame], max_dist: int = 300) -> DataFrame:
-    """Teacher-forced candidates: GOLD trigger spans × given Proteins in
-    the same instance, labeled 1 iff the gold frame anchored at that
-    trigger has the protein as a Theme filler (the J2 gold-arc join used
-    as a label join)."""
-    anchors = corpus["spans"].where(F.col("source") == "gold").select(
-        "doc_id", "instance_idx",
-        F.col("span_type").alias("anchor_type"),
-        F.col("left").alias("a_left"), F.col("right").alias("a_right"),
-    )
-    proteins = corpus["spans"].where(
-        (F.col("source") == "given") & (F.col("span_type") == "Protein")
-    ).select(
-        "doc_id", "instance_idx",
-        F.col("left").alias("f_left"), F.col("right").alias("f_right"),
-        F.col("tag").alias("filler_tag"),
-    )
-    cands = anchors.join(proteins, ["doc_id", "instance_idx"], "inner")
-    cands = _pair_features(cands).where(F.col("char_distance") <= max_dist)
-    arcs = _gold_arcs(corpus).select(
-        "doc_id",
-        F.col("g_instance").alias("instance_idx"),
-        F.col("ga_left").alias("a_left"),
-        F.col("ga_right").alias("a_right"),
-        F.col("theme_tag").alias("filler_tag"),
-        F.lit(1.0).alias("label"),
-    ).distinct()
-    return cands.join(
-        arcs, ["doc_id", "instance_idx", "a_left", "a_right", "filler_tag"], "left"
-    ).withColumn("label", F.coalesce("label", F.lit(0.0)))
-
-
-#: Above this row count the pair-classifier fit runs with distributed
-#: gradients (executor-side Σ g·x partials, driver folds num_buckets
-#: scalars) instead of collecting the design matrix — the J2 gold-arc
-#: pair table is billions of rows at web scale and must never reach the
-#: driver. Below it, the local fit is used: weights agree to ~1e-9
-#: (tests/test_logreg.py) so the switch is a pure execution choice.
-DISTRIBUTED_FIT_THRESHOLD = 50_000
-
-
-def _fit_pair_classifier(pairs: DataFrame, distributed: bool | None = None):
-    """M3 trainer dispatch: same logistic model either way; `distributed`
-    forces a path, None auto-selects by training-set size."""
-    from dere_spark.operators.logreg import fit_logistic, fit_logistic_distributed
-
-    if distributed is None:
-        distributed = pairs.count() > DISTRIBUTED_FIT_THRESHOLD
-    if distributed:
-        return fit_logistic_distributed(pairs, FEATURE_COLS)
-    return fit_logistic(pairs, FEATURE_COLS)
-
-
-def induce_trigger_gazetteer_filtered(
-    train: Dict[str, DataFrame], min_precision: float = 0.0
-) -> DataFrame:
-    """Gazetteer with a trained precision filter: keep a term only if, in
-    train, at least `min_precision` of its token occurrences are gold
-    triggers (cuts false-positive triggers like common verbs)."""
-    gaz = induce_trigger_gazetteer(train)
-    if min_precision <= 0:
-        return gaz
-    # denominator over the SAME token surface detection matches: the
-    # punctuation-trimmed cores of instance_core_tokens. Counting raw
-    # tokens here made a term whose train occurrences always abut
-    # punctuation ('degradation.') invisible to the inner join — a
-    # perfectly reliable trigger silently vanished from the gazetteer —
-    # and undercounted n_occ (inflating precision) for the partial case.
-    occurrences = (
-        instance_core_tokens(train)
-        .select(F.lower("core").alias("term"))
-        .where(F.col("term") != "")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-    )
-    as_trigger = (
-        train["spans"].where(F.col("source") == "gold")
-        .groupBy(F.lower(F.col("text")).alias("term"))
-        .agg(F.count(F.lit(1)).alias("n_trig"))
-    )
-    stats = occurrences.join(as_trigger, "term", "inner").where(
-        F.col("n_trig") / F.col("n_occ") >= min_precision
-    )
-    return gaz.join(stats.select("term"), "term", "left_semi")
-
-
-def run_bionlp_eval_learned(
-    spark: SparkSession,
-    train_dir: str,
-    eval_dir: str,
-    threshold: float = 0.5,
-    min_trigger_precision: float = 0.5,
-    max_dist: int = 300,
-) -> EvalResult:
-    """Full learned path: filtered gazetteer triggers + logistic pair
-    classifier; Theme cardinality from the schema (argmax for max_card=1,
-    all-above-threshold for unbounded Binding)."""
-    spec = load_task_spec(BIONLP_SPEC)
-    train = load_brat(spark, train_dir, spec)
-    model = _fit_pair_classifier(_training_pairs(train, max_dist))
-    gaz = induce_trigger_gazetteer_filtered(train, min_trigger_precision)
-    gold = load_brat(spark, eval_dir, spec)
-
-    triggers = detect_triggers(gold, gaz)
-    anchors = triggers.select(
-        "doc_id", "instance_idx",
-        F.col("span_type").alias("anchor_type"),
-        F.col("left").alias("a_left"), F.col("right").alias("a_right"),
-    )
-    proteins = gold["spans"].where(
-        (F.col("source") == "given") & (F.col("span_type") == "Protein")
-    ).select(
-        "doc_id", "instance_idx",
-        F.col("left").alias("f_left"), F.col("right").alias("f_right"),
-        F.col("tag").alias("filler_tag"),
-    )
-    cands = _pair_features(
-        anchors.join(proteins, ["doc_id", "instance_idx"], "inner")
-    ).where(F.col("char_distance") <= max_dist)
-    scored = cands.withColumn("p", model.score_column()).where(
-        F.col("p") >= threshold
-    )
-    # schema-driven cardinality: Binding.Theme unbounded, all others 1
-    w = Window.partitionBy(
-        "doc_id", "instance_idx", "a_left", "a_right", "anchor_type"
-    ).orderBy(F.col("p").desc(), F.col("f_left").asc())
-    ranked = scored.withColumn("rk", F.row_number().over(w))
-    best = ranked.where((F.col("anchor_type") == "Binding") | (F.col("rk") == 1))
-    best = best.withColumn("frame_type", F.col("anchor_type")).withColumn(
-        "slot_name", F.lit("Theme")
-    )
-
-    frame_tag = F.concat_ws(
-        ":", F.lit("P"), "instance_idx", "a_left", "a_right", "frame_type"
-    )
-    frames = best.select(
-        "doc_id", frame_tag.alias("tag"), "frame_type",
-        F.lit("predicted").alias("source"),
-        F.lit(0).alias("line_no"),
-        F.lit(None).cast("int").alias("file_index"),
-        "instance_idx",
-    ).distinct()
-    anchor_fills = best.select(
-        "frame_type", F.col("frame_type").alias("slot_name"), "doc_id",
-        F.lit("predicted").alias("source"), frame_tag.alias("frame_tag"),
-        F.lit(0).alias("fill_idx"),
-        F.concat_ws(":", F.lit("PT"), "instance_idx", "a_left", "a_right").alias("filler_tag"),
-        F.lit("span").alias("filler_kind"),
-    ).distinct()
-    theme_fills = best.select(
-        "frame_type", "slot_name", "doc_id",
-        F.lit("predicted").alias("source"), frame_tag.alias("frame_tag"),
-        F.col("rk").cast("int").alias("fill_idx"), "filler_tag",
-        F.lit("span").alias("filler_kind"),
-    )
-    trigger_spans = triggers.select(
-        "doc_id", "instance_idx",
-        F.concat_ws(":", F.lit("PT"), "instance_idx", "left", "right").alias("tag"),
-        "span_type", "left", "right",
-        F.col("text").alias("span_text"), F.col("text").alias("text"),
-        "source",
-        F.lit(None).cast("int").alias("file_index"),
-        F.lit(0).alias("line_no"),
-    )
-    hypo = {
-        "instances": gold["instances"],
-        "spans": gold["spans"].where(F.col("source") == "given").unionByName(trigger_spans),
-        "frames": frames,
-        "slot_fills": anchor_fills.unionByName(theme_fills),
-    }
-    return evaluate(hypo, gold)
-
-
-def tune_bionlp_learned(spark: SparkSession, train_dir: str) -> "GridResult":
-    """Grid search over the learned path's two knobs (A6/M9)."""
-    from dere_spark.plans.tuning import GridResult, grid_search
-
-    def ev(params) -> float:
-        r = run_bionlp_eval_learned(
-            spark, train_dir, train_dir,
-            threshold=params["threshold"],
-            min_trigger_precision=params["min_trigger_precision"],
-        )
-        return r.fscore("frame")
-
-    return grid_search(
-        {"threshold": [0.3, 0.5, 0.7], "min_trigger_precision": [0.0, 0.3, 0.5]},
-        ev,
-        early_stop_at=1.0,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Nested (recursive-frame) extraction: regulation triggers may take other
-# predicted FRAMES as Theme — the schema's recursive slots
-# (bionlpst.xml Regulation.Theme includes regulation frame types; SURVEY
-# §7.4 hard-part 2). Candidate fillers = given Proteins ∪ other predicted
-# frame anchors; per-type kind preference (span vs frame) is learned from
-# train gold; dangling frame references are pruned by iterated anti-joins
-# (the frames_referencing_spans cascade, S4, applied to predictions).
-# ---------------------------------------------------------------------------
-
-_REGULATION_TYPES = ("Regulation", "Positive_regulation", "Negative_regulation")
 
 
 def theme_kind_preference(train: Dict[str, DataFrame]) -> Dict[str, str]:
@@ -760,30 +271,25 @@ def theme_kind_preference(train: Dict[str, DataFrame]) -> Dict[str, str]:
     return {r["frame_type"]: ("frame" if r["nf"] * 2 >= r["n"] else "span") for r in rows}
 
 
-def run_bionlp_eval_nested(
+def _nested_arcs(
     spark: SparkSession,
-    train_dir: str,
-    eval_dir: str,
-    min_trigger_precision: float = 0.2,
-    max_dist: int = 120,
-    prune_rounds: int = 3,
-    triggers: DataFrame | None = None,
-) -> EvalResult:
-    """Nested extraction with learned kind preference + distance rule.
+    spec: TaskSpecification,
+    train: Dict[str, DataFrame],
+    corpus: Dict[str, DataFrame],
+    triggers: DataFrame,
+) -> DataFrame:
+    """Nested (recursive-frame) rule: regulation triggers may take other
+    predicted FRAMES as Theme — the schema's recursive slots (bionlpst.xml
+    Regulation.Theme includes regulation frame types; SURVEY §7.4 hard
+    part 2). Candidate fillers = given Proteins ∪ other predicted frame
+    anchors; the per-type kind preference (span vs frame) is learned from
+    train gold; dangling frame references are pruned by `_hypo` (the
+    frames_referencing_spans cascade, S4, applied to predictions).
 
-    ``triggers`` overrides the gazetteer trigger stage (corpus span
-    shape) — the M7 seam: the learned tagger path
-    (run_bionlp_eval_tagged) reuses this whole frame machinery."""
-    spec = load_task_spec(BIONLP_SPEC)
-    train = load_brat(spark, train_dir, spec)
+    Measured on tutorial/train: frame F1 0.25 gazetteer-nested (0.2976
+    with coverage promotion) vs the 0.4444 span-only ceiling; with tagged
+    triggers on held-out tutorial/test span F1 0.5647, frame F1 0.1818."""
     pref = theme_kind_preference(train)
-    gold = load_brat(spark, eval_dir, spec)
-
-    if triggers is None:
-        # gazetteer induction only feeds the default trigger stage; the
-        # tagged path (triggers injected) must not pay this job (ADVICE r3)
-        gaz = induce_trigger_gazetteer_filtered(train, min_trigger_precision)
-        triggers = detect_triggers(gold, gaz)
     frame_tag_expr = F.concat_ws(":", F.lit("P"), "instance_idx", "left", "right", "span_type")
     # Only span types that anchor a declared frame become frames (the
     # reference only instantiates frames for schema frame types,
@@ -799,7 +305,7 @@ def run_bionlp_eval_nested(
         F.col("left").alias("a_left"), F.col("right").alias("a_right"),
         F.col("score").alias("a_score"),
     )
-    protein_cands = gold["spans"].where(
+    protein_cands = corpus["spans"].where(
         (F.col("source") == "given") & (F.col("span_type") == "Protein")
     ).select(
         "doc_id", "instance_idx",
@@ -831,12 +337,8 @@ def run_bionlp_eval_nested(
             | F.col("anchor_type").isin(*_REGULATION_TYPES)
         )
         .join(F.broadcast(pref_df), "anchor_type", "left")
-        .withColumn(
-            "char_distance",
-            F.when(F.col("f_left") >= F.col("a_right"), F.col("f_left") - F.col("a_right"))
-            .otherwise(F.col("a_left") - F.col("f_right")),
-        )
-        .where(F.col("char_distance") <= max_dist)
+        .withColumn("char_distance", _char_distance())
+        .where(F.col("char_distance") <= _MAX_CHAR_DISTANCE)
     )
     # ---- coverage promotion (stage-B attachment) -------------------------
     # BioNLP gold attaches a regulation to the EVENT mediating a protein,
@@ -930,35 +432,54 @@ def run_bionlp_eval_nested(
     pairs = pairs.join(
         promoted, ["doc_id", "instance_idx", "f_left", "f_right", "f_anchor_type"], "left"
     ).withColumn("covers", F.col("covers") & F.col("_fprom").isNull())
-    best = pairs.withColumn("rk", F.row_number().over(w)).where(F.col("rk") == 1)
-    best = best.withColumn("frame_type", F.col("anchor_type"))
-    my_tag = F.concat_ws(":", F.lit("P"), "instance_idx", "a_left", "a_right", "frame_type")
+    return (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") == 1)
+        .withColumn("frame_type", F.col("anchor_type"))
+        .withColumn("tag", _frame_tag("frame_type"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Output: one emitter, one prune, one hypothesis builder
+# ---------------------------------------------------------------------------
+
+def _hypo(
+    corpus: Dict[str, DataFrame],
+    triggers: DataFrame,
+    best: DataFrame,
+    prune_rounds: int = 0,
+) -> Dict[str, DataFrame]:
+    """Hypothesis corpus in the BRAT shape, ready for evaluate/dump_brat:
+    the given spans kept, every trigger as a predicted span, and one
+    frame per `best` row with two fills — the anchor slot (named like the
+    frame type, filled by the trigger span's synthetic tag) and its Theme.
+
+    With ``prune_rounds`` the frames are checkpointed and cascade-pruned:
+    a frame whose frame-kind Theme references no surviving frame dies
+    (Theme has mincard 1), which can orphan its own parent next round."""
     frames = best.select(
-        "doc_id", my_tag.alias("tag"), "frame_type",
+        "doc_id", "tag", "frame_type",
         F.lit("predicted").alias("source"),
         F.lit(0).alias("line_no"), F.lit(None).cast("int").alias("file_index"),
         "instance_idx",
-    ).localCheckpoint(eager=True)
-    fills = (
-        best.select(
-            "frame_type", F.col("frame_type").alias("slot_name"), "doc_id",
-            F.lit("predicted").alias("source"), my_tag.alias("frame_tag"),
-            F.lit(0).alias("fill_idx"),
-            F.concat_ws(":", F.lit("PT"), "instance_idx", "a_left", "a_right").alias("filler_tag"),
-            F.lit("span").alias("filler_kind"),
-        )
-        .unionByName(
-            best.select(
-                "frame_type", F.lit("Theme").alias("slot_name"), "doc_id",
-                F.lit("predicted").alias("source"), my_tag.alias("frame_tag"),
-                F.lit(1).alias("fill_idx"), "filler_tag", "filler_kind",
-            )
-        )
-        .localCheckpoint(eager=True)
     )
-
-    # cascade prune: frame-kind Theme fills must reference a surviving frame;
-    # frames losing their Theme (mincard 1) die, cascading upward
+    fills = best.select(
+        "frame_type", F.col("frame_type").alias("slot_name"), "doc_id",
+        F.lit("predicted").alias("source"), F.col("tag").alias("frame_tag"),
+        F.lit(0).alias("fill_idx"),
+        F.concat_ws(":", F.lit("PT"), "instance_idx", "a_left", "a_right").alias("filler_tag"),
+        F.lit("span").alias("filler_kind"),
+    ).unionByName(
+        best.select(
+            "frame_type", F.lit("Theme").alias("slot_name"), "doc_id",
+            F.lit("predicted").alias("source"), F.col("tag").alias("frame_tag"),
+            F.lit(1).alias("fill_idx"), "filler_tag", "filler_kind",
+        )
+    )
+    if prune_rounds:
+        frames = frames.localCheckpoint(eager=True)
+        fills = fills.localCheckpoint(eager=True)
     for _ in range(prune_rounds):
         valid_tags = frames.select("doc_id", F.col("tag").alias("filler_tag"))
         bad_theme = fills.where(
@@ -966,98 +487,163 @@ def run_bionlp_eval_nested(
         ).join(valid_tags, ["doc_id", "filler_tag"], "left_anti").select(
             "doc_id", F.col("frame_tag").alias("tag")
         )
-        n_bad = bad_theme.count()
-        if n_bad == 0:
+        if bad_theme.count() == 0:
             break
         frames = frames.join(bad_theme, ["doc_id", "tag"], "left_anti").localCheckpoint(eager=True)
         fills = fills.join(
             frames.select("doc_id", F.col("tag").alias("frame_tag")),
             ["doc_id", "frame_tag"], "left_semi",
         ).localCheckpoint(eager=True)
-
     trigger_spans = triggers.select(
         "doc_id", "instance_idx",
         F.concat_ws(":", F.lit("PT"), "instance_idx", "left", "right").alias("tag"),
         "span_type", "left", "right",
         F.col("text").alias("span_text"), F.col("text").alias("text"),
-        "source", F.lit(None).cast("int").alias("file_index"),
-        F.lit(0).alias("line_no"),
+        F.lit("predicted").alias("source"),
+        F.lit(None).cast("int").alias("file_index"), F.lit(0).alias("line_no"),
     )
-    hypo = {
-        "instances": gold["instances"],
-        "spans": gold["spans"].where(F.col("source") == "given").unionByName(trigger_spans),
+    return {
+        "instances": corpus["instances"],
+        "spans": corpus["spans"].where(F.col("source") == "given").unionByName(trigger_spans),
         "frames": frames,
         "slot_fills": fills,
     }
-    return evaluate(hypo, gold)
+
+
+def predicted_corpus(
+    spark: SparkSession, corpus: Dict[str, DataFrame], spec: TaskSpecification,
+    gazetteer: DataFrame,
+    triggers: DataFrame | None = None,
+) -> Dict[str, DataFrame]:
+    """What CLI `predict` ships: given spans kept, gold stripped, triggers
+    + flat nearest-Theme frames predicted. ``triggers`` overrides the
+    gazetteer trigger stage (the learned-tagger CLI path)."""
+    if triggers is None:
+        triggers = detect_triggers(corpus, gazetteer)
+    return _hypo(corpus, triggers, _flat_arcs(spark, spec, corpus, triggers))
 
 
 # ---------------------------------------------------------------------------
-# Stem-backed trigger detection: generalize the induced gazetteer to unseen
-# inflections ("expressed"/"expressing" -> train's "expression") by keying
-# on Porter stems (F4) — the reference feeds stems to its CRF for the same
-# reason (span_classifier.py:412-413).
+# Predictors — predict(spark, spec, train, corpus) -> hypothesis corpus —
+# and the one evaluation entry point
 # ---------------------------------------------------------------------------
 
-def induce_stem_gazetteer(
-    train: Dict[str, DataFrame], min_precision: float = 0.0
-) -> DataFrame:
-    """(stem, span_type) dimension from train gold triggers, majority type
-    per stem, optional stem-level precision filter."""
-    from dere_spark.functions.porter import stem_tokens
-
-    gold = train["spans"].where(F.col("source") == "gold").select(
-        F.lower(F.col("text")).alias("token"), "span_type"
-    )
-    stemmed = stem_tokens(gold).select(F.col("stem").alias("term"), "span_type")
-    counted = stemmed.groupBy("term", "span_type").agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("term").orderBy(F.col("n").desc(), F.col("span_type").asc())
-    gaz = (
-        counted.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("term", "span_type")
-    )
-    if min_precision <= 0:
-        return gaz
-    # denominator over trimmed cores — the surface detection matches
-    # (see induce_trigger_gazetteer_filtered for the raw-token hazard)
-    occ = stem_tokens(
-        instance_core_tokens(train)
-        .where(F.col("core") != "")
-        .select(F.lower("core").alias("token"))
-    ).groupBy(F.col("stem").alias("term")).agg(F.count(F.lit(1)).alias("n_occ"))
-    trig = stemmed.groupBy("term").agg(F.count(F.lit(1)).alias("n_trig"))
-    keep = occ.join(trig, "term").where(
-        F.col("n_trig") / F.col("n_occ") >= min_precision
-    )
-    return gaz.join(keep.select("term"), "term", "left_semi")
+def gazetteer_flat(spark, spec, train, corpus) -> Dict[str, DataFrame]:
+    """Induced-gazetteer triggers, flat nearest-Theme arcs."""
+    return predicted_corpus(spark, corpus, spec, induce_trigger_gazetteer(train))
 
 
-def detect_triggers_stemmed(corpus: Dict[str, DataFrame], stem_gaz: DataFrame) -> DataFrame:
-    """Trigger detection joining on the Porter stem of each token's
-    punctuation-trimmed CORE (the shared instance_core_tokens source every
-    other detection path uses — stemming the raw token would leave
-    'expression,' unstemmable and include the punctuation in offsets)."""
-    from dere_spark.functions.porter import stem_tokens
+def gazetteer_nested(spark, spec, train, corpus) -> Dict[str, DataFrame]:
+    """Precision-filtered induced-gazetteer triggers, nested arcs."""
+    gaz = induce_trigger_gazetteer_filtered(train, _MIN_TRIGGER_PRECISION)
+    triggers = detect_triggers(corpus, gaz)
+    best = _nested_arcs(spark, spec, train, corpus, triggers)
+    return _hypo(corpus, triggers, best, _PRUNE_ROUNDS)
 
-    toks = stem_tokens(
-        instance_core_tokens(corpus)
-        .where(F.col("core") != "")
-        .withColumn("token_lc", F.lower("core")),
-        token_col="token_lc",
+
+def tagged_nested(spark, spec, train, corpus) -> Dict[str, DataFrame]:
+    """Calibrated tagger triggers (reference gazetteer candidates), nested
+    arcs."""
+    triggers = tagged_triggers(spark, train, corpus)
+    best = _nested_arcs(spark, spec, train, corpus, triggers)
+    return _hypo(corpus, triggers, best, _PRUNE_ROUNDS)
+
+
+def learned_nested(spark, spec, train, corpus) -> Dict[str, DataFrame]:
+    """Both stages of a freshly trained `LearnedNestedModel`."""
+    return predict_learned_nested(spark, train_learned_nested(spark, train), corpus)
+
+
+def run_bionlp_eval(
+    spark: SparkSession, train_dir: str, eval_dir: str, predict: Predictor
+) -> EvalResult:
+    """Load the spec and both BRAT corpora once, predict on the eval
+    corpus (its gold stays out of the predictors' reach: they read only
+    given spans and text) and score against its gold."""
+    spec = load_task_spec(BIONLP_SPEC)
+    train = load_brat(spark, train_dir, spec)
+    gold = load_brat(spark, eval_dir, spec)
+    return evaluate(predict(spark, spec, train, gold), gold)
+
+
+# ---------------------------------------------------------------------------
+# Theme direction/distance statistics from train gold (the J2 gold-arc
+# join as a TRAINING job; model = tiny dict)
+# ---------------------------------------------------------------------------
+
+def train_theme_model(train: Dict[str, DataFrame]) -> Dict[str, Tuple[int, int]]:
+    """Learn, per frame type, the preferred Theme direction and a distance
+    budget from gold arcs.
+
+    Training data = gold frames' (anchor span, Theme span filler) pairs —
+    the reference's gold-arc join J2 (slot_classifier.py:348-358). Returns
+    {frame_type: (direction, max_char_distance)} where direction is +1
+    (Theme typically after the trigger), -1 (before), and the budget is
+    the observed p90 distance (clamped to [40, 400]). CLI `train` stores
+    it as artifact metadata; no predict path reads it.
+
+    Everything is one distributed aggregation.
+    """
+    frames = train["frames"].select(
+        "doc_id", F.col("tag").alias("frame_tag"), "frame_type"
     )
-    hits = toks.join(
-        F.broadcast(stem_gaz), toks["stem"] == stem_gaz["term"], "inner"
-    )
-    return hits.select(
-        F.split_part("doc_id", F.lit("#"), F.lit(1)).alias("doc_id"),
-        F.split_part("doc_id", F.lit("#"), F.lit(2)).cast("int").alias("instance_idx"),
+    fills = train["slot_fills"].where(
+        (F.col("slot_name") == "Theme") & (F.col("filler_kind") == "span")
+    ).select("doc_id", "frame_tag", "filler_tag")
+    spans = train["spans"].select(
+        "doc_id", F.col("tag").alias("span_tag"),
+        F.col("left").alias("s_left"), F.col("right").alias("s_right"),
         "span_type",
-        F.col("tleft").alias("left"),
-        F.col("tright").alias("right"),
-        F.col("core").alias("text"),
-        F.lit("predicted").alias("source"),
     )
+    # anchor span of a gold frame: the trigger span whose type matches the
+    # frame type (anchor slot fill)
+    anchor_fills = train["slot_fills"].where(
+        F.col("slot_name") == F.col("frame_type")
+    ).select("doc_id", "frame_tag", F.col("filler_tag").alias("anchor_tag"))
+
+    arcs = (
+        frames.join(anchor_fills, ["doc_id", "frame_tag"])
+        .join(
+            spans.select(
+                "doc_id", F.col("span_tag").alias("anchor_tag"),
+                F.col("s_left").alias("a_left"), F.col("s_right").alias("a_right"),
+            ),
+            ["doc_id", "anchor_tag"],
+        )
+        .join(fills, ["doc_id", "frame_tag"])
+        .join(
+            spans.select(
+                "doc_id", F.col("span_tag").alias("filler_tag"),
+                "s_left", "s_right", F.col("span_type").alias("filler_type"),
+            ),
+            ["doc_id", "filler_tag"],
+        )
+        .where(F.col("filler_type") == "Protein")
+        .select(
+            "frame_type",
+            F.when(F.col("s_left") >= F.col("a_right"), 1).otherwise(-1).alias("direction"),
+            F.when(
+                F.col("s_left") >= F.col("a_right"), F.col("s_left") - F.col("a_right")
+            )
+            .otherwise(F.col("a_left") - F.col("s_right"))
+            .alias("distance"),
+        )
+    )
+    stats = (
+        arcs.groupBy("frame_type")
+        .agg(
+            F.sum("direction").alias("dir_sum"),
+            F.expr("percentile_approx(distance, 0.9)").alias("p90"),
+        )
+        .collect()
+    )
+    return {
+        r["frame_type"]: (
+            1 if r["dir_sum"] >= 0 else -1,
+            int(min(max(r["p90"], 40), 400)),
+        )
+        for r in stats
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -1103,17 +689,6 @@ NESTED_FEATURE_COLS = (
 )
 
 
-# A/B flag (VERDICT r5 #4): when True, trigger_stats counts punctuation-
-# trimmed CORES (instance_core_tokens) in its precision denominator — the
-# definition detection actually matches — instead of raw whitespace tokens.
-# Measured on tutorial/train, full two-stage retrain under each definition
-# (BASELINE.md r6 "trigger_stats denominator A/B"): raw 0.8062 span /
-# 0.4172 frame F1 vs cores 0.8095 / 0.4151 — a precision/recall trade
-# (span P 0.8667->0.8947, R 0.7536->0.7391), not a win; frame F1 slightly
-# degrades. The pinned definition is KEPT (False) with a measured verdict
-# behind it instead of a docstring apology.
-_TRIG_STATS_CORE_DENOM = False
-
 
 def trigger_stats(train: Dict[str, DataFrame]) -> DataFrame:
     """(term, trig_prec, trig_logn): how often a lowercased surface occurs
@@ -1126,25 +701,18 @@ def trigger_stats(train: Dict[str, DataFrame]) -> DataFrame:
     terms. Unlike the hard filter (which this mismatch made terms VANISH
     from — fixed there), the right join's fallback denominator keeps every
     trigger term present here, and trig_prec is a continuous FEATURE
-    feeding fitted-and-calibrated models. The r6 A/B
-    (_TRIG_STATS_CORE_DENOM, BASELINE.md) retrained both stages under the
-    trimmed-core denominator: a +-0.003 precision/recall trade with frame
-    F1 slightly down — the definition is kept on a measured verdict, not
-    on faith."""
-    if _TRIG_STATS_CORE_DENOM:
-        occ = (
-            instance_core_tokens(train)
-            .select(F.lower("core").alias("term"))
-            .groupBy("term").agg(F.count(F.lit(1)).alias("n_occ"))
-        )
-    else:
-        inst = train["instances"].select(
-            F.concat_ws("#", "doc_id", "instance_idx").alias("doc_id"), "text"
-        )
-        occ = (
-            tokenize(inst).select(F.lower("token").alias("term"))
-            .groupBy("term").agg(F.count(F.lit(1)).alias("n_occ"))
-        )
+    feeding fitted-and-calibrated models. The r6 A/B (BASELINE.md)
+    retrained both stages on tutorial/train under the trimmed-core
+    denominator: raw 0.8062 span / 0.4172 frame F1 vs cores 0.8095 /
+    0.4151 — a precision/recall trade (span P 0.8667 -> 0.8947, R 0.7536
+    -> 0.7391) with frame F1 slightly down, so the raw definition stays."""
+    inst = train["instances"].select(
+        F.concat_ws("#", "doc_id", "instance_idx").alias("doc_id"), "text"
+    )
+    occ = (
+        tokenize(inst).select(F.lower("token").alias("term"))
+        .groupBy("term").agg(F.count(F.lit(1)).alias("n_occ"))
+    )
     tr = (
         train["spans"].where(F.col("source") == "gold")
         .groupBy(F.lower(F.col("text")).alias("term"))
@@ -1213,11 +781,7 @@ def _nested_pair_features(
     type interactions + the anchor's trigger statistics. All JVM-side."""
     inst = instances.select("doc_id", "instance_idx", F.col("text").alias("i_text"))
     out = (
-        pairs.withColumn(
-            "char_distance",
-            F.when(F.col("f_left") >= F.col("a_right"), F.col("f_left") - F.col("a_right"))
-            .otherwise(F.col("a_left") - F.col("f_right")),
-        )
+        pairs.withColumn("char_distance", _char_distance())
         .join(inst, ["doc_id", "instance_idx"])
         .withColumn(
             "between",
@@ -1283,10 +847,7 @@ def _nested_candidates(
     fc = anchors.select(
         "doc_id", "instance_idx",
         F.col("a_left").alias("f_left"), F.col("a_right").alias("f_right"),
-        F.concat_ws(
-            ":", F.lit("P"), "instance_idx", F.col("a_left"), F.col("a_right"),
-            F.col("anchor_type"), F.lit("0"),
-        ).alias("filler_tag"),
+        _frame_tag("anchor_type", F.lit("0")).alias("filler_tag"),
         F.lit("frame").alias("filler_kind"),
     )
     cands = prot.unionByName(fc)
@@ -1332,10 +893,7 @@ def _gold_arc_label_set(corpus: Dict[str, DataFrame]) -> DataFrame:
     )
     inner = ganch.select(
         "doc_id", F.col("frame_tag").alias("filler_tag"),
-        F.concat_ws(
-            ":", F.lit("P"), "instance_idx", F.col("a_left"), F.col("a_right"),
-            F.col("anchor_type"), F.lit("0"),
-        ).alias("mapped_tag"),
+        _frame_tag("anchor_type", F.lit("0")).alias("mapped_tag"),
     )
     frame_arcs = (
         arcs.where("filler_kind = 'frame'")
@@ -1348,10 +906,8 @@ def _gold_arc_label_set(corpus: Dict[str, DataFrame]) -> DataFrame:
     return span_arcs.unionByName(frame_arcs).withColumn("label", F.lit(1.0)).distinct()
 
 
-from dataclasses import dataclass as _dataclass
 
-
-@_dataclass(frozen=True)
+@dataclass(frozen=True)
 class LearnedNestedModel:
     """The persisted artifact of the two-stage learned nested extractor
     (M1-M4 lifecycle: train -> save_model -> load_model -> predict, the
@@ -1382,9 +938,38 @@ class LearnedNestedModel:
         )
 
 
+
+#: Above this row count a stage fit runs with distributed gradients
+#: (executor-side Σ g·x partials, driver folds num_buckets scalars)
+#: instead of collecting the design matrix; weights agree to ~1e-9
+#: (tests/test_logreg.py), so the switch is a pure execution choice.
+DISTRIBUTED_FIT_THRESHOLD = 50_000
+
+
+def _viable_triggers(tfeats: DataFrame, tmodel, trigger_threshold: float) -> DataFrame:
+    """Stage A applied: gazetteer hits the viability model keeps."""
+    return tfeats.withColumn("_tp", tmodel.score_column()).where(
+        F.col("_tp") >= trigger_threshold
+    )
+
+
+def _theme_candidates(
+    corpus: Dict[str, DataFrame], kept: DataFrame, stats: DataFrame, max_dist: int
+) -> DataFrame:
+    """Stage-B feature rows: every Theme candidate of every kept anchor."""
+    anchors = kept.select(
+        "doc_id", "instance_idx", F.col("span_type").alias("anchor_type"),
+        F.col("left").alias("a_left"), F.col("right").alias("a_right"),
+        F.col("text").alias("anchor_text"),
+    )
+    return _nested_pair_features(
+        _nested_candidates(corpus, anchors), corpus["instances"], stats
+    ).where(F.col("char_distance") <= max_dist)
+
+
 def train_learned_nested(
     spark: SparkSession,
-    train_dir: str,
+    train: Dict[str, DataFrame],
     trigger_threshold: float = 0.7,
     threshold: float = 0.5,
     max_k: int = 3,
@@ -1392,12 +977,16 @@ def train_learned_nested(
     prune_rounds: int = 3,
     iterations: int = 600,
 ) -> LearnedNestedModel:
-    """Train both stages and package the artifact (see
-    run_bionlp_eval_learned_nested for the extraction semantics)."""
+    """Train both stages on a loaded BRAT corpus and package the artifact.
+
+    tutorial/train self-eval (the setting of COVERAGE.md's recorded
+    numbers): frame F1 0.4172, span F1 0.8062 at the defaults — vs 0.25 /
+    0.678 for the heuristic nested path and the 0.4444 span-only ceiling.
+    Held-out tutorial/test is gazetteer-recall-bound (only 13 of 44 gold
+    triggers even appear in the train vocabulary): span F1 0.377, frame
+    F1 0.02."""
     from dere_spark.operators.logreg import fit_logistic, fit_logistic_distributed
 
-    spec = load_task_spec(BIONLP_SPEC)
-    train = load_brat(spark, train_dir, spec)
     gaz = induce_trigger_gazetteer(train)
     stats = trigger_stats(train)
 
@@ -1407,8 +996,7 @@ def train_learned_nested(
         return fit_logistic(df, cols, iterations=iterations, lr=1.0)
 
     # Stage A: trigger viability
-    det_tr = detect_triggers(train, gaz)
-    tf_tr = _trigger_features(train, det_tr, stats)
+    tf_tr = _trigger_features(train, detect_triggers(train, gaz), stats)
     gold_trig = train["spans"].where(F.col("source") == "gold").select(
         "doc_id", "instance_idx", "left", "right", "span_type"
     ).withColumn("label", F.lit(1.0))
@@ -1418,18 +1006,9 @@ def train_learned_nested(
     tmodel = fit(ttrain, TRIG_FEATURE_COLS)
 
     # Stage B: theme ranking, trained on stage A's own output
-    kept_tr = tf_tr.withColumn("_tp", tmodel.score_column()).where(
-        F.col("_tp") >= trigger_threshold
-    )
-    anchors_tr = kept_tr.select(
-        "doc_id", "instance_idx", F.col("span_type").alias("anchor_type"),
-        F.col("left").alias("a_left"), F.col("right").alias("a_right"),
-        F.col("text").alias("anchor_text"),
-    )
     labels = _gold_arc_label_set(train)
     tpdf = (
-        _nested_pair_features(_nested_candidates(train, anchors_tr), train["instances"], stats)
-        .where(F.col("char_distance") <= max_dist)
+        _theme_candidates(train, _viable_triggers(tf_tr, tmodel, trigger_threshold), stats, max_dist)
         .join(
             labels,
             ["doc_id", "instance_idx", "anchor_type", "a_left", "a_right", "filler_tag"],
@@ -1457,129 +1036,32 @@ def train_learned_nested(
 
 
 def predict_learned_nested(
-    spark: SparkSession, lm: LearnedNestedModel, eval_dir: str
+    spark: SparkSession, lm: LearnedNestedModel, corpus: Dict[str, DataFrame]
 ) -> Dict[str, DataFrame]:
     """Apply a (possibly loaded) artifact to a corpus; returns the hypo
     corpus dict ready for evaluate()/dump_brat()."""
-    spec = load_task_spec(BIONLP_SPEC)
-    gold = load_brat(spark, eval_dir, spec)
-    gaz = lm.gaz_df(spark)
     stats = lm.stats_df(spark)
-    tmodel, model = lm.tmodel, lm.model
-    trigger_threshold, threshold = lm.trigger_threshold, lm.threshold
-    max_k, max_dist, prune_rounds = lm.max_k, lm.max_dist, lm.prune_rounds
-
-    det = detect_triggers(gold, gaz)
-    kept = _trigger_features(gold, det, stats).withColumn(
-        "_tp", tmodel.score_column()
-    ).where(F.col("_tp") >= trigger_threshold)
-    anchors = kept.select(
-        "doc_id", "instance_idx", F.col("span_type").alias("anchor_type"),
-        F.col("left").alias("a_left"), F.col("right").alias("a_right"),
-        F.col("text").alias("anchor_text"),
+    kept = _viable_triggers(
+        _trigger_features(corpus, detect_triggers(corpus, lm.gaz_df(spark)), stats),
+        lm.tmodel, lm.trigger_threshold,
     )
-    feats = _nested_pair_features(
-        _nested_candidates(gold, anchors), gold["instances"], stats
-    ).where(F.col("char_distance") <= max_dist)
-    scored = feats.withColumn("p", model.score_column())
-    selected = scored.where(F.col("p") >= threshold)
-    group = ["doc_id", "instance_idx", "a_left", "a_right", "anchor_type"]
-    wk = Window.partitionBy(*group).orderBy(
+    # materialized before the threshold filter and the k-window: planned
+    # on top of the un-cut feature plan, that filter + window took ~40 s
+    # per action on a 4-document corpus (the lineage below is ~2 s)
+    scored = _theme_candidates(corpus, kept, stats, lm.max_dist).withColumn(
+        "p", lm.model.score_column()
+    ).localCheckpoint(eager=True)
+    wk = Window.partitionBy("doc_id", "instance_idx", "a_left", "a_right", "anchor_type").orderBy(
         F.col("p").desc(), F.col("f_left").asc(), F.col("filler_kind").asc()
     )
-    selected = selected.withColumn("k", F.row_number().over(wk) - 1).where(
-        F.col("k") < max_k
+    best = (
+        scored.where(F.col("p") >= lm.threshold)
+        .withColumn("k", F.row_number().over(wk) - 1)
+        .where(F.col("k") < lm.max_k)
+        .withColumn("frame_type", F.col("anchor_type"))
+        .withColumn("tag", _frame_tag("anchor_type", F.col("k").cast("string")))
     )
-    my_tag = F.concat_ws(
-        ":", F.lit("P"), "instance_idx", "a_left", "a_right", "anchor_type",
-        F.col("k").cast("string"),
-    )
-    best = selected.withColumn("frame_type", F.col("anchor_type"))
-    frames = best.select(
-        "doc_id", my_tag.alias("tag"), "frame_type",
-        F.lit("predicted").alias("source"),
-        F.lit(0).alias("line_no"), F.lit(None).cast("int").alias("file_index"),
-        "instance_idx",
-    ).localCheckpoint(eager=True)
-    fills = (
-        best.select(
-            "frame_type", F.col("frame_type").alias("slot_name"), "doc_id",
-            F.lit("predicted").alias("source"), my_tag.alias("frame_tag"),
-            F.lit(0).alias("fill_idx"),
-            F.concat_ws(":", F.lit("PT"), "instance_idx", "a_left", "a_right").alias("filler_tag"),
-            F.lit("span").alias("filler_kind"),
-        )
-        .unionByName(
-            best.select(
-                "frame_type", F.lit("Theme").alias("slot_name"), "doc_id",
-                F.lit("predicted").alias("source"), my_tag.alias("frame_tag"),
-                F.lit(1).alias("fill_idx"), "filler_tag", "filler_kind",
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(prune_rounds):
-        valid_tags = frames.select("doc_id", F.col("tag").alias("filler_tag"))
-        bad_theme = fills.where(
-            (F.col("slot_name") == "Theme") & (F.col("filler_kind") == "frame")
-        ).join(valid_tags, ["doc_id", "filler_tag"], "left_anti").select(
-            "doc_id", F.col("frame_tag").alias("tag")
-        )
-        if bad_theme.count() == 0:
-            break
-        frames = frames.join(bad_theme, ["doc_id", "tag"], "left_anti").localCheckpoint(eager=True)
-        fills = fills.join(
-            frames.select("doc_id", F.col("tag").alias("frame_tag")),
-            ["doc_id", "frame_tag"], "left_semi",
-        ).localCheckpoint(eager=True)
-
-    trigger_spans = kept.select(
-        "doc_id", "instance_idx",
-        F.concat_ws(":", F.lit("PT"), "instance_idx", "left", "right").alias("tag"),
-        "span_type", "left", "right",
-        F.col("text").alias("span_text"), F.col("text").alias("text"),
-        F.lit("predicted").alias("source"),
-        F.lit(None).cast("int").alias("file_index"), F.lit(0).alias("line_no"),
-    )
-    return {
-        "instances": gold["instances"],
-        "spans": gold["spans"].where(F.col("source") == "given").unionByName(trigger_spans),
-        "frames": frames,
-        "slot_fills": fills,
-    }
-
-
-def run_bionlp_eval_learned_nested(
-    spark: SparkSession,
-    train_dir: str,
-    eval_dir: str,
-    trigger_threshold: float = 0.7,
-    threshold: float = 0.5,
-    max_k: int = 3,
-    max_dist: int = 300,
-    prune_rounds: int = 3,
-    iterations: int = 600,
-) -> EvalResult:
-    """The r2 quality path (two-stage learned nested extraction) —
-    train + predict + evaluate in one call.
-
-    tutorial/train self-eval (the setting of COVERAGE.md's recorded
-    numbers): frame F1 0.4172, span F1 0.8062 at the defaults — vs 0.25 /
-    0.678 for the heuristic nested path and the 0.4444 span-only ceiling.
-    Held-out tutorial/test is gazetteer-recall-bound (only 13 of 44 gold
-    triggers even appear in the train vocabulary): span F1 0.377, frame
-    F1 0.02 — recorded honestly in COVERAGE.md.
-    """
-    lm = train_learned_nested(
-        spark, train_dir,
-        trigger_threshold=trigger_threshold, threshold=threshold,
-        max_k=max_k, max_dist=max_dist, prune_rounds=prune_rounds,
-        iterations=iterations,
-    )
-    hypo = predict_learned_nested(spark, lm, eval_dir)
-    spec = load_task_spec(BIONLP_SPEC)
-    gold = load_brat(spark, eval_dir, spec)
-    return evaluate(hypo, gold)
+    return _hypo(corpus, kept, best, lm.prune_rounds)
 
 
 # ---------------------------------------------------------------------------
@@ -2071,22 +1553,18 @@ def _trigger_span_shape(typed: DataFrame) -> DataFrame:
     )
 
 
-def run_bionlp_eval_tagged(
+def tagged_triggers(
     spark: SparkSession,
-    train_dir: str,
-    eval_dir: str,
-    max_dist: int = 120,
-    prune_rounds: int = 3,
-    **fit_kw,
-) -> EvalResult:
-    """Full tagged path: learned viability tagger triggers + per-type
-    score calibration + per-type unseen-gate calibration (both tuned on
-    train only) + the nested frame machinery (run_bionlp_eval_nested
-    with injected triggers)."""
-    spec = load_task_spec(BIONLP_SPEC)
-    train = load_brat(spark, train_dir, spec)
+    train: Dict[str, DataFrame],
+    corpus: Dict[str, DataFrame],
+    gazetteer: DataFrame | None = None,
+) -> DataFrame:
+    """Tagger triggers on ``corpus``: fit the viability tagger on train,
+    calibrate per-type score floors and unseen gates on train only, then
+    detect. ``gazetteer`` is the candidate dictionary (default: the
+    reference's shipped one)."""
     model, ttable, rates, gaz, toks, own = train_trigger_tagger(
-        spark, train, return_intermediates=True, **fit_kw
+        spark, train, gazetteer=gazetteer, return_intermediates=True
     )
     trig_train = detect_triggers_tagged(train, model, ttable, rates, gaz)
     thresholds = calibrate_type_thresholds(train, trig_train)
@@ -2094,12 +1572,7 @@ def run_bionlp_eval_tagged(
         train, model, ttable, rates, gaz,
         type_thresholds=thresholds, toks=toks, own=own,
     )
-    gold = load_brat(spark, eval_dir, spec)
-    triggers = detect_triggers_tagged(
-        gold, model, ttable, rates, gaz,
+    return detect_triggers_tagged(
+        corpus, model, ttable, rates, gaz,
         type_thresholds=thresholds, unseen_thresholds=unseen,
-    )
-    return run_bionlp_eval_nested(
-        spark, train_dir, eval_dir,
-        max_dist=max_dist, prune_rounds=prune_rounds, triggers=triggers,
     )

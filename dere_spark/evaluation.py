@@ -414,159 +414,6 @@ def evaluate(hypo: Dict[str, DataFrame], gold: Dict[str, DataFrame]) -> EvalResu
     return EvalResult.from_df(spans.unionByName(frames))
 
 
-# ---------------------------------------------------------------------------
-# Soft span matching — E5, the legacy BioNLP scorer's relaxations
-# (/root/reference/dere/evaluation/deRE_evaluation.py: expand_span 494-514,
-# soft overlap matching 446-491)
-# ---------------------------------------------------------------------------
-
-def span_eval_counts_soft(
-    hypo_spans: DataFrame,
-    gold_spans: DataFrame,
-    mode: str = "soft_boundary",
-    slack: int = 2,
-) -> DataFrame:
-    """Per-type TP/FP/FN with the legacy scorer's soft matching.
-
-    Modes:
-      * 'soft_boundary' — a hypo span matches a gold span of the same type
-        when its boundaries lie within the gold span extended by ``slack``
-        chars on each side (the scorer's expand_span extends gold spans up
-        to 2 chars to word boundaries; the char-slack form is the
-        word-boundary-free core of that relaxation);
-      * 'soft_overlap' — any overlap of at least one character counts.
-
-    Matching is existential on both sides (a hypo matching ANY gold is TP;
-    a gold matched by ANY hypo is not FN) — the scorer's semantics with
-    duplication adjustment left to the caller (A4, min(matched_answer,
-    matched_gold) — here counts are per-side existential like E1).
-    """
-    h = hypo_spans.where(F.col("source") != "given").alias("h")
-    g = gold_spans.where(F.col("source") != "given").alias("g")
-    if mode == "soft_boundary":
-        cond = (
-            (F.col("h.doc_id") == F.col("g.doc_id"))
-            & (F.col("h.span_type") == F.col("g.span_type"))
-            & (F.col("h.left") >= F.col("g.left") - slack)
-            & (F.col("h.right") <= F.col("g.right") + slack)
-        )
-    elif mode == "soft_overlap":
-        cond = (
-            (F.col("h.doc_id") == F.col("g.doc_id"))
-            & (F.col("h.span_type") == F.col("g.span_type"))
-            & (F.col("h.left") < F.col("g.right"))
-            & (F.col("g.left") < F.col("h.right"))
-        )
-    else:
-        raise ValueError(f"unknown soft mode: {mode}")
-
-    tp = (
-        h.join(g, cond, "left_semi")
-        .groupBy("span_type")
-        .agg(F.count(F.lit(1)).alias("tp"))
-    )
-    fp = (
-        h.join(g, cond, "left_anti")
-        .groupBy("span_type")
-        .agg(F.count(F.lit(1)).alias("fp"))
-    )
-    fn = (
-        g.join(h.alias("h"), cond, "left_anti")
-        .groupBy("span_type")
-        .agg(F.count(F.lit(1)).alias("fn"))
-    )
-    return (
-        tp.join(fp, "span_type", "full_outer")
-        .join(fn, "span_type", "full_outer")
-        .select(
-            F.lit("span").alias("kind"),
-            F.col("span_type").alias("type_name"),
-            F.coalesce("tp", F.lit(0)).alias("tp"),
-            F.coalesce("fp", F.lit(0)).alias("fp"),
-            F.coalesce("fn", F.lit(0)).alias("fn"),
-        )
-    )
-
-
-def expand_span_bounds(text: str, beg: int, end: int) -> Tuple[int, int]:
-    """The legacy scorer's expand_span, exactly
-    (deRE_evaluation.py:495-514): extend the gold span left from beg-2 and
-    right from end+2 until a word-boundary character from
-    {space . ! ? , ' "} (the events_in_text guard — stop at another event
-    trigger — applies only when trigger positions are supplied; the
-    per-span form here is the text-boundary core)."""
-    boundary = {" ", ".", "!", "?", ",", "'", '"'}
-    ebeg = beg - 2
-    while ebeg >= 0 and text[ebeg:ebeg + 1] not in boundary:
-        ebeg -= 1
-    ebeg += 1
-    text_len = len(text)
-    eend = end + 2
-    while eend <= text_len and text[eend - 1:eend] not in boundary:
-        eend += 1
-    eend -= 1
-    return ebeg, eend
-
-
-def expand_gold_spans(gold_spans: DataFrame, instances: DataFrame) -> DataFrame:
-    """Gold spans widened per expand_span against their instance text —
-    an evaluation kernel (per-batch Python like the frame matcher; the
-    while-scan has no relational form)."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    inst = instances.select("doc_id", "instance_idx", F.col("text").alias("i_text"))
-    joined = gold_spans.join(inst, ["doc_id", "instance_idx"], "inner")
-    out_schema = StructType(
-        [f for f in joined.schema.fields if f.name != "i_text"]
-        + [StructField("eleft", IntegerType()), StructField("eright", IntegerType())]
-    )
-    keep = [f.name for f in joined.schema.fields if f.name != "i_text"]
-
-    def kernel(batches):
-        for batch in batches:
-            bounds = [
-                expand_span_bounds(t, int(l), int(r))
-                for t, l, r in zip(batch["i_text"], batch["left"], batch["right"])
-            ]
-            out = batch[keep].copy()
-            out["eleft"] = [b[0] for b in bounds]
-            out["eright"] = [b[1] for b in bounds]
-            yield out
-
-    return joined.mapInPandas(kernel, out_schema)
-
-
-def span_eval_counts_soft_word(
-    hypo_spans: DataFrame, gold_spans: DataFrame, instances: DataFrame
-) -> DataFrame:
-    """E5 exact word-boundary soft matching: hypo matches gold when it
-    lies within the expand_span-widened gold interval (same doc + type)."""
-    g = expand_gold_spans(
-        gold_spans.where(F.col("source") != "given"), instances
-    ).alias("g")
-    h = hypo_spans.where(F.col("source") != "given").alias("h")
-    cond = (
-        (F.col("h.doc_id") == F.col("g.doc_id"))
-        & (F.col("h.span_type") == F.col("g.span_type"))
-        & (F.col("h.left") >= F.col("g.eleft"))
-        & (F.col("h.right") <= F.col("g.eright"))
-    )
-    tp = h.join(g, cond, "left_semi").groupBy("span_type").agg(F.count(F.lit(1)).alias("tp"))
-    fp = h.join(g, cond, "left_anti").groupBy("span_type").agg(F.count(F.lit(1)).alias("fp"))
-    fn = g.join(h, cond, "left_anti").groupBy("span_type").agg(F.count(F.lit(1)).alias("fn"))
-    return (
-        tp.join(fp, "span_type", "full_outer")
-        .join(fn, "span_type", "full_outer")
-        .select(
-            F.lit("span").alias("kind"),
-            F.col("span_type").alias("type_name"),
-            F.coalesce("tp", F.lit(0)).alias("tp"),
-            F.coalesce("fp", F.lit(0)).alias("fp"),
-            F.coalesce("fn", F.lit(0)).alias("fn"),
-        )
-    )
-
-
 def adjusted_match_counts(
     hypo: DataFrame,
     gold: DataFrame,

@@ -332,8 +332,8 @@ def resolve_frame_instances(
             )
             .select("doc_id", "frame_tag", F.col("i_min").alias("instance_idx"))
         )
-        n = resolved.count()
         accepted = resolved.localCheckpoint(eager=True)
+        n = accepted.count()
         if n == prev_n:
             break
         prev_n = n

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 
 from dere_spark.bionlp import (
+    gazetteer_flat,
     induce_trigger_gazetteer,
     run_bionlp_eval,
 )
@@ -22,7 +23,7 @@ TRAIN = "/root/reference/tutorial/data/train"
 
 @pytest.fixture(scope="module")
 def result(spark):
-    return run_bionlp_eval(spark, TRAIN, TRAIN)
+    return run_bionlp_eval(spark, TRAIN, TRAIN, gazetteer_flat)
 
 
 def test_trigger_span_recall_floor(result):
@@ -50,19 +51,10 @@ def test_gazetteer_is_deterministic(spark):
     assert all(t != "Protein" for _, t in g1)
 
 
-def test_trained_scorer_beats_heuristic(spark, result):
-    from dere_spark.bionlp import run_bionlp_eval_trained
-
-    trained = run_bionlp_eval_trained(spark, TRAIN, TRAIN)
-    assert trained.fscore("frame") >= result.fscore("frame"), (
-        f"trained {trained.fscore('frame'):.4f} < baseline {result.fscore('frame'):.4f}"
-    )
-
-
 def test_nested_extraction_beats_flat(spark, result):
-    from dere_spark.bionlp import run_bionlp_eval_nested
+    from dere_spark.bionlp import gazetteer_nested
 
-    nested = run_bionlp_eval_nested(spark, TRAIN, TRAIN)
+    nested = run_bionlp_eval(spark, TRAIN, TRAIN, gazetteer_nested)
     # recursive-frame prediction must beat span-Theme-only extraction
     assert nested.fscore("frame") > result.fscore("frame"), (
         f"nested {nested.fscore('frame'):.4f} <= flat {result.fscore('frame'):.4f}"
@@ -72,42 +64,26 @@ def test_nested_extraction_beats_flat(spark, result):
     # regulation types requires frame fillers to have matched)
 
 
-@pytest.mark.slow  # trains the pair classifier end-to-end
-def test_learned_classifier_runs(spark):
-    from dere_spark.bionlp import run_bionlp_eval_learned
-
-    r = run_bionlp_eval_learned(spark, TRAIN, TRAIN, threshold=0.5,
-                                min_trigger_precision=0.3)
-    assert r.fscore("frame") >= 0.15
-    assert r.precision("span") >= 0.6  # trigger precision filter works
-
-
 @pytest.mark.slow  # ~3 min: full two-stage training on the tutorial corpus
 def test_learned_nested_hits_quality_gate(spark):
     """r2 quality target (VERDICT r1 next-step #4): the two-stage learned
     nested extractor reaches frame F1 >= 0.40 on tutorial/train — vs the
     0.4444 span-only ceiling and 0.25 for the heuristic nested path."""
-    from dere_spark.bionlp import run_bionlp_eval_learned_nested
+    from dere_spark.bionlp import learned_nested
 
-    r = run_bionlp_eval_learned_nested(spark, TRAIN, TRAIN)
+    r = run_bionlp_eval(spark, TRAIN, TRAIN, learned_nested)
     assert r.fscore("frame") >= 0.40, r.fscore("frame")
     assert r.fscore("span") >= 0.78, r.fscore("span")
 
 
-def test_stemmed_trigger_detection_trims_punctuation(spark):
-    """The stem path shares instance_core_tokens: a trigger abutting
-    punctuation ('degradations.') must still stem-match and carry offsets
+def test_trigger_detection_trims_punctuation(spark):
+    """Detection matches punctuation-trimmed token cores
+    (instance_core_tokens): a trigger abutting punctuation
+    ('degradation.') still matches its gazetteer term and carries offsets
     that exclude the punctuation."""
-    from dere_spark.bionlp import (
-        detect_triggers_stemmed,
-        induce_stem_gazetteer,
-    )
+    from dere_spark.bionlp import detect_triggers
 
     train = {
-        "instances": spark.createDataFrame(
-            [("t1", 0, "rapid degradation of IkB", 0, 25)],
-            "doc_id string, instance_idx int, text string, i_start int, i_end int",
-        ),
         "spans": spark.createDataFrame(
             [("t1", 0, "T1", "Protein_catabolism", 6, 17, "degradation",
               "degradation", "gold", 1, 1)],
@@ -118,27 +94,24 @@ def test_stemmed_trigger_detection_trims_punctuation(spark):
     }
     corpus = {
         "instances": spark.createDataFrame(
-            [("d1", 0, "protein degradations. occur", 0, 28)],
+            [("d1", 0, "protein (degradation. occur", 0, 28)],
             "doc_id string, instance_idx int, text string, i_start int, i_end int",
         ),
     }
-    gaz = induce_stem_gazetteer(train)
-    hits = detect_triggers_stemmed(corpus, gaz).collect()
+    hits = detect_triggers(corpus, induce_trigger_gazetteer(train)).collect()
     assert len(hits) == 1
     h = hits[0]
-    # offsets cover the trimmed core 'degradations', not the trailing dot
-    assert (h["left"], h["right"], h["text"]) == (8, 20, "degradations")
+    # offsets cover the trimmed core 'degradation', not '(' or the dot
+    assert (h["left"], h["right"], h["text"]) == (9, 20, "degradation")
     assert h["span_type"] == "Protein_catabolism"
 
 
 def test_trigger_stats_denominator_ab_flag(spark):
-    """r6 A/B seam (VERDICT r5 #4): the shipped trigger_stats counts RAW
-    tokens in its denominator ('degradation.' is a different raw token, so
-    punctuation-adjacent occurrences don't dilute trig_prec); the
-    _TRIG_STATS_CORE_DENOM variant counts trimmed cores and does. The
-    measured A/B verdict (BASELINE.md r6) keeps the raw definition; this
-    test pins that the flag actually switches the semantics."""
-    import dere_spark.bionlp as B
+    """The trigger_stats denominator A/B (numbers in its docstring) kept
+    RAW tokens: 'degradation.' is a different raw token, so a
+    punctuation-adjacent occurrence does not dilute trig_prec (trimmed
+    cores would count 2 occurrences and give 0.5)."""
+    from dere_spark.bionlp import trigger_stats
 
     train = {
         "instances": spark.createDataFrame(
@@ -151,12 +124,5 @@ def test_trigger_stats_denominator_ab_flag(spark):
             "span_type string, text string, source string",
         ),
     }
-    raw = {r["term"]: r["trig_prec"] for r in B.trigger_stats(train).collect()}
+    raw = {r["term"]: r["trig_prec"] for r in trigger_stats(train).collect()}
     assert raw["degradation"] == 1.0  # 1 gold / 1 raw occurrence
-    old = B._TRIG_STATS_CORE_DENOM
-    try:
-        B._TRIG_STATS_CORE_DENOM = True
-        core = {r["term"]: r["trig_prec"] for r in B.trigger_stats(train).collect()}
-    finally:
-        B._TRIG_STATS_CORE_DENOM = old
-    assert core["degradation"] == 0.5  # 1 gold / 2 trimmed-core occurrences

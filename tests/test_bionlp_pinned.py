@@ -150,42 +150,37 @@ def _cli_gazetteer(spark, env):
 
 
 def _cli_tagger(spark, env):
-    train = env["train"]
-    model, ttable, rates, ref_gaz, toks, own = B.train_trigger_tagger(
-        spark, train, gazetteer=env["gaz"], return_intermediates=True
-    )
-    trig_train = B.detect_triggers_tagged(train, model, ttable, rates, ref_gaz)
-    thresholds = B.calibrate_type_thresholds(train, trig_train)
-    unseen = B.calibrate_unseen_thresholds(
-        train, model, ttable, rates, ref_gaz,
-        type_thresholds=thresholds, toks=toks, own=own,
-    )
-    triggers = B.detect_triggers_tagged(
-        env["corpus"], model, ttable, rates, ref_gaz,
-        type_thresholds=thresholds, unseen_thresholds=unseen,
-    ).cache()
+    triggers = B.tagged_triggers(spark, env["train"], env["corpus"], gazetteer=env["gaz"]).cache()
     return _evaluated(
         env, B.predicted_corpus(spark, env["corpus"], env["spec"], env["gaz"], triggers=triggers)
     )
 
 
 def _nested(spark, env):
-    return _captured_eval(env, lambda: B.run_bionlp_eval_nested(spark, TRAIN, TEST))
+    # run_bionlp_eval reads the corpora already loaded (and cached) above
+    loaded = {TRAIN: env["train"], TEST: env["gold"]}
+    env["mp"].setattr(B, "load_brat", lambda spark, path, spec: loaded[path])
+    try:
+        return _captured_eval(
+            env, lambda: B.run_bionlp_eval(spark, TRAIN, TEST, B.gazetteer_nested)
+        )
+    finally:
+        env["mp"].setattr(B, "load_brat", load_brat)
 
 
 def _unpruned_nested_frames(spark, env):
-    hypo, _ = _captured_eval(
-        env, lambda: B.run_bionlp_eval_nested(spark, TRAIN, TEST, prune_rounds=0)
-    )
-    return hypo["frames"].count()
+    """Frames the nested rule emits before the cascade prune."""
+    gaz = B.induce_trigger_gazetteer_filtered(env["train"], B._MIN_TRIGGER_PRECISION)
+    triggers = B.detect_triggers(env["gold"], gaz)
+    return B._nested_arcs(spark, env["spec"], env["train"], env["gold"], triggers).count()
 
 
 def _train_learned(spark, env):
-    return B.train_learned_nested(spark, TRAIN)
+    return B.train_learned_nested(spark, env["train"])
 
 
 def _learned_predict(spark, env, lm):
-    return _evaluated(env, B.predict_learned_nested(spark, lm, TEST))
+    return _evaluated(env, B.predict_learned_nested(spark, lm, env["corpus"]))
 
 
 def test_fixture_regenerates_byte_identical(tmp_path):

@@ -1,13 +1,11 @@
-"""M6 cardinality splitter, J3 boundary-relaxed alignment, E5 soft-span
-evaluation — reference-parity unit tests."""
+"""M6 cardinality splitter and the legacy scorer's E5 expand_span —
+reference-parity unit tests."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
 
-from dere_spark.evaluation import span_eval_counts_soft
-from dere_spark.operators.align import align_tokens_to_spans
 from dere_spark.operators.cardinality import split_overfilled_frames
 from dere_spark.plans.compiler import compile_plan
 from dere_spark.taskspec import load_task_spec
@@ -74,83 +72,19 @@ def test_split_unbounded_slot_keeps_all(spark):
     assert themes == {1, 2, 3}
 
 
-def test_align_relaxations(spark):
-    tokens = spark.createDataFrame(
-        [
-            ("d", 0, 0, 5),    # exactly the span           -> contained
-            ("d", 1, 10, 25),  # starts at span start, runs past -> overrun
-            ("d", 2, 28, 40),  # ends at span end, starts before -> underrun
-            ("d", 3, 50, 55),  # disjoint -> no match
-        ],
-        "doc_id string, token_idx int, left int, right int",
-    )
-    spans = spark.createDataFrame(
-        [("d", "T", 0, 5), ("d", "T", 10, 15), ("d", "T", 30, 40)],
-        "doc_id string, span_type string, left int, right int",
-    )
-    out = {r["token_idx"]: r["match_kind"] for r in align_tokens_to_spans(tokens, spans).collect()}
-    assert out == {0: "contained", 1: "overrun", 2: "underrun"}
-
-
-def test_soft_span_eval_modes(spark):
-    gold = spark.createDataFrame(
-        [("d", "T", 10, 20, "gold")],
-        "doc_id string, span_type string, left int, right int, source string",
-    )
-    # off by 2 chars -> soft_boundary TP, exact would be FP
-    hypo_close = spark.createDataFrame(
-        [("d", "T", 12, 20, "predicted")],
-        "doc_id string, span_type string, left int, right int, source string",
-    )
-    r = {x["type_name"]: (x["tp"], x["fp"], x["fn"])
-         for x in span_eval_counts_soft(hypo_close, gold, mode="soft_boundary").collect()}
-    assert r["T"] == (1, 0, 0)
-    # barely overlapping -> soft_overlap TP, soft_boundary FP
-    hypo_edge = spark.createDataFrame(
-        [("d", "T", 19, 35, "predicted")],
-        "doc_id string, span_type string, left int, right int, source string",
-    )
-    r2 = {x["type_name"]: (x["tp"], x["fp"], x["fn"])
-          for x in span_eval_counts_soft(hypo_edge, gold, mode="soft_overlap").collect()}
-    assert r2["T"] == (1, 0, 0)
-    r3 = {x["type_name"]: (x["tp"], x["fp"], x["fn"])
-          for x in span_eval_counts_soft(hypo_edge, gold, mode="soft_boundary").collect()}
-    assert r3["T"] == (0, 1, 1)
-
-
 def test_expand_span_bounds_reference_semantics():
-    from dere_spark.evaluation import expand_span_bounds
+    from dere_spark.evaluation_legacy import _expand_span
 
     #       0123456789012345678901
     text = "the overexpression ok"
     # gold span 'express' [8,15) inside 'overexpression' [4,18):
     # left scan from 6 walks to the space at 3 -> 4; right from 17 walks to
     # the space at 18 -> 18
-    assert expand_span_bounds(text, 8, 15) == (4, 18)
+    assert _expand_span(8, 15, text, set()) == (4, 18)
     # span at text start: clamps at 0
-    assert expand_span_bounds("abcdef gh", 1, 3) == (0, 6)
+    assert _expand_span(1, 3, "abcdef gh", set()) == (0, 6)
     # the reference jumps 2 chars FIRST, skipping past nearer boundaries
     # (beg-2 lands on 'a' at 0, scans left, clamps; end+2 passes the space)
-    assert expand_span_bounds("a bc d", 2, 4) == (0, 6)
-
-
-def test_soft_word_eval(spark):
-    from dere_spark.evaluation import span_eval_counts_soft_word
-
-    instances = spark.createDataFrame(
-        [("d", 0, "the overexpression ok")],
-        "doc_id string, instance_idx int, text string",
-    )
-    gold = spark.createDataFrame(
-        [("d", 0, "T", 8, 15, "gold")],
-        "doc_id string, instance_idx int, span_type string, left int, right int, source string",
-    )
-    # hypo predicted the whole word 'overexpression' [4,18): exact match
-    # fails, word-boundary soft match succeeds
-    hypo = spark.createDataFrame(
-        [("d", 0, "T", 4, 18, "predicted")],
-        "doc_id string, instance_idx int, span_type string, left int, right int, source string",
-    )
-    r = {x["type_name"]: (x["tp"], x["fp"], x["fn"])
-         for x in span_eval_counts_soft_word(hypo, gold, instances).collect()}
-    assert r["T"] == (1, 0, 0)
+    assert _expand_span(2, 4, "a bc d", set()) == (0, 6)
+    # a marked (trigger/given) position stops the scan like a boundary
+    assert _expand_span(8, 15, text, {5, 16}) == (6, 16)

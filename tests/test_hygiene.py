@@ -51,18 +51,25 @@ def _references(path: pathlib.Path) -> set[tuple[str, str | None]]:
 
 def test_dedup_graph_operators_have_callers():
     """Each operator ships one physical shape: a public function in the
-    near-duplicate modules (operators/dedup.py, graph.py) or the flagship
+    near-duplicate modules (operators/dedup.py, graph.py), the flagship
     extraction modules (operators/spans.py, pairs.py, frames.py,
-    triples.py) that nothing in the engine (outside its own definition)
-    or in perfbench calls is a variant that lost its A/B and belongs in a
-    docstring, not in the module."""
+    triples.py), the evaluators (evaluation.py, evaluation_legacy.py) or
+    the plan helpers (plans/*.py) that nothing in the engine (outside its
+    own definition) or in perfbench calls is a variant that lost its A/B
+    and belongs in a docstring, not in the module."""
     # the window formulation is the parity reference tests pin
-    # shingle_arrays against
-    exempt = {"shingles"}
-    public = {
-        (node.name, mod)
+    # shingle_arrays against; the checkpointed run is a library entry
+    # point (the resumable twin of extract_triples), pinned row for row
+    # against it by tests/test_resumability.py
+    exempt = {"shingles", "run_checkpointed_extraction"}
+    homes = [
+        PKG / "operators" / mod
         for mod in ("dedup.py", "graph.py", "spans.py", "pairs.py", "frames.py", "triples.py")
-        for node in ast.parse((PKG / "operators" / mod).read_text()).body
+    ] + [PKG / "evaluation.py", PKG / "evaluation_legacy.py"] + sorted((PKG / "plans").glob("*.py"))
+    public = {
+        (node.name, home)
+        for home in homes
+        for node in ast.parse(home.read_text()).body
         if isinstance(node, ast.FunctionDef) and not node.name.startswith("_")
     }
     refs = {
@@ -70,8 +77,7 @@ def test_dedup_graph_operators_have_callers():
         for path in sorted(PKG.rglob("*.py")) + sorted(PERFBENCH.rglob("*.py"))
     }
 
-    def called(name: str, mod: str) -> bool:
-        home = PKG / "operators" / mod
+    def called(name: str, home: pathlib.Path) -> bool:
         return any(
             ref == name and not (path == home and owner == name)
             for path, pairs in refs.items()
@@ -79,7 +85,9 @@ def test_dedup_graph_operators_have_callers():
         )
 
     uncalled = sorted(
-        f"{mod}:{name}" for name, mod in public if name not in exempt and not called(name, mod)
+        f"{home.relative_to(PKG)}:{name}"
+        for name, home in public
+        if name not in exempt and not called(name, home)
     )
     assert uncalled == [], f"public operators with no caller: {uncalled}"
 

@@ -55,11 +55,14 @@ def test_seeded_shuffle_deterministic(spark, sf_dir):
 def test_learned_nested_save_load_predict(spark, tmp_path):
     """Full model lifecycle for the r2 extractor: train -> save_model ->
     load_model -> predict, with identical evaluation to the direct path."""
-    from dere_spark.bionlp import predict_learned_nested, train_learned_nested
+    from dere_spark.bionlp import BIONLP_SPEC, predict_learned_nested, train_learned_nested
     from dere_spark.plans.models import load_model, save_model
+    from dere_spark.sources.brat import load_brat
+    from dere_spark.taskspec import load_task_spec
 
-    train_dir = "/root/reference/tutorial/data/train"
-    lm = train_learned_nested(spark, train_dir, iterations=120)
+    spec = load_task_spec(BIONLP_SPEC)
+    train = load_brat(spark, "/root/reference/tutorial/data/train", spec)
+    lm = train_learned_nested(spark, train, iterations=120)
     save_model(lm, str(tmp_path / "lnm"))
     loaded, manifest = load_model(
         str(tmp_path / "lnm"),
@@ -72,7 +75,8 @@ def test_learned_nested_save_load_predict(spark, tmp_path):
 
     # apply the LOADED artifact to the (smaller) held-out split: the
     # full predict plan runs from the deserialized weights/dictionaries
-    hypo = predict_learned_nested(spark, loaded, "/root/reference/tutorial/data/test")
+    test = load_brat(spark, "/root/reference/tutorial/data/test", spec)
+    hypo = predict_learned_nested(spark, loaded, test)
     assert hypo["frames"].count() > 0
     assert hypo["spans"].where("source = 'predicted'").count() > 0
 

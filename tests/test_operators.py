@@ -1,5 +1,5 @@
-"""Unit tests for BIO encode/decode, Arrow kernels, multimodal plumbing,
-and connected components — the pure-logic operators (SURVEY §5.2)."""
+"""Unit tests for BIO encode/decode, Arrow kernels and connected
+components — the pure-logic operators (SURVEY §5.2)."""
 
 from __future__ import annotations
 
@@ -13,13 +13,6 @@ from dere_spark.operators.kernels import (
     LinearPairScorer,
     score_pairs_batched,
     tag_tokens_batched,
-)
-from dere_spark.operators.multimodal import (
-    FEATURE_SCHEMA,
-    MEDIA_SCHEMA,
-    RealCodec,
-    StubCodec,
-    extract_features,
 )
 
 
@@ -106,30 +99,6 @@ def test_connected_components(spark):
     )
     cc = {r["node"]: r["component"] for r in connected_components(edges).collect()}
     assert cc == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "p": "p"}
-
-
-def test_multimodal_stub_features(spark):
-    media = spark.createDataFrame(
-        [
-            ("m1", "d1", "image", "image/png", bytearray(b"fakepng"), 2, 2, None),
-            ("m2", "d1", "audio", "audio/wav", bytearray(b""), None, None, 1000),
-            ("m3", None, "video", None, None, None, None, None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    feats = extract_features(media, StubCodec(dim=8))
-    rows = {r["media_id"]: r for r in feats.collect()}
-    assert feats.schema == FEATURE_SCHEMA
-    assert rows["m1"]["n_bytes"] == 7 and len(rows["m1"]["feature"]) == 8
-    assert rows["m3"]["n_bytes"] == 0
-    # deterministic across runs
-    again = {r["media_id"]: r["feature"] for r in extract_features(media, StubCodec(dim=8)).collect()}
-    assert again["m1"] == rows["m1"]["feature"]
-
-
-def test_real_codec_is_explicit_stub():
-    with pytest.raises(NotImplementedError):
-        RealCodec.decode(b"x", "image")
 
 
 def test_kmeans_ivf_recall(spark):
@@ -590,42 +559,6 @@ def test_fit_vocabulary_two_phase_no_global_window(spark):
     # parallelism-invariant: same indices at a different partition count
     again = {r["term"]: r["index"] for r in fit_vocabulary(docs, num_partitions=3).collect()}
     assert again == got
-
-
-def test_resize_and_frame_sample_plumbing(spark):
-    """Brief-listed multimodal ops: resize (payload transform + metadata
-    rewrite) and frame-sample (row fan-out by duration) with the
-    deterministic stub codec."""
-    from dere_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        resize_images,
-        sample_frames,
-    )
-
-    rows = [
-        ("m1", "d1", "image", "image/png", b"\x89PNG-fake-1", 640, 480, None),
-        ("m2", "d1", "video", "video/mp4", b"vid-fake-2", 1920, 1080, 3500),
-        ("m3", "d2", "audio", "audio/wav", b"aud-fake-3", None, None, 2000),
-        ("m4", "d2", "image", "image/png", None, 10, 10, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-    resized = resize_images(media, 64, 64).collect()
-    assert {r["media_id"] for r in resized} == {"m1", "m4"}  # images only
-    for r in resized:
-        assert (r["width"], r["height"]) == (64, 64)
-        assert len(r["payload"]) == 64 * 64 // 64
-    # deterministic: same input -> identical payload bytes
-    again = {r["media_id"]: bytes(r["payload"]) for r in resize_images(media, 64, 64).collect()}
-    assert {r["media_id"]: bytes(r["payload"]) for r in resized} == again
-
-    frames = sample_frames(media, every_ms=1000).collect()
-    # only the video row fans out: 3500ms at 1000ms -> ts 0,1000,2000,3000
-    assert {r["media_id"] for r in frames} == {"m2"}
-    assert sorted(r["ts_ms"] for r in frames) == [0, 1000, 2000, 3000]
-    assert sorted(r["frame_idx"] for r in frames) == [0, 1, 2, 3]
-    assert all(len(r["frame_payload"]) == 32 for r in frames)
-    assert all((r["width"], r["height"]) == (1920, 1080) for r in frames)
 
 
 def test_fused_lsh_matches_staged_when_bands_exceed_hashes(spark):

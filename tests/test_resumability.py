@@ -1,5 +1,5 @@
 """Checkpoint/lineage resumability of the webtext extraction chain, skew
-helpers, splits and tuning.
+helpers and splits.
 
 The checkpointed run folds ``webtext.extraction_chain``, the chain
 ``extract_triples`` runs, so its triples must equal the direct ones row
@@ -21,7 +21,6 @@ from dere_spark.plans.checkpoint import (
     CheckpointedPipeline,
     run_checkpointed_extraction,
 )
-from dere_spark.plans.tuning import grid_search
 from dere_spark.sources.documents import load_documents
 from dere_spark.webtext import extract_triples
 
@@ -211,14 +210,3 @@ def test_deterministic_split(spark, sf_dir):
     assert train2.count() == tn
     assert train.join(dev, "doc_id", "inner").count() == 0
 
-
-def test_grid_search_argmax_and_early_stop():
-    calls = []
-
-    def ev(params):
-        calls.append(params)
-        return 1.0 - (params["c"] - 3) ** 2 / 10
-
-    r = grid_search({"c": [1, 2, 3, 4, 5]}, ev, early_stop_at=1.0)
-    assert r.best_params == {"c": 3} and r.best_score == 1.0
-    assert len(calls) == 3  # stopped at the perfect score

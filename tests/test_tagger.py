@@ -128,9 +128,9 @@ def test_tagged_path_beats_gazetteer_held_out(spark):
     0.377/0.108 gazetteer; calibrations tuned on TRAIN only, train span
     F1 unchanged at 0.7794 under the final config — full A/B chain in
     BASELINE.md r5)."""
-    from dere_spark.bionlp import run_bionlp_eval_tagged
+    from dere_spark.bionlp import run_bionlp_eval, tagged_nested
 
-    r = run_bionlp_eval_tagged(spark, TRAIN_DIR, TEST_DIR)
+    r = run_bionlp_eval(spark, TRAIN_DIR, TEST_DIR, tagged_nested)
     assert r.fscore("span") >= 0.55, r.fscore("span")
     assert r.fscore("frame") >= 0.18, r.fscore("frame")
 
