@@ -1557,14 +1557,12 @@ def tagged_triggers(
     spark: SparkSession,
     train: Dict[str, DataFrame],
     corpus: Dict[str, DataFrame],
-    gazetteer: DataFrame | None = None,
 ) -> DataFrame:
-    """Tagger triggers on ``corpus``: fit the viability tagger on train,
-    calibrate per-type score floors and unseen gates on train only, then
-    detect. ``gazetteer`` is the candidate dictionary (default: the
-    reference's shipped one)."""
+    """Tagger triggers on ``corpus``: fit the viability tagger on train
+    (candidates from the reference's shipped gazetteer), calibrate
+    per-type score floors and unseen gates on train only, then detect."""
     model, ttable, rates, gaz, toks, own = train_trigger_tagger(
-        spark, train, gazetteer=gazetteer, return_intermediates=True
+        spark, train, return_intermediates=True
     )
     trig_train = detect_triggers_tagged(train, model, ttable, rates, gaz)
     thresholds = calibrate_type_thresholds(train, trig_train)
@@ -1572,7 +1570,11 @@ def tagged_triggers(
         train, model, ttable, rates, gaz,
         type_thresholds=thresholds, toks=toks, own=own,
     )
+    # checkpointed: the arc rules and the output spans each read the
+    # triggers, and inlining this plan at every read filled an 8 GB JVM
+    # heap on the 4-document test corpus (nested arcs: 40 min, then a
+    # failed job)
     return detect_triggers_tagged(
         corpus, model, ttable, rates, gaz,
         type_thresholds=thresholds, unseen_thresholds=unseen,
-    )
+    ).localCheckpoint(eager=True)

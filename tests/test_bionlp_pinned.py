@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 import pytest
 
 import dere_spark.bionlp as B
+import dere_spark.operators.tagger as tagger
 from dere_spark.sources.brat import dump_brat, load_brat
 from dere_spark.taskspec import load_task_spec
 
@@ -55,6 +56,12 @@ PINNED = {
         "frames": "e47615325fade7bad6943037d8eed611",
         "slot_fills": "dc83a6afbf6e79745498afa115c67af9",
         "counts": "46910184ef5c07950b9d7e49dd3576dd",
+    },
+    "tagged_nested": {
+        "spans": "bb92bbdd0272d66e7d8e6be282da50d4",
+        "frames": "e47615325fade7bad6943037d8eed611",
+        "slot_fills": "dc83a6afbf6e79745498afa115c67af9",
+        "counts": "7f087f10d30d87ecab6061c39d22a642",
     },
     "learned_nested": {
         "spans": "bb92bbdd0272d66e7d8e6be282da50d4",
@@ -118,6 +125,9 @@ def env(spark):
         # what CLI predict loads (load_gold=False): gold with its gold stripped
         corpus = {"instances": gold["instances"], "spans": gold["spans"].where("source = 'given'")}
         gaz = B.induce_trigger_gazetteer_filtered(train, 0.2).cache()
+        # the tagger's candidate dictionary: the induced gazetteer stands
+        # in for the reference's shipped one
+        mp.setattr(tagger, "load_reference_gazetteer", lambda spark, *a, **k: gaz)
         yield {"spec": spec, "train": train, "gold": gold, "corpus": corpus, "gaz": gaz, "mp": mp}
     spark.conf.set("spark.sql.shuffle.partitions", shuffle)
 
@@ -150,22 +160,28 @@ def _cli_gazetteer(spark, env):
 
 
 def _cli_tagger(spark, env):
-    triggers = B.tagged_triggers(spark, env["train"], env["corpus"], gazetteer=env["gaz"]).cache()
+    triggers = B.tagged_triggers(spark, env["train"], env["corpus"])
     return _evaluated(
         env, B.predicted_corpus(spark, env["corpus"], env["spec"], env["gaz"], triggers=triggers)
     )
 
 
-def _nested(spark, env):
+def _run_eval(spark, env, predict):
     # run_bionlp_eval reads the corpora already loaded (and cached) above
     loaded = {TRAIN: env["train"], TEST: env["gold"]}
     env["mp"].setattr(B, "load_brat", lambda spark, path, spec: loaded[path])
     try:
-        return _captured_eval(
-            env, lambda: B.run_bionlp_eval(spark, TRAIN, TEST, B.gazetteer_nested)
-        )
+        return _captured_eval(env, lambda: B.run_bionlp_eval(spark, TRAIN, TEST, predict))
     finally:
         env["mp"].setattr(B, "load_brat", load_brat)
+
+
+def _nested(spark, env):
+    return _run_eval(spark, env, B.gazetteer_nested)
+
+
+def _tagged_nested(spark, env):
+    return _run_eval(spark, env, B.tagged_nested)
 
 
 def _unpruned_nested_frames(spark, env):
@@ -239,6 +255,39 @@ def test_nested_arcs_are_pinned(spark, env):
     assert frame_themes.count() > 0
     # the cascade prune dropped at least one frame
     assert _unpruned_nested_frames(spark, env) > hypo["frames"].count()
+
+
+def test_tagged_nested_arcs_are_pinned(spark, env):
+    hypo, result = _tagged_nested(spark, env)
+    assert _fingerprint(hypo, result) == PINNED["tagged_nested"]
+
+
+def test_nested_contention_prefers_the_higher_tagger_score(spark, env):
+    """Regulations R1 and R2 both cover event C (C's nearest protein is
+    theirs). R1 is nearer to C but less confident, so C goes to R2 and R1
+    falls back to its nearest frame F. No fixture document stages this
+    contest, so it is built here."""
+    # Q F R1 C P R2, by character offset
+    proteins = spark.createDataFrame(
+        [("d", 0, "T1", "Protein", 0, 2, "given"), ("d", 0, "T2", "Protein", 27, 30, "given")],
+        "doc_id string, instance_idx int, tag string, span_type string,"
+        " left int, right int, source string",
+    )
+    triggers = spark.createDataFrame(
+        [
+            ("d", 0, "Gene_expression", 3, 10, 0.9),
+            ("d", 0, "Positive_regulation", 11, 19, 0.2),
+            ("d", 0, "Gene_expression", 21, 26, 0.9),
+            ("d", 0, "Positive_regulation", 31, 40, 0.9),
+        ],
+        "doc_id string, instance_idx int, span_type string, left int, right int, score double",
+    )
+    best = B._nested_arcs(spark, env["spec"], env["train"], {"spans": proteins}, triggers)
+    theme = {
+        r["a_left"]: r["filler_tag"]
+        for r in best.where("anchor_type = 'Positive_regulation'").collect()
+    }
+    assert theme == {11: "P:0:3:10:Gene_expression", 31: "P:0:21:26:Gene_expression"}
 
 
 def test_learned_nested_round_trip_is_pinned(spark, env, tmp_path):
