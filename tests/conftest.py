@@ -1,10 +1,36 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from dere_spark.refdata import REFERENCE_ROOT
 from dere_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FIXTURES = os.path.join(ROOT, "tests", "fixtures")
+#: seeded BioNLP-ST-shaped BRAT corpus (scripts/make_bionlp_fixture.py)
+BIONLP_MINI = os.path.join(FIXTURES, "bionlp_mini")
+BIONLP_SPEC = os.path.join(BIONLP_MINI, "bionlpst.xml")
+BIONLP_TRAIN = os.path.join(BIONLP_MINI, "train")
+BIONLP_TEST = os.path.join(BIONLP_MINI, "test")
+#: quote-attribution spec in the shape of the reference's task-specs/quote.xml
+QUOTE_SPEC = os.path.join(FIXTURES, "quote.xml")
+
+
+def needs_reference(*relpaths: str):
+    """Skip mark for a test that reads files of the reference checkout:
+    the test runs only where every ``relpaths`` entry exists under
+    ``REFERENCE_ROOT`` (relocatable via ``DERE_SPARK_REFERENCE_ROOT``)."""
+    missing = [
+        p for p in (os.path.join(REFERENCE_ROOT, r) for r in relpaths)
+        if not os.path.exists(p)
+    ]
+    return pytest.mark.skipif(
+        bool(missing), reason=f"needs {missing[0]}" if missing else ""
+    )
 
 
 @pytest.fixture(scope="session")

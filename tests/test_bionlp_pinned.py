@@ -28,12 +28,12 @@ import dere_spark.bionlp as B
 import dere_spark.operators.tagger as tagger
 from dere_spark.sources.brat import dump_brat, load_brat
 from dere_spark.taskspec import load_task_spec
+from tests.conftest import BIONLP_MINI as FIXTURE
+from tests.conftest import BIONLP_SPEC as SPEC
+from tests.conftest import BIONLP_TEST as TEST
+from tests.conftest import BIONLP_TRAIN as TRAIN
+from tests.conftest import ROOT
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-FIXTURE = os.path.join(ROOT, "tests", "fixtures", "bionlp_mini")
-SPEC = os.path.join(FIXTURE, "bionlpst.xml")
-TRAIN = os.path.join(FIXTURE, "train")
-TEST = os.path.join(FIXTURE, "test")
 TABLES = ("spans", "frames", "slot_fills")
 
 PINNED = {

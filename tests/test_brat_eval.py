@@ -1,5 +1,6 @@
-"""BRAT IO + evaluation semantics on the reference's tutorial corpus
-(read-only fixtures at /root/reference/tutorial/data)."""
+"""BRAT IO + evaluation semantics on the in-repo BioNLP-ST-shaped corpus
+(tests/fixtures/bionlp_mini: its spec and 10 train documents). Expected
+counts are read off the fixture files themselves."""
 
 from __future__ import annotations
 
@@ -9,10 +10,8 @@ import pytest
 from dere_spark.evaluation import evaluate, frame_eval_counts, span_eval_counts
 from dere_spark.sources.brat import dump_brat, load_brat, span_fidelity_violations
 from dere_spark.taskspec import load_task_spec
-
-TRAIN = "/root/reference/tutorial/data/train"
-TEST = "/root/reference/tutorial/data/test"
-SPEC = "/root/reference/task-specs/bionlpst.xml"
+from tests.conftest import BIONLP_SPEC as SPEC
+from tests.conftest import BIONLP_TRAIN as TRAIN
 
 
 @pytest.fixture(scope="module")
@@ -29,11 +28,11 @@ def corpus(spark, spec):
 
 
 def test_load_counts(corpus):
-    # 8 docs x 2 lines (title + abstract); 156 T lines of which 8 are
-    # 'Entity' (not in spec -> skipped); 75 E lines, all resolvable.
-    assert corpus["instances"].count() == 16
-    assert corpus["spans"].count() == 148
-    assert corpus["frames"].count() == 75
+    # 10 docs, 60 .txt lines in all; 68 .a1 + 59 .a2 T lines, every type
+    # in the spec; 59 E lines, all resolvable.
+    assert corpus["instances"].count() == 60
+    assert corpus["spans"].count() == 127
+    assert corpus["frames"].count() == 59
     assert span_fidelity_violations(corpus["spans"]).count() == 0
 
 
@@ -41,8 +40,8 @@ def test_given_vs_gold_provenance(corpus):
     by_source = dict(
         corpus["spans"].groupBy("source").count().collect()
     )
-    assert by_source["given"] == 79  # Protein spans from .a1
-    assert by_source["gold"] == 69
+    assert by_source["given"] == 68  # Protein spans from .a1
+    assert by_source["gold"] == 59
     assert corpus["frames"].where(F.col("source") != "gold").count() == 0
 
 
@@ -51,9 +50,9 @@ def test_self_evaluation_perfect(corpus):
     assert r.precision() == 1.0 and r.recall() == 1.0
     # given spans are excluded from evaluation (evaluation.py:18-21)
     tp_span = sum(v[0] for (k, _), v in r.counts.items() if k == "span")
-    assert tp_span == 69
+    assert tp_span == 59
     tp_frame = sum(v[0] for (k, _), v in r.counts.items() if k == "frame")
-    assert tp_frame == 75
+    assert tp_frame == 59
 
 
 def test_span_eval_detects_fp_fn(spark, corpus):
@@ -71,13 +70,13 @@ def test_span_eval_detects_fp_fn(spark, corpus):
         for row in span_eval_counts(perturbed, spans).collect()
     }
     ge = counts["Gene_expression"]
-    assert ge == (0, 19, 19)
+    assert ge == (0, 12, 12)
     # untouched types unaffected
-    assert counts["Binding"] == (1, 0, 0)
+    assert counts["Binding"] == (8, 0, 0)
 
 
 def test_frame_eval_detects_missing_frame(spark, corpus):
-    # drop all Binding frames from hypo -> 1 FN, no FP
+    # drop all Binding frames from hypo -> 8 FN, no FP
     hypo = dict(corpus)
     hypo["frames"] = corpus["frames"].where(F.col("frame_type") != "Binding")
     hypo["slot_fills"] = corpus["slot_fills"].where(
@@ -87,8 +86,8 @@ def test_frame_eval_detects_missing_frame(spark, corpus):
         row["type_name"]: (row["tp"], row["fp"], row["fn"])
         for row in frame_eval_counts(hypo, corpus).collect()
     }
-    assert counts["Binding"] == (0, 0, 1)
-    assert counts["Gene_expression"][0] == 20  # unaffected
+    assert counts["Binding"] == (0, 0, 8)
+    assert counts["Gene_expression"][0] == 12  # unaffected
 
 
 def test_frame_eval_nested_regulation_structure(spark, corpus):
@@ -174,7 +173,7 @@ def test_quote_normalization_round_trip(spark, spec, tmp_path):
     (src / "d1.txt").write_text(text)
     # span covers quoted text: "BMP-6 (offsets include the opening quote)
     (src / "d1.a1").write_text('T1\tProtein 9 14\tBMP-6\n')
-    (src / "d1.a2").write_text('T2\tDeacetylation 15 21\tblocks\n')
+    (src / "d1.a2").write_text('T2\tNegative_regulation 15 21\tblocks\n')
 
     corpus = load_brat(spark, str(src), spec)
     inst_text = corpus["instances"].select("text").collect()[0][0]
@@ -221,7 +220,7 @@ def test_frame_eval_counts_slotless_frame_as_fp(spark, corpus):
     so a slot-less hypo frame is an unmatched singleton component = FP.
     An inner join from slot_fills used to drop it from evaluation."""
     extra = spark.createDataFrame(
-        [("10102628", "E999", "Gene_expression", "predicted", 999, None, 0)],
+        [("train00", "E999", "Gene_expression", "predicted", 999, None, 0)],
         corpus["frames"].schema,
     )
     hypo = dict(corpus)
@@ -230,7 +229,7 @@ def test_frame_eval_counts_slotless_frame_as_fp(spark, corpus):
         row["type_name"]: (row["tp"], row["fp"], row["fn"])
         for row in frame_eval_counts(hypo, corpus).collect()
     }
-    assert counts["Gene_expression"] == (20, 1, 0)
+    assert counts["Gene_expression"] == (12, 1, 0)
 
 
 def test_frame_eval_two_slots_same_target_deterministic(spark):

@@ -10,6 +10,7 @@ from dere_spark.operators.cardinality import split_overfilled_frames
 from dere_spark.plans.compiler import compile_plan
 from dere_spark.taskspec import load_task_spec
 from dere_spark.webtext import SPEC_PATH
+from tests.conftest import BIONLP_SPEC
 
 
 @pytest.fixture(scope="module")
@@ -57,9 +58,9 @@ def test_split_respects_min_cardinality(spark, plan):
 
 
 def test_split_unbounded_slot_keeps_all(spark):
-    # Binding.Theme in the BioNLP spec has min 0, max unbounded ->
-    # one variant containing every filler
-    plan = compile_plan(load_task_spec("/root/reference/task-specs/bionlpst.xml"))
+    # Binding.Theme in the BioNLP spec has no cardinality attribute, so
+    # both bounds are unbounded -> one variant containing every filler
+    plan = compile_plan(load_task_spec(BIONLP_SPEC))
     rows = [
         ("d", 3, "Binding", "Binding", 100),
         ("d", 3, "Binding", "Theme", 1),

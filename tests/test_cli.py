@@ -10,9 +10,10 @@ import sys
 
 import pytest
 
-SPEC = "/root/reference/task-specs/bionlpst.xml"
-TRAIN = "/root/reference/tutorial/data/train"
-TEST = "/root/reference/tutorial/data/test"
+from tests.conftest import BIONLP_SPEC as SPEC
+from tests.conftest import BIONLP_TEST as TEST
+from tests.conftest import BIONLP_TRAIN as TRAIN
+from tests.conftest import ROOT
 
 
 def _run(*args: str) -> subprocess.CompletedProcess:
@@ -97,10 +98,10 @@ def test_score_legacy_cli():
     proc = subprocess.run(
         [
             sys.executable, "-m", "dere_spark", "--cpus", "4", "score-legacy",
-            "--hypo", "/root/reference/tutorial/data/train",
-            "--gold", "/root/reference/tutorial/data/train",
+            "--hypo", TRAIN,
+            "--gold", TRAIN,
         ],
-        capture_output=True, text=True, timeout=400, cwd="/root/repo",
+        capture_output=True, text=True, timeout=400, cwd=ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-1500:]
     assert "-------------- EVENT EVALUATION ------------------" in proc.stdout

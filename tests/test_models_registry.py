@@ -2,12 +2,16 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from dere_spark.operators.corpus_ops import seeded_shuffle
 from dere_spark.operators.kernels import LinearPairScorer, score_pairs_batched
 from dere_spark.plans.models import load_model, save_model
+from dere_spark.refdata import REFERENCE_ROOT
 from dere_spark.sources.documents import load_documents
+from tests.conftest import BIONLP_SPEC, BIONLP_TEST, BIONLP_TRAIN, needs_reference
 
 
 def test_save_load_round_trip(tmp_path):
@@ -55,13 +59,13 @@ def test_seeded_shuffle_deterministic(spark, sf_dir):
 def test_learned_nested_save_load_predict(spark, tmp_path):
     """Full model lifecycle for the r2 extractor: train -> save_model ->
     load_model -> predict, with identical evaluation to the direct path."""
-    from dere_spark.bionlp import BIONLP_SPEC, predict_learned_nested, train_learned_nested
+    from dere_spark.bionlp import predict_learned_nested, train_learned_nested
     from dere_spark.plans.models import load_model, save_model
     from dere_spark.sources.brat import load_brat
     from dere_spark.taskspec import load_task_spec
 
     spec = load_task_spec(BIONLP_SPEC)
-    train = load_brat(spark, "/root/reference/tutorial/data/train", spec)
+    train = load_brat(spark, BIONLP_TRAIN, spec)
     lm = train_learned_nested(spark, train, iterations=120)
     save_model(lm, str(tmp_path / "lnm"))
     loaded, manifest = load_model(
@@ -75,12 +79,17 @@ def test_learned_nested_save_load_predict(spark, tmp_path):
 
     # apply the LOADED artifact to the (smaller) held-out split: the
     # full predict plan runs from the deserialized weights/dictionaries
-    test = load_brat(spark, "/root/reference/tutorial/data/test", spec)
+    test = load_brat(spark, BIONLP_TEST, spec)
     hypo = predict_learned_nested(spark, loaded, test)
     assert hypo["frames"].count() > 0
     assert hypo["spans"].where("source = 'predicted'").count() > 0
 
 
+@needs_reference(
+    "task-specs/bionlpst.xml",
+    "model-specs/bionlpst-baseline.json",
+    "model-specs/training_gazetteer_bionlp",
+)
 def test_build_bare_model_from_reference_specs(tmp_path):
     """The reference's `build` lifecycle step (dere/__main__.py:105-129):
     task spec + model spec -> initialized-but-untrained artifact. The
@@ -92,8 +101,8 @@ def test_build_bare_model_from_reference_specs(tmp_path):
 
     out = str(tmp_path / "bare")
     manifest = build_bare_model(
-        "/root/reference/task-specs/bionlpst.xml",
-        "/root/reference/model-specs/bionlpst-baseline.json",
+        os.path.join(REFERENCE_ROOT, "task-specs", "bionlpst.xml"),
+        os.path.join(REFERENCE_ROOT, "model-specs", "bionlpst-baseline.json"),
         out,
     )
     assert manifest["metadata"]["lifecycle"] == "bare"

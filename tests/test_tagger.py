@@ -8,13 +8,19 @@ hashed JVM-assembled features, scored via broadcast-join (no UDF).
 
 from __future__ import annotations
 
+import os
 import zlib
 
 import pyspark.sql.functions as F
 import pytest
 
-TRAIN_DIR = "/root/reference/tutorial/data/train"
-TEST_DIR = "/root/reference/tutorial/data/test"
+from dere_spark.refdata import REFERENCE_ROOT
+from tests.conftest import BIONLP_SPEC, BIONLP_TRAIN, needs_reference
+
+#: the reference's tutorial corpus: its numbers are what the gated
+#: quality and calibration tests below pin
+TRAIN_DIR = os.path.join(REFERENCE_ROOT, "tutorial", "data", "train")
+TEST_DIR = os.path.join(REFERENCE_ROOT, "tutorial", "data", "test")
 
 
 def test_feature_hash_matches_zlib_crc32(spark):
@@ -29,6 +35,7 @@ def test_feature_hash_matches_zlib_crc32(spark):
         assert got[v] == zlib.crc32(v.encode()) % FEATURE_DIM
 
 
+@needs_reference("model-specs/training_gazetteer_bionlp")
 def test_reference_gazetteer_loads(spark):
     from dere_spark.operators.tagger import load_reference_gazetteer
 
@@ -102,15 +109,18 @@ def test_type_assignment_rule_order(spark):
 
 def test_scoring_is_broadcast_join_no_udf(spark):
     """The viability scoring plan must contain no Python evaluation —
-    the model is a joined dimension table."""
-    from dere_spark.bionlp import tagger_tokens, train_trigger_tagger
+    the model is a joined dimension table. The candidate dictionary is
+    the gazetteer induced from train gold, standing in for the
+    reference's shipped one."""
+    from dere_spark.bionlp import induce_trigger_gazetteer, tagger_tokens, train_trigger_tagger
     from dere_spark.operators.tagger import candidate_features, score_candidates
     from dere_spark.sources.brat import load_brat
     from dere_spark.taskspec import load_task_spec
-    from dere_spark.bionlp import BIONLP_SPEC
 
-    train = load_brat(spark, TRAIN_DIR, load_task_spec(BIONLP_SPEC))
-    model, ttable, rates, gaz = train_trigger_tagger(spark, train, iterations=5)
+    train = load_brat(spark, BIONLP_TRAIN, load_task_spec(BIONLP_SPEC))
+    model, ttable, rates, gaz = train_trigger_tagger(
+        spark, train, gazetteer=induce_trigger_gazetteer(train), iterations=5
+    )
     cands = candidate_features(tagger_tokens(train), gaz, rates)
     plan = score_candidates(cands, model)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -118,6 +128,12 @@ def test_scoring_is_broadcast_join_no_udf(spark):
 
 
 @pytest.mark.slow  # full train + predict + evaluate on the tutorial corpus
+@needs_reference(
+    "task-specs/bionlpst.xml",
+    "tutorial/data/train",
+    "tutorial/data/test",
+    "model-specs/training_gazetteer_bionlp",
+)
 def test_tagged_path_beats_gazetteer_held_out(spark):
     """VERDICT r2 next-step #1 (learned token tagger): the tagged path
     must beat every prior held-out number. Measured r5: span F1 0.5647 —
@@ -267,6 +283,11 @@ def test_calibrate_type_thresholds_single_aggregation_semantics(spark):
 
 
 @pytest.mark.slow  # full train + two detections + two calibrations
+@needs_reference(
+    "task-specs/bionlpst.xml",
+    "tutorial/data/train",
+    "model-specs/training_gazetteer_bionlp",
+)
 def test_calibrate_unseen_thresholds_tutorial_values(spark):
     """r5 probe A (VERDICT r4 #7a), adopted: per-type UNSEEN viability
     gates learned from cross-fitted train detection. Values pinned on the

@@ -1,18 +1,26 @@
-"""Task-spec loader semantics, checked against all shipped reference specs
-(read-only fixtures) plus our webtext spec — mirrors the contract of the
-reference's two-pass loader (dere/taskspec.py:83-152)."""
+"""Task-spec loader semantics, checked against the in-repo specs (the
+webtext spec, the BioNLP-ST mini spec and the quote-attribution fixture)
+plus whichever reference task specs are present — mirrors the contract of
+the reference's two-pass loader (dere/taskspec.py:83-152)."""
 
 from __future__ import annotations
 
 import glob
+import os
 
 import pytest
 
 from dere_spark.plans import compile_plan
+from dere_spark.refdata import REFERENCE_ROOT
 from dere_spark.taskspec import FrameType, SpanType, load_task_spec
 from dere_spark.webtext import SPEC_PATH
+from tests.conftest import BIONLP_SPEC, QUOTE_SPEC
 
-REFERENCE_SPECS = sorted(glob.glob("/root/reference/task-specs/*.xml"))
+#: every spec the loader must accept: the in-repo ones always, the
+#: reference's shipped task specs where the checkout is present
+SHIPPED_SPECS = [SPEC_PATH, BIONLP_SPEC, QUOTE_SPEC] + sorted(
+    glob.glob(os.path.join(REFERENCE_ROOT, "task-specs", "*.xml"))
+)
 
 
 def test_webtext_spec_loads():
@@ -28,7 +36,11 @@ def test_webtext_spec_loads():
     assert manner.min_cardinality == 0 and manner.max_cardinality == 1
 
 
-@pytest.mark.parametrize("path", REFERENCE_SPECS)
+@pytest.mark.parametrize(
+    "path",
+    SHIPPED_SPECS,
+    ids=[os.path.join(*p.split(os.sep)[-2:]) for p in SHIPPED_SPECS],
+)
 def test_reference_specs_load(path):
     spec = load_task_spec(path)
     assert spec.span_types and spec.frame_types
@@ -37,7 +49,7 @@ def test_reference_specs_load(path):
 
 
 def test_bionlpst_recursive_frames():
-    spec = load_task_spec("/root/reference/task-specs/bionlpst.xml")
+    spec = load_task_spec(BIONLP_SPEC)
     reg = spec.frame_type("Regulation")
     theme = reg.slot("Theme")
     # Theme is union-typed over Protein span and the three regulation
@@ -61,7 +73,7 @@ def test_compile_plan_whitelist():
 
 
 def test_compile_plan_bionlp():
-    plan = compile_plan(load_task_spec("/root/reference/task-specs/bionlpst.xml"))
+    plan = compile_plan(load_task_spec(BIONLP_SPEC))
     # every frame type is anchored at its same-named trigger span type
     assert plan.anchor_span_types["Gene_expression"] == "Gene_expression"
     # (Gene_expression, Protein) must be a plausible anchor/filler pair
@@ -81,11 +93,11 @@ def _write(tmp_path, body: str) -> str:
 
 
 def test_structure_all_shipped_specs_valid():
-    """All 6 shipped reference specs pass the structural check (they are
-    DTD-valid upstream)."""
+    """Every in-repo spec and every present reference spec passes the
+    structural check (the reference's are DTD-valid upstream)."""
     from dere_spark.taskspec import load_task_spec
 
-    for path in REFERENCE_SPECS:
+    for path in SHIPPED_SPECS:
         load_task_spec(path)  # must not raise
 
 

@@ -1,5 +1,7 @@
 """S6 inline-XML corpus IO + S7 universal dispatch, tested on a synthetic
-quote-attribution document against the shipped quote.xml spec."""
+quote-attribution document against tests/fixtures/quote.xml (the shape of
+the reference's quote.xml spec) and on the in-repo BRAT corpus
+tests/fixtures/bionlp_mini."""
 
 from __future__ import annotations
 
@@ -8,8 +10,7 @@ import pytest
 from dere_spark.evaluation import evaluate
 from dere_spark.sources.xmlcorpus import load_corpus_auto, load_xml_corpus
 from dere_spark.taskspec import load_task_spec
-
-QUOTE_SPEC = "/root/reference/task-specs/quote.xml"
+from tests.conftest import BIONLP_SPEC, BIONLP_TRAIN, QUOTE_SPEC
 
 DOC = """<doc>
   <HEADING>A conversation</HEADING>
@@ -66,11 +67,9 @@ def test_universal_dispatch(spark, tmp_path):
     (tmp_path / "doc1.xml").write_text(DOC)
     c = load_corpus_auto(spark, str(tmp_path), spec)
     assert c["spans"].count() == 3
-    bionlp_spec = load_task_spec("/root/reference/task-specs/bionlpst.xml")
-    c2 = load_corpus_auto(
-        spark, "/root/reference/tutorial/data/train", bionlp_spec
-    )
-    assert c2["spans"].count() == 148
+    bionlp_spec = load_task_spec(BIONLP_SPEC)
+    c2 = load_corpus_auto(spark, BIONLP_TRAIN, bionlp_spec)
+    assert c2["spans"].count() == 127  # 68 .a1 + 59 .a2 T lines
     # one dict shape regardless of detected format: 'skipped' exists for
     # BRAT too (empty by construction — the BRAT loader fails hard)
     assert c["skipped"].columns == ["doc_id", "error"]
