@@ -6,7 +6,8 @@ These floors assert the MACHINERY (schema compilation, trigger detection,
 candidate generation, frame assembly, evaluation) — not model quality; a
 learned kernel slots into detect/score to raise them. The floors are
 tutorial-corpus numbers, so they run only where the reference checkout is
-present; the machinery tests run on tests/fixtures/bionlp_mini."""
+present; the gazetteer check runs on tests/fixtures/bionlp_mini, with a
+``*_tutorial`` twin on the tutorial corpus."""
 
 from __future__ import annotations
 
@@ -20,18 +21,16 @@ from dere_spark.bionlp import (
     induce_trigger_gazetteer,
     run_bionlp_eval,
 )
-from dere_spark.refdata import REFERENCE_ROOT
 from dere_spark.sources.brat import load_brat
 from dere_spark.taskspec import load_task_spec
-from tests.conftest import BIONLP_SPEC, BIONLP_TRAIN, needs_reference
+from tests.conftest import MINI_SPEC, MINI_TRAIN, REF_SPEC, REF_TRAIN, needs_reference
 
-TRAIN = os.path.join(REFERENCE_ROOT, "tutorial", "data", "train")
-needs_tutorial = needs_reference("task-specs/bionlpst.xml", "tutorial/data/train")
+needs_tutorial = needs_reference(REF_SPEC, REF_TRAIN)
 
 
 @pytest.fixture(scope="module")
 def result(spark):
-    return run_bionlp_eval(spark, TRAIN, TRAIN, gazetteer_flat)
+    return run_bionlp_eval(spark, REF_TRAIN, REF_TRAIN, gazetteer_flat)
 
 
 @needs_tutorial
@@ -51,30 +50,40 @@ def test_frame_extraction_produces_true_positives(result):
     assert len(answered) >= 8
 
 
-def test_gazetteer_is_deterministic(spark):
-    spec = load_task_spec(BIONLP_SPEC)
-    train = load_brat(spark, BIONLP_TRAIN, spec)
+def _induce_twice(spark, spec_path, train_dir):
+    """The gazetteer induced twice from one load: identical both times,
+    and only predict=True types are induced (Protein is given)."""
+    train = load_brat(spark, train_dir, load_task_spec(spec_path))
     g1 = sorted(map(tuple, induce_trigger_gazetteer(train).collect()))
     g2 = sorted(map(tuple, induce_trigger_gazetteer(train).collect()))
     assert g1 == g2
+    assert all(t != "Protein" for _, t in g1)
+    return g1
+
+
+def test_gazetteer_is_deterministic(spark):
+    g = _induce_twice(spark, MINI_SPEC, MINI_TRAIN)
     # one row per lowercased gold trigger surface (.a2 T lines; the
     # fixture has no surface under two types, so none is collapsed)
     surfaces = {
         line.split("\t")[2].lower()
-        for path in glob.glob(os.path.join(BIONLP_TRAIN, "*.a2"))
+        for path in glob.glob(os.path.join(MINI_TRAIN, "*.a2"))
         for line in open(path).read().splitlines()
         if line.startswith("T")
     }
-    assert [t for t, _ in g1] == sorted(surfaces)
-    # only predict=True types are induced (Protein is given)
-    assert all(t != "Protein" for _, t in g1)
+    assert [t for t, _ in g] == sorted(surfaces)
+
+
+@needs_tutorial
+def test_gazetteer_is_deterministic_tutorial(spark):
+    assert len(_induce_twice(spark, REF_SPEC, REF_TRAIN)) > 30
 
 
 @needs_tutorial
 def test_nested_extraction_beats_flat(spark, result):
     from dere_spark.bionlp import gazetteer_nested
 
-    nested = run_bionlp_eval(spark, TRAIN, TRAIN, gazetteer_nested)
+    nested = run_bionlp_eval(spark, REF_TRAIN, REF_TRAIN, gazetteer_nested)
     # recursive-frame prediction must beat span-Theme-only extraction
     assert nested.fscore("frame") > result.fscore("frame"), (
         f"nested {nested.fscore('frame'):.4f} <= flat {result.fscore('frame'):.4f}"
@@ -92,7 +101,7 @@ def test_learned_nested_hits_quality_gate(spark):
     0.4444 span-only ceiling and 0.25 for the heuristic nested path."""
     from dere_spark.bionlp import learned_nested
 
-    r = run_bionlp_eval(spark, TRAIN, TRAIN, learned_nested)
+    r = run_bionlp_eval(spark, REF_TRAIN, REF_TRAIN, learned_nested)
     assert r.fscore("frame") >= 0.40, r.fscore("frame")
     assert r.fscore("span") >= 0.78, r.fscore("span")
 

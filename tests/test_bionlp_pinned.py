@@ -28,10 +28,10 @@ import dere_spark.bionlp as B
 import dere_spark.operators.tagger as tagger
 from dere_spark.sources.brat import dump_brat, load_brat
 from dere_spark.taskspec import load_task_spec
-from tests.conftest import BIONLP_MINI as FIXTURE
-from tests.conftest import BIONLP_SPEC as SPEC
-from tests.conftest import BIONLP_TEST as TEST
-from tests.conftest import BIONLP_TRAIN as TRAIN
+from tests.conftest import MINI as FIXTURE
+from tests.conftest import MINI_SPEC as SPEC
+from tests.conftest import MINI_TEST as TEST
+from tests.conftest import MINI_TRAIN as TRAIN
 from tests.conftest import ROOT
 
 TABLES = ("spans", "frames", "slot_fills")

@@ -1,6 +1,11 @@
 """BRAT IO + evaluation semantics on the in-repo BioNLP-ST-shaped corpus
-(tests/fixtures/bionlp_mini: its spec and 10 train documents). Expected
-counts are read off the fixture files themselves."""
+(tests/fixtures/bionlp_mini: its spec and 10 train documents), with
+expected counts read off the fixture files themselves. Each check that
+reads a corpus or its spec has a ``*_tutorial`` twin that runs the same
+body on the reference's tutorial corpus and task spec with that corpus's
+counts, wherever the reference checkout is present; the tutorial corpus
+carries what the fixture lacks (spec-filtered ``Entity`` T-lines, an
+unterminated last ``.txt`` line, a2-local Entity arguments)."""
 
 from __future__ import annotations
 
@@ -10,52 +15,87 @@ import pytest
 from dere_spark.evaluation import evaluate, frame_eval_counts, span_eval_counts
 from dere_spark.sources.brat import dump_brat, load_brat, span_fidelity_violations
 from dere_spark.taskspec import load_task_spec
-from tests.conftest import BIONLP_SPEC as SPEC
-from tests.conftest import BIONLP_TRAIN as TRAIN
+from tests.conftest import MINI_SPEC, MINI_TRAIN, REF_SPEC, REF_TRAIN, needs_reference
+
+needs_tutorial = needs_reference(REF_SPEC, REF_TRAIN)
 
 
-@pytest.fixture(scope="module")
-def spec():
-    return load_task_spec(SPEC)
-
-
-@pytest.fixture(scope="module")
-def corpus(spark, spec):
-    c = load_brat(spark, TRAIN, spec)
+def _persisted(spark, train_dir, spec):
+    c = load_brat(spark, train_dir, spec)
     for df in c.values():
         df.persist()
     return c
 
 
-def test_load_counts(corpus):
+@pytest.fixture(scope="module")
+def spec():
+    return load_task_spec(MINI_SPEC)
+
+
+@pytest.fixture(scope="module")
+def corpus(spark, spec):
+    return _persisted(spark, MINI_TRAIN, spec)
+
+
+@pytest.fixture(scope="module")
+def tutorial_spec():
+    return load_task_spec(REF_SPEC)
+
+
+@pytest.fixture(scope="module")
+def tutorial_corpus(spark, tutorial_spec):
+    return _persisted(spark, REF_TRAIN, tutorial_spec)
+
+
+def test_load_counts(corpus, expected=(60, 127, 59)):
     # 10 docs, 60 .txt lines in all; 68 .a1 + 59 .a2 T lines, every type
     # in the spec; 59 E lines, all resolvable.
-    assert corpus["instances"].count() == 60
-    assert corpus["spans"].count() == 127
-    assert corpus["frames"].count() == 59
+    instances, spans, frames = expected
+    assert corpus["instances"].count() == instances
+    assert corpus["spans"].count() == spans
+    assert corpus["frames"].count() == frames
     assert span_fidelity_violations(corpus["spans"]).count() == 0
 
 
-def test_given_vs_gold_provenance(corpus):
+@needs_tutorial
+def test_load_counts_tutorial(tutorial_corpus):
+    # 8 docs x 2 lines (title + abstract); 156 T lines of which 8 are
+    # 'Entity' (not in spec -> skipped); 75 E lines, all resolvable.
+    test_load_counts(tutorial_corpus, expected=(16, 148, 75))
+
+
+def test_given_vs_gold_provenance(corpus, expected=(68, 59)):
+    given, gold = expected
     by_source = dict(
         corpus["spans"].groupBy("source").count().collect()
     )
-    assert by_source["given"] == 68  # Protein spans from .a1
-    assert by_source["gold"] == 59
+    assert by_source["given"] == given  # Protein spans from .a1
+    assert by_source["gold"] == gold
     assert corpus["frames"].where(F.col("source") != "gold").count() == 0
 
 
-def test_self_evaluation_perfect(corpus):
+@needs_tutorial
+def test_given_vs_gold_provenance_tutorial(tutorial_corpus):
+    test_given_vs_gold_provenance(tutorial_corpus, expected=(79, 69))
+
+
+def test_self_evaluation_perfect(corpus, expected=(59, 59)):
     r = evaluate(corpus, corpus)
     assert r.precision() == 1.0 and r.recall() == 1.0
     # given spans are excluded from evaluation (evaluation.py:18-21)
     tp_span = sum(v[0] for (k, _), v in r.counts.items() if k == "span")
-    assert tp_span == 59
     tp_frame = sum(v[0] for (k, _), v in r.counts.items() if k == "frame")
-    assert tp_frame == 59
+    assert (tp_span, tp_frame) == expected
 
 
-def test_span_eval_detects_fp_fn(spark, corpus):
+@needs_tutorial
+def test_self_evaluation_perfect_tutorial(tutorial_corpus):
+    test_self_evaluation_perfect(tutorial_corpus, expected=(69, 75))
+
+
+def test_span_eval_detects_fp_fn(
+    spark, corpus, gene_expression=(0, 12, 12), binding=(8, 0, 0)
+):
     # perturb: shift every Gene_expression span right by 1 -> each becomes
     # one FP (hypo not in gold) and one FN (gold unmatched)
     spans = corpus["spans"]
@@ -69,14 +109,22 @@ def test_span_eval_detects_fp_fn(spark, corpus):
         row["type_name"]: (row["tp"], row["fp"], row["fn"])
         for row in span_eval_counts(perturbed, spans).collect()
     }
-    ge = counts["Gene_expression"]
-    assert ge == (0, 12, 12)
+    assert counts["Gene_expression"] == gene_expression
     # untouched types unaffected
-    assert counts["Binding"] == (8, 0, 0)
+    assert counts["Binding"] == binding
 
 
-def test_frame_eval_detects_missing_frame(spark, corpus):
-    # drop all Binding frames from hypo -> 8 FN, no FP
+@needs_tutorial
+def test_span_eval_detects_fp_fn_tutorial(spark, tutorial_corpus):
+    test_span_eval_detects_fp_fn(
+        spark, tutorial_corpus, gene_expression=(0, 19, 19), binding=(1, 0, 0)
+    )
+
+
+def test_frame_eval_detects_missing_frame(
+    spark, corpus, binding=(0, 0, 8), gene_expression_tp=12
+):
+    # drop all Binding frames from hypo -> one FN each, no FP
     hypo = dict(corpus)
     hypo["frames"] = corpus["frames"].where(F.col("frame_type") != "Binding")
     hypo["slot_fills"] = corpus["slot_fills"].where(
@@ -86,8 +134,15 @@ def test_frame_eval_detects_missing_frame(spark, corpus):
         row["type_name"]: (row["tp"], row["fp"], row["fn"])
         for row in frame_eval_counts(hypo, corpus).collect()
     }
-    assert counts["Binding"] == (0, 0, 8)
-    assert counts["Gene_expression"][0] == 12  # unaffected
+    assert counts["Binding"] == binding
+    assert counts["Gene_expression"][0] == gene_expression_tp  # unaffected
+
+
+@needs_tutorial
+def test_frame_eval_detects_missing_frame_tutorial(spark, tutorial_corpus):
+    test_frame_eval_detects_missing_frame(
+        spark, tutorial_corpus, binding=(0, 0, 1), gene_expression_tp=20
+    )
 
 
 def test_frame_eval_nested_regulation_structure(spark, corpus):
@@ -111,19 +166,24 @@ def test_frame_eval_nested_regulation_structure(spark, corpus):
     assert fp > 0 and fn > 0
 
 
-def test_dump_round_trip_spans_byte_identical(spark, spec, corpus):
+@needs_tutorial
+def test_frame_eval_nested_regulation_structure_tutorial(spark, tutorial_corpus):
+    test_frame_eval_nested_regulation_structure(spark, tutorial_corpus)
+
+
+def test_dump_round_trip_spans_byte_identical(corpus, train_dir=MINI_TRAIN):
     # T-lines of the dump must be byte-identical (as a set) to the input
     # annotation files: indices preserved, absolute offsets re-derived
     # (reference invariant: brat_corpus_io.py:46-58,158).
     import glob as g
 
     dumped = {r["doc_id"]: r for r in dump_brat(corpus, just_predictions=False).collect()}
-    for path in sorted(g.glob(f"{TRAIN}/*.a1")):
+    for path in sorted(g.glob(f"{train_dir}/*.a1")):
         doc_id = path.rsplit("/", 1)[1][:-3]
         want = {l for l in open(path).read().splitlines() if l.startswith("T")}
         got = {l for l in dumped[doc_id]["a1"].splitlines() if l.startswith("T")}
         assert got == want, doc_id
-    for path in sorted(g.glob(f"{TRAIN}/*.a2")):
+    for path in sorted(g.glob(f"{train_dir}/*.a2")):
         doc_id = path.rsplit("/", 1)[1][:-3]
         want = {l for l in open(path).read().splitlines() if l.startswith("T")}
         # spec-filtered types (Entity) are dropped on load; compare the kept set
@@ -132,11 +192,16 @@ def test_dump_round_trip_spans_byte_identical(spark, spec, corpus):
         assert got == want, doc_id
 
 
-def test_dump_round_trip_text_byte_identical(spark, corpus):
+@needs_tutorial
+def test_dump_round_trip_spans_byte_identical_tutorial(tutorial_corpus):
+    test_dump_round_trip_spans_byte_identical(tutorial_corpus, REF_TRAIN)
+
+
+def test_dump_round_trip_text_byte_identical(corpus, train_dir=MINI_TRAIN):
     import glob as g
 
     dumped = {r["doc_id"]: r for r in dump_brat(corpus, just_predictions=False).collect()}
-    for path in sorted(g.glob(f"{TRAIN}/*.txt")):
+    for path in sorted(g.glob(f"{train_dir}/*.txt")):
         doc_id = path.rsplit("/", 1)[1][:-4]
         raw = open(path).read()
         # the reference chops the final char of an unterminated last line
@@ -146,6 +211,11 @@ def test_dump_round_trip_text_byte_identical(spark, corpus):
             for line in open(path)
         )
         assert dumped[doc_id]["txt"] == want, doc_id
+
+
+@needs_tutorial
+def test_dump_round_trip_text_byte_identical_tutorial(tutorial_corpus):
+    test_dump_round_trip_text_byte_identical(tutorial_corpus, REF_TRAIN)
 
 
 def test_dump_reload_evaluates_perfect(spark, spec, corpus, tmp_path):
@@ -162,7 +232,16 @@ def test_dump_reload_evaluates_perfect(spark, spec, corpus, tmp_path):
     assert r.precision() == 1.0 and r.recall() == 1.0, "\n" + r.report()
 
 
-def test_quote_normalization_round_trip(spark, spec, tmp_path):
+@needs_tutorial
+def test_dump_reload_evaluates_perfect_tutorial(
+    spark, tutorial_spec, tutorial_corpus, tmp_path
+):
+    test_dump_reload_evaluates_perfect(spark, tutorial_spec, tutorial_corpus, tmp_path)
+
+
+def test_quote_normalization_round_trip(
+    spark, spec, tmp_path, trigger_type="Negative_regulation"
+):
     """P5: '"'→"'" is destructive and happens before tokenize — dumps emit
     the mutated text everywhere (.txt AND derived span text in .ann),
     offsets unchanged (reference span_classifier.py:263-264; Span.text is
@@ -173,7 +252,8 @@ def test_quote_normalization_round_trip(spark, spec, tmp_path):
     (src / "d1.txt").write_text(text)
     # span covers quoted text: "BMP-6 (offsets include the opening quote)
     (src / "d1.a1").write_text('T1\tProtein 9 14\tBMP-6\n')
-    (src / "d1.a2").write_text('T2\tNegative_regulation 15 21\tblocks\n')
+    # a trigger type the spec declares, so the load keeps the .a2 line
+    (src / "d1.a2").write_text(f"T2\t{trigger_type} 15 21\tblocks\n")
 
     corpus = load_brat(spark, str(src), spec)
     inst_text = corpus["instances"].select("text").collect()[0][0]
@@ -205,6 +285,13 @@ def test_quote_normalization_round_trip(spark, spec, tmp_path):
     assert re_dumped["d1"]["a1"] == dumped["d1"]["a1"]
 
 
+@needs_tutorial
+def test_quote_normalization_round_trip_tutorial(spark, tutorial_spec, tmp_path):
+    test_quote_normalization_round_trip(
+        spark, tutorial_spec, tmp_path, trigger_type="Deacetylation"
+    )
+
+
 def test_quote_normalization_can_be_disabled(spark, spec, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
@@ -214,13 +301,20 @@ def test_quote_normalization_can_be_disabled(spark, spec, tmp_path):
     assert '"' in corpus["instances"].select("text").collect()[0][0]
 
 
-def test_frame_eval_counts_slotless_frame_as_fp(spark, corpus):
+@needs_tutorial
+def test_quote_normalization_can_be_disabled_tutorial(spark, tutorial_spec, tmp_path):
+    test_quote_normalization_can_be_disabled(spark, tutorial_spec, tmp_path)
+
+
+def test_frame_eval_counts_slotless_frame_as_fp(
+    spark, corpus, doc_id="train00", gene_expression=(12, 1, 0)
+):
     """A predicted frame with ZERO slot fills must still be counted: the
     reference's frame_graph adds every frame as a node (corpus.py:96-98),
     so a slot-less hypo frame is an unmatched singleton component = FP.
     An inner join from slot_fills used to drop it from evaluation."""
     extra = spark.createDataFrame(
-        [("train00", "E999", "Gene_expression", "predicted", 999, None, 0)],
+        [(doc_id, "E999", "Gene_expression", "predicted", 999, None, 0)],
         corpus["frames"].schema,
     )
     hypo = dict(corpus)
@@ -229,7 +323,14 @@ def test_frame_eval_counts_slotless_frame_as_fp(spark, corpus):
         row["type_name"]: (row["tp"], row["fp"], row["fn"])
         for row in frame_eval_counts(hypo, corpus).collect()
     }
-    assert counts["Gene_expression"] == (12, 1, 0)
+    assert counts["Gene_expression"] == gene_expression
+
+
+@needs_tutorial
+def test_frame_eval_counts_slotless_frame_as_fp_tutorial(spark, tutorial_corpus):
+    test_frame_eval_counts_slotless_frame_as_fp(
+        spark, tutorial_corpus, doc_id="10102628", gene_expression=(20, 1, 0)
+    )
 
 
 def test_frame_eval_two_slots_same_target_deterministic(spark):
@@ -282,6 +383,11 @@ def test_span_ending_at_newline_slot_not_loaded(spark, spec, tmp_path):
     assert "T1" in tags and "T2" not in tags
 
 
+@needs_tutorial
+def test_span_ending_at_newline_slot_not_loaded_tutorial(spark, tutorial_spec, tmp_path):
+    test_span_ending_at_newline_slot_not_loaded(spark, tutorial_spec, tmp_path)
+
+
 def test_dump_just_predictions_nulls_txt_and_a1(spark, corpus):
     """Reference parity (brat_corpus_io.py:38-42): just_predictions routes
     .txt/.a1 to devnull and writes only .a2 — it does NOT filter a2 by
@@ -291,3 +397,8 @@ def test_dump_just_predictions_nulls_txt_and_a1(spark, corpus):
     for doc_id, r in rows.items():
         assert r["txt"] is None and r["a1"] is None
         assert r["a2"] == full[doc_id]["a2"]  # a2 identical in both modes
+
+
+@needs_tutorial
+def test_dump_just_predictions_nulls_txt_and_a1_tutorial(spark, tutorial_corpus):
+    test_dump_just_predictions_nulls_txt_and_a1(spark, tutorial_corpus)

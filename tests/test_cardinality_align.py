@@ -10,7 +10,7 @@ from dere_spark.operators.cardinality import split_overfilled_frames
 from dere_spark.plans.compiler import compile_plan
 from dere_spark.taskspec import load_task_spec
 from dere_spark.webtext import SPEC_PATH
-from tests.conftest import BIONLP_SPEC
+from tests.conftest import MINI_SPEC, REF_SPEC, needs_reference
 
 
 @pytest.fixture(scope="module")
@@ -57,10 +57,10 @@ def test_split_respects_min_cardinality(spark, plan):
     assert len(out) == 2  # single variant: anchor + manner
 
 
-def test_split_unbounded_slot_keeps_all(spark):
-    # Binding.Theme in the BioNLP spec has no cardinality attribute, so
-    # both bounds are unbounded -> one variant containing every filler
-    plan = compile_plan(load_task_spec(BIONLP_SPEC))
+def test_split_unbounded_slot_keeps_all(spark, spec_path=MINI_SPEC):
+    # Binding.Theme in the mini BioNLP spec has no cardinality attribute,
+    # so both bounds are unbounded -> one variant containing every filler
+    plan = compile_plan(load_task_spec(spec_path))
     rows = [
         ("d", 3, "Binding", "Binding", 100),
         ("d", 3, "Binding", "Theme", 1),
@@ -71,6 +71,12 @@ def test_split_unbounded_slot_keeps_all(spark):
     assert {r["variant"] for r in out} == {0}
     themes = {r["filler_id"] for r in out if r["slot_name"] == "Theme"}
     assert themes == {1, 2, 3}
+
+
+@needs_reference(REF_SPEC)
+def test_split_unbounded_slot_keeps_all_reference(spark):
+    # the reference spec's Binding.Theme: min 0, max unbounded
+    test_split_unbounded_slot_keeps_all(spark, REF_SPEC)
 
 
 def test_expand_span_bounds_reference_semantics():

@@ -1,5 +1,8 @@
 """CLI entry points — the reference's build/train/predict/evaluate surface
-(dere/__main__.py) driven through python -m dere_spark."""
+(dere/__main__.py) driven through python -m dere_spark, on the in-repo
+corpus tests/fixtures/bionlp_mini. Each corpus test has a ``*_tutorial``
+twin that runs the same body on the reference's task spec and tutorial
+corpus, wherever that checkout is present."""
 
 from __future__ import annotations
 
@@ -10,10 +13,21 @@ import sys
 
 import pytest
 
-from tests.conftest import BIONLP_SPEC as SPEC
-from tests.conftest import BIONLP_TEST as TEST
-from tests.conftest import BIONLP_TRAIN as TRAIN
-from tests.conftest import ROOT
+from tests.conftest import (
+    MINI_SPEC,
+    MINI_TEST,
+    MINI_TRAIN,
+    REF_SPEC,
+    REF_TEST,
+    REF_TRAIN,
+    ROOT,
+    needs_reference,
+)
+
+#: (spec, train, test) of each corpus; both test splits hold 4 documents
+MINI = (MINI_SPEC, MINI_TRAIN, MINI_TEST)
+TUTORIAL = (REF_SPEC, REF_TRAIN, REF_TEST)
+needs_tutorial = needs_reference(*TUTORIAL)
 
 
 def _run(*args: str) -> subprocess.CompletedProcess:
@@ -24,11 +38,12 @@ def _run(*args: str) -> subprocess.CompletedProcess:
 
 
 @pytest.mark.slow
-def test_predict_then_evaluate_workflow(tmp_path):
+def test_predict_then_evaluate_workflow(tmp_path, corpus=MINI):
+    spec, train, test = corpus
     out = tmp_path / "pred"
     r = _run(
-        "predict", "--spec", SPEC, "--corpus", TEST,
-        "--corpus-train", TRAIN, "--out", str(out),
+        "predict", "--spec", spec, "--corpus", test,
+        "--corpus-train", train, "--out", str(out),
     )
     assert r.returncode == 0, r.stderr[-2000:]
     a2s = sorted(glob.glob(f"{out}/*.a2"))
@@ -41,13 +56,19 @@ def test_predict_then_evaluate_workflow(tmp_path):
     # assemble the hypo dir (txt + given a1 + predicted a2) and evaluate
     hypo = tmp_path / "hypo"
     hypo.mkdir()
-    for f in glob.glob(f"{TEST}/*.txt") + glob.glob(f"{TEST}/*.a1"):
+    for f in glob.glob(f"{test}/*.txt") + glob.glob(f"{test}/*.a1"):
         shutil.copy(f, hypo)
     for f in a2s:
         shutil.copy(f, hypo)
-    r2 = _run("evaluate", "--spec", SPEC, "--hypo", str(hypo), "--gold", TEST)
+    r2 = _run("evaluate", "--spec", spec, "--hypo", str(hypo), "--gold", test)
     assert r2.returncode == 0, r2.stderr[-2000:]
     assert "=[FRAME TOTAL]=" in r2.stdout and "=[SPAN TOTAL]=" in r2.stdout
+
+
+@pytest.mark.slow
+@needs_tutorial
+def test_predict_then_evaluate_workflow_tutorial(tmp_path):
+    test_predict_then_evaluate_workflow(tmp_path, TUTORIAL)
 
 
 @pytest.mark.slow
@@ -59,9 +80,10 @@ def test_extract_cli(tmp_path):
 
 
 @pytest.mark.slow
-def test_train_cli(tmp_path):
+def test_train_cli(tmp_path, corpus=MINI):
+    spec, train, _ = corpus
     model_dir = tmp_path / "model"
-    r = _run("train", "--spec", SPEC, "--corpus", TRAIN, "--model-dir", str(model_dir))
+    r = _run("train", "--spec", spec, "--corpus", train, "--model-dir", str(model_dir))
     assert r.returncode == 0, r.stderr[-2000:]
     import json
 
@@ -74,15 +96,22 @@ def test_train_cli(tmp_path):
 
 
 @pytest.mark.slow
-def test_train_then_predict_lifecycle(tmp_path):
+@needs_tutorial
+def test_train_cli_tutorial(tmp_path):
+    test_train_cli(tmp_path, TUTORIAL)
+
+
+@pytest.mark.slow
+def test_train_then_predict_lifecycle(tmp_path, corpus=MINI):
     """The advertised train -> predict cycle end-to-end: the artifact
     `train` saves must load and predict under `predict --model-dir`."""
+    spec, train, test = corpus
     model_dir = tmp_path / "model"
-    r = _run("train", "--spec", SPEC, "--corpus", TRAIN, "--model-dir", str(model_dir))
+    r = _run("train", "--spec", spec, "--corpus", train, "--model-dir", str(model_dir))
     assert r.returncode == 0, r.stderr[-2000:]
     out = tmp_path / "pred"
     r2 = _run(
-        "predict", "--spec", SPEC, "--corpus", TEST,
+        "predict", "--spec", spec, "--corpus", test,
         "--model-dir", str(model_dir), "--out", str(out),
     )
     assert r2.returncode == 0, r2.stderr[-2000:]
@@ -91,18 +120,29 @@ def test_train_then_predict_lifecycle(tmp_path):
     assert any(l.startswith("E") for l in open(a2s[0]).read().splitlines())
 
 
-def test_score_legacy_cli():
+@pytest.mark.slow
+@needs_tutorial
+def test_train_then_predict_lifecycle_tutorial(tmp_path):
+    test_train_then_predict_lifecycle(tmp_path, TUTORIAL)
+
+
+def test_score_legacy_cli(train_dir=MINI_TRAIN):
     import subprocess
     import sys
 
     proc = subprocess.run(
         [
             sys.executable, "-m", "dere_spark", "--cpus", "4", "score-legacy",
-            "--hypo", TRAIN,
-            "--gold", TRAIN,
+            "--hypo", train_dir,
+            "--gold", train_dir,
         ],
         capture_output=True, text=True, timeout=400, cwd=ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-1500:]
     assert "-------------- EVENT EVALUATION ------------------" in proc.stdout
     assert "=[ALL-TOTAL]" in proc.stdout
+
+
+@needs_reference(REF_TRAIN)
+def test_score_legacy_cli_tutorial():
+    test_score_legacy_cli(REF_TRAIN)

@@ -2,12 +2,11 @@
 counts (event dedup, Equiv canonicalization, recursive event equality,
 M-lines, soft spans, per-file duplication adjustment), plus the A4
 relational adjustment operator and gold-vs-gold runs on the in-repo corpus
-tests/fixtures/bionlp_mini (and on the reference's tutorial corpus where
-that checkout is present)."""
+tests/fixtures/bionlp_mini. Each of those runs has a ``*_tutorial`` twin
+on the reference's tutorial corpus, which runs wherever that checkout is
+present, as does the tutorial self-evaluation table."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -18,8 +17,9 @@ from dere_spark.evaluation_legacy import (
     load_legacy_pairs,
     score_document,
 )
-from dere_spark.refdata import REFERENCE_ROOT
-from tests.conftest import BIONLP_TRAIN, needs_reference
+from tests.conftest import MINI_TRAIN, REF_TRAIN, needs_reference
+
+needs_tutorial = needs_reference(REF_TRAIN)
 
 TEXT1 = "ABC phosphorylates DEF and GHI binds JKL."
 A1_1 = (
@@ -242,7 +242,7 @@ def test_usage_variant_span_class_fallback():
     assert _counts(bionlp_style, "positive", "event") == [1, 0, 1, 0]
 
 
-@needs_reference("tutorial/data/train")
+@needs_tutorial
 def test_tutorial_self_evaluation(spark):
     """Gold vs gold over the reference tutorial corpus, full Spark
     surface. NOT all-perfect by design: the standard scorer's eq_class
@@ -250,8 +250,7 @@ def test_tutorial_self_evaluation(spark):
     the usage variant has a span-class fallback), so Localization events
     never match themselves, and regulations/negations that recursively
     reference them fail too. These counts pin that reference behavior."""
-    tutorial_train = os.path.join(REFERENCE_ROOT, "tutorial", "data", "train")
-    pairs = load_legacy_pairs(spark, tutorial_train, tutorial_train)
+    pairs = load_legacy_pairs(spark, REF_TRAIN, REF_TRAIN)
     rows = {
         (r["kind"], r["type_name"]): r
         for r in legacy_event_scores(pairs).collect()
@@ -306,10 +305,17 @@ def test_adjusted_match_counts_operator(spark):
     assert rows["B"]["n_gold"] == 2
 
 
-def test_render_legacy_report_format(spark):
+def test_render_legacy_report_format(
+    spark, train_dir=MINI_TRAIN, cells=("12 (12)", "12 (12)", "59 (59)")
+):
+    """``cells``: the Gene_expression span and event counts and the
+    ALL-TOTAL event count, as printed. The fixture has no a2-local Entity
+    arguments, so every event matches itself: ALL-TOTAL = SVT(34/34) +
+    Binding(8/8) + REG(17/17) events."""
     from dere_spark.evaluation_legacy import render_legacy_report
 
-    pairs = load_legacy_pairs(spark, BIONLP_TRAIN, BIONLP_TRAIN)
+    ge_span, ge_event, all_total = cells
+    pairs = load_legacy_pairs(spark, train_dir, train_dir)
     txt = render_legacy_report(legacy_event_scores(pairs))
     lines = txt.splitlines()
     assert lines[0].startswith("Class")
@@ -319,17 +325,24 @@ def test_render_legacy_report_format(spark):
                    "=[REG-TOTAL]=", "=[ALL-TOTAL]"):
         assert marker in txt, marker
     ge_lines = [l for l in lines if l.startswith("Gene_expression")]
-    assert ge_lines[0].split("\t")[1].strip() == "12 (12)"  # span section
-    cells = ge_lines[1].split("\t")  # event section
-    assert cells[1].strip() == "12 (12)"
-    assert cells[3] == "100.0" and cells[4] == "100.0" and cells[5] == "100.0"
-    # ALL-TOTAL = SVT(34/34) + Binding(8/8) + REG(17/17) events: the
-    # fixture has no a2-local Entity arguments, so every event matches itself
+    assert ge_lines[0].split("\t")[1].strip() == ge_span  # span section
+    row = ge_lines[1].split("\t")  # event section
+    assert row[1].strip() == ge_event
+    assert row[3] == "100.0" and row[4] == "100.0" and row[5] == "100.0"
     allt = next(l for l in lines if l.startswith("=[ALL-TOTAL]"))
-    assert allt.split("\t")[1].strip() == "59 (59)"
+    assert allt.split("\t")[1].strip() == all_total
 
 
-def test_usage_report_event_total_label(spark):
+@needs_tutorial
+def test_render_legacy_report_format_tutorial(spark):
+    # ALL-TOTAL = SVT(34/30) + Binding(1/1) + REG(40/34) events: events
+    # with a2-local Entity arguments do not match themselves
+    test_render_legacy_report_format(
+        spark, REF_TRAIN, cells=("19 (19)", "20 (20)", "75 (65)")
+    )
+
+
+def test_usage_report_event_total_label(spark, train_dir=MINI_TRAIN):
     """The usage scorer labels its event total '=[EVENT-TOTAL]=' where
     the bionlp scorer prints '=[ALL-TOTAL]' (deRE_evaluation_usage.py:990
     vs deRE_evaluation.py:1055) — byte compatibility means matching each
@@ -339,7 +352,7 @@ def test_usage_report_event_total_label(spark):
         render_legacy_report,
     )
 
-    pairs = load_legacy_pairs(spark, BIONLP_TRAIN, BIONLP_TRAIN)
+    pairs = load_legacy_pairs(spark, train_dir, train_dir)
     txt = render_legacy_report(
         legacy_event_scores(pairs, variant="usage"), variant="usage"
     )
@@ -348,7 +361,12 @@ def test_usage_report_event_total_label(spark):
     assert "=[TOTAL]=" in txt  # the span section's label is shared
 
 
-def test_mixed_extension_hypothesis_dir(spark, tmp_path):
+@needs_tutorial
+def test_usage_report_event_total_label_tutorial(spark):
+    test_usage_report_event_total_label(spark, REF_TRAIN)
+
+
+def test_mixed_extension_hypothesis_dir(spark, tmp_path, src=MINI_TRAIN):
     """The reference CLI globs *.a2 AND *.ann together for hypotheses
     (deRE_evaluation.py:795); an either/or fallback would silently drop
     every .ann document from a mixed directory — and the scorer's inner
@@ -357,7 +375,6 @@ def test_mixed_extension_hypothesis_dir(spark, tmp_path):
     import os
     import shutil
 
-    src = BIONLP_TRAIN
     hypo = tmp_path / "hypo"
     hypo.mkdir()
     files = sorted(glob.glob(f"{src}/*.a2"))
@@ -370,3 +387,8 @@ def test_mixed_extension_hypothesis_dir(spark, tmp_path):
     full = load_legacy_pairs(spark, src, src)
     assert mixed.count() == full.count()  # no doc dropped
     assert mixed.select("doc_id").exceptAll(full.select("doc_id")).count() == 0
+
+
+@needs_tutorial
+def test_mixed_extension_hypothesis_dir_tutorial(spark, tmp_path):
+    test_mixed_extension_hypothesis_dir(spark, tmp_path, REF_TRAIN)

@@ -2,16 +2,23 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from dere_spark.operators.corpus_ops import seeded_shuffle
 from dere_spark.operators.kernels import LinearPairScorer, score_pairs_batched
 from dere_spark.plans.models import load_model, save_model
-from dere_spark.refdata import REFERENCE_ROOT
 from dere_spark.sources.documents import load_documents
-from tests.conftest import BIONLP_SPEC, BIONLP_TEST, BIONLP_TRAIN, needs_reference
+from tests.conftest import (
+    MINI_SPEC,
+    MINI_TEST,
+    MINI_TRAIN,
+    REF_GAZETTEER,
+    REF_MODEL_SPEC,
+    REF_SPEC,
+    REF_TEST,
+    REF_TRAIN,
+    needs_reference,
+)
 
 
 def test_save_load_round_trip(tmp_path):
@@ -56,16 +63,20 @@ def test_seeded_shuffle_deterministic(spark, sf_dir):
     assert sorted(o1) == sorted(o3)
 
 
-def test_learned_nested_save_load_predict(spark, tmp_path):
+def test_learned_nested_save_load_predict(
+    spark, tmp_path, corpus=(MINI_SPEC, MINI_TRAIN, MINI_TEST)
+):
     """Full model lifecycle for the r2 extractor: train -> save_model ->
-    load_model -> predict, with identical evaluation to the direct path."""
+    load_model -> predict, with identical evaluation to the direct path.
+    ``corpus``: (task spec, train dir, held-out dir)."""
     from dere_spark.bionlp import predict_learned_nested, train_learned_nested
     from dere_spark.plans.models import load_model, save_model
     from dere_spark.sources.brat import load_brat
     from dere_spark.taskspec import load_task_spec
 
-    spec = load_task_spec(BIONLP_SPEC)
-    train = load_brat(spark, BIONLP_TRAIN, spec)
+    spec_path, train_dir, test_dir = corpus
+    spec = load_task_spec(spec_path)
+    train = load_brat(spark, train_dir, spec)
     lm = train_learned_nested(spark, train, iterations=120)
     save_model(lm, str(tmp_path / "lnm"))
     loaded, manifest = load_model(
@@ -79,17 +90,20 @@ def test_learned_nested_save_load_predict(spark, tmp_path):
 
     # apply the LOADED artifact to the (smaller) held-out split: the
     # full predict plan runs from the deserialized weights/dictionaries
-    test = load_brat(spark, BIONLP_TEST, spec)
+    test = load_brat(spark, test_dir, spec)
     hypo = predict_learned_nested(spark, loaded, test)
     assert hypo["frames"].count() > 0
     assert hypo["spans"].where("source = 'predicted'").count() > 0
 
 
-@needs_reference(
-    "task-specs/bionlpst.xml",
-    "model-specs/bionlpst-baseline.json",
-    "model-specs/training_gazetteer_bionlp",
-)
+@needs_reference(REF_SPEC, REF_TRAIN, REF_TEST)
+def test_learned_nested_save_load_predict_tutorial(spark, tmp_path):
+    test_learned_nested_save_load_predict(
+        spark, tmp_path, (REF_SPEC, REF_TRAIN, REF_TEST)
+    )
+
+
+@needs_reference(REF_SPEC, REF_MODEL_SPEC, REF_GAZETTEER)
 def test_build_bare_model_from_reference_specs(tmp_path):
     """The reference's `build` lifecycle step (dere/__main__.py:105-129):
     task spec + model spec -> initialized-but-untrained artifact. The
@@ -101,8 +115,8 @@ def test_build_bare_model_from_reference_specs(tmp_path):
 
     out = str(tmp_path / "bare")
     manifest = build_bare_model(
-        os.path.join(REFERENCE_ROOT, "task-specs", "bionlpst.xml"),
-        os.path.join(REFERENCE_ROOT, "model-specs", "bionlpst-baseline.json"),
+        REF_SPEC,
+        REF_MODEL_SPEC,
         out,
     )
     assert manifest["metadata"]["lifecycle"] == "bare"

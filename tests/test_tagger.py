@@ -8,19 +8,20 @@ hashed JVM-assembled features, scored via broadcast-join (no UDF).
 
 from __future__ import annotations
 
-import os
 import zlib
 
 import pyspark.sql.functions as F
 import pytest
 
-from dere_spark.refdata import REFERENCE_ROOT
-from tests.conftest import BIONLP_SPEC, BIONLP_TRAIN, needs_reference
-
-#: the reference's tutorial corpus: its numbers are what the gated
-#: quality and calibration tests below pin
-TRAIN_DIR = os.path.join(REFERENCE_ROOT, "tutorial", "data", "train")
-TEST_DIR = os.path.join(REFERENCE_ROOT, "tutorial", "data", "test")
+from tests.conftest import (
+    MINI_SPEC,
+    MINI_TRAIN,
+    REF_GAZETTEER,
+    REF_SPEC,
+    REF_TEST,
+    REF_TRAIN,
+    needs_reference,
+)
 
 
 def test_feature_hash_matches_zlib_crc32(spark):
@@ -35,7 +36,7 @@ def test_feature_hash_matches_zlib_crc32(spark):
         assert got[v] == zlib.crc32(v.encode()) % FEATURE_DIM
 
 
-@needs_reference("model-specs/training_gazetteer_bionlp")
+@needs_reference(REF_GAZETTEER)
 def test_reference_gazetteer_loads(spark):
     from dere_spark.operators.tagger import load_reference_gazetteer
 
@@ -107,19 +108,23 @@ def test_type_assignment_rule_order(spark):
     assert got["mystery"] == "Regulation"  # rule 4: train type prior
 
 
-def test_scoring_is_broadcast_join_no_udf(spark):
+def test_scoring_is_broadcast_join_no_udf(
+    spark, spec_path=MINI_SPEC, train_dir=MINI_TRAIN, induced_gazetteer=True
+):
     """The viability scoring plan must contain no Python evaluation —
-    the model is a joined dimension table. The candidate dictionary is
-    the gazetteer induced from train gold, standing in for the
-    reference's shipped one."""
+    the model is a joined dimension table. ``induced_gazetteer``: the
+    candidate dictionary is the gazetteer induced from train gold,
+    standing in for the reference's shipped one (the default of
+    `train_trigger_tagger`)."""
     from dere_spark.bionlp import induce_trigger_gazetteer, tagger_tokens, train_trigger_tagger
     from dere_spark.operators.tagger import candidate_features, score_candidates
     from dere_spark.sources.brat import load_brat
     from dere_spark.taskspec import load_task_spec
 
-    train = load_brat(spark, BIONLP_TRAIN, load_task_spec(BIONLP_SPEC))
+    train = load_brat(spark, train_dir, load_task_spec(spec_path))
+    gazetteer = induce_trigger_gazetteer(train) if induced_gazetteer else None
     model, ttable, rates, gaz = train_trigger_tagger(
-        spark, train, gazetteer=induce_trigger_gazetteer(train), iterations=5
+        spark, train, gazetteer=gazetteer, iterations=5
     )
     cands = candidate_features(tagger_tokens(train), gaz, rates)
     plan = score_candidates(cands, model)._jdf.queryExecution().executedPlan().toString()
@@ -127,13 +132,15 @@ def test_scoring_is_broadcast_join_no_udf(spark):
     assert "mapInPandas" not in plan  # candidate side is pure Catalyst
 
 
+@needs_reference(REF_SPEC, REF_TRAIN, REF_GAZETTEER)
+def test_scoring_is_broadcast_join_no_udf_tutorial(spark):
+    test_scoring_is_broadcast_join_no_udf(
+        spark, REF_SPEC, REF_TRAIN, induced_gazetteer=False
+    )
+
+
 @pytest.mark.slow  # full train + predict + evaluate on the tutorial corpus
-@needs_reference(
-    "task-specs/bionlpst.xml",
-    "tutorial/data/train",
-    "tutorial/data/test",
-    "model-specs/training_gazetteer_bionlp",
-)
+@needs_reference(REF_SPEC, REF_TRAIN, REF_TEST, REF_GAZETTEER)
 def test_tagged_path_beats_gazetteer_held_out(spark):
     """VERDICT r2 next-step #1 (learned token tagger): the tagged path
     must beat every prior held-out number. Measured r5: span F1 0.5647 —
@@ -146,7 +153,7 @@ def test_tagged_path_beats_gazetteer_held_out(spark):
     BASELINE.md r5)."""
     from dere_spark.bionlp import run_bionlp_eval, tagged_nested
 
-    r = run_bionlp_eval(spark, TRAIN_DIR, TEST_DIR, tagged_nested)
+    r = run_bionlp_eval(spark, REF_TRAIN, REF_TEST, tagged_nested)
     assert r.fscore("span") >= 0.55, r.fscore("span")
     assert r.fscore("frame") >= 0.18, r.fscore("frame")
 
@@ -283,11 +290,7 @@ def test_calibrate_type_thresholds_single_aggregation_semantics(spark):
 
 
 @pytest.mark.slow  # full train + two detections + two calibrations
-@needs_reference(
-    "task-specs/bionlpst.xml",
-    "tutorial/data/train",
-    "model-specs/training_gazetteer_bionlp",
-)
+@needs_reference(REF_SPEC, REF_TRAIN, REF_GAZETTEER)
 def test_calibrate_unseen_thresholds_tutorial_values(spark):
     """r5 probe A (VERDICT r4 #7a), adopted: per-type UNSEEN viability
     gates learned from cross-fitted train detection. Values pinned on the
@@ -295,7 +298,6 @@ def test_calibrate_unseen_thresholds_tutorial_values(spark):
     (Phosphorylation learns 0.55). Held-out A/B in BASELINE.md r5:
     span F1 0.506 -> 0.5122, frame unchanged."""
     from dere_spark.bionlp import (
-        BIONLP_SPEC,
         calibrate_type_thresholds,
         calibrate_unseen_thresholds,
         detect_triggers_tagged,
@@ -304,7 +306,7 @@ def test_calibrate_unseen_thresholds_tutorial_values(spark):
     from dere_spark.sources.brat import load_brat
     from dere_spark.taskspec import load_task_spec
 
-    train = load_brat(spark, TRAIN_DIR, load_task_spec(BIONLP_SPEC))
+    train = load_brat(spark, REF_TRAIN, load_task_spec(REF_SPEC))
     model, ttable, rates, gaz = train_trigger_tagger(spark, train)
     trig = detect_triggers_tagged(train, model, ttable, rates, gaz)
     thr = calibrate_type_thresholds(train, trig)

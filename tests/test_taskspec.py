@@ -1,7 +1,8 @@
 """Task-spec loader semantics, checked against the in-repo specs (the
 webtext spec, the BioNLP-ST mini spec and the quote-attribution fixture)
 plus whichever reference task specs are present — mirrors the contract of
-the reference's two-pass loader (dere/taskspec.py:83-152)."""
+the reference's two-pass loader (dere/taskspec.py:83-152). The BioNLP
+checks have a ``*_reference`` twin on the reference's own bionlpst.xml."""
 
 from __future__ import annotations
 
@@ -11,15 +12,14 @@ import os
 import pytest
 
 from dere_spark.plans import compile_plan
-from dere_spark.refdata import REFERENCE_ROOT
 from dere_spark.taskspec import FrameType, SpanType, load_task_spec
 from dere_spark.webtext import SPEC_PATH
-from tests.conftest import BIONLP_SPEC, QUOTE_SPEC
+from tests.conftest import MINI_SPEC, QUOTE_SPEC, REF_SPEC, needs_reference
 
 #: every spec the loader must accept: the in-repo ones always, the
-#: reference's shipped task specs where the checkout is present
-SHIPPED_SPECS = [SPEC_PATH, BIONLP_SPEC, QUOTE_SPEC] + sorted(
-    glob.glob(os.path.join(REFERENCE_ROOT, "task-specs", "*.xml"))
+#: reference's shipped task specs (REF_SPEC's directory) where present
+SHIPPED_SPECS = [SPEC_PATH, MINI_SPEC, QUOTE_SPEC] + sorted(
+    glob.glob(os.path.join(os.path.dirname(REF_SPEC), "*.xml"))
 )
 
 
@@ -48,8 +48,8 @@ def test_reference_specs_load(path):
         assert ft.slot_types, f"{ft.name} has no slots"
 
 
-def test_bionlpst_recursive_frames():
-    spec = load_task_spec(BIONLP_SPEC)
+def test_bionlpst_recursive_frames(spec_path=MINI_SPEC):
+    spec = load_task_spec(spec_path)
     reg = spec.frame_type("Regulation")
     theme = reg.slot("Theme")
     # Theme is union-typed over Protein span and the three regulation
@@ -63,6 +63,11 @@ def test_bionlpst_recursive_frames():
     assert isinstance(spec.type_lookup("Regulation"), SpanType)
 
 
+@needs_reference(REF_SPEC)
+def test_bionlpst_recursive_frames_reference():
+    test_bionlpst_recursive_frames(REF_SPEC)
+
+
 def test_compile_plan_whitelist():
     plan = compile_plan(load_task_spec(SPEC_PATH))
     assert plan.anchor_span_types == {"Operation": "Operator"}
@@ -72,13 +77,18 @@ def test_compile_plan_whitelist():
     assert preds == {"Operation.Theme", "Operation.Manner"}
 
 
-def test_compile_plan_bionlp():
-    plan = compile_plan(load_task_spec(BIONLP_SPEC))
+def test_compile_plan_bionlp(spec_path=MINI_SPEC):
+    plan = compile_plan(load_task_spec(spec_path))
     # every frame type is anchored at its same-named trigger span type
     assert plan.anchor_span_types["Gene_expression"] == "Gene_expression"
     # (Gene_expression, Protein) must be a plausible anchor/filler pair
     labels = plan.plausible_relations[("Gene_expression", "Protein")]
     assert any(l.predicate == "Gene_expression.Theme" for l in labels)
+
+
+@needs_reference(REF_SPEC)
+def test_compile_plan_bionlp_reference():
+    test_compile_plan_bionlp(REF_SPEC)
 
 
 # ---------------------------------------------------------------------------
