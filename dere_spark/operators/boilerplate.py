@@ -10,9 +10,12 @@ segments, keep the ones whose visible text is long and link-poor.
 
 This module re-expresses that heuristic as pure Catalyst expressions —
 regexp chains plus higher-order array functions (``transform`` /
-``filter`` / ``array_join``). No Python, no UDF, and NO shuffle: the
-whole operator is a per-row projection that rides the ingest scan inside
-whole-stage codegen, which is the cheapest possible shape at 100 TB
+``filter`` / ``array_join``), written as SQL text like every operator
+(``extract_main_text`` returns the expression's text and shares the
+entity decoding of ``sources/warc.html_to_text``). No Python, no UDF,
+and NO shuffle: the whole operator is a per-row projection that rides
+the ingest scan inside whole-stage codegen, which is the cheapest
+possible shape at 100 TB
 (``tests/test_boilerplate.py`` pins the no-Exchange plan).
 
 Known limits (documented, deliberate): same-tag NESTED boilerplate
@@ -25,9 +28,9 @@ you want (their link-dense content still gets density-dropped).
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
+from dere_spark.operators import sql_str
 from dere_spark.sources.warc import decode_entities
 
 #: subtrees that are chrome by construction — dropped wholesale before
@@ -50,21 +53,25 @@ _BLOCK_RE = (
 
 _ANCHOR_TEXT_RE = r"(?is)<a\b[^>]*>(.*?)</a>"
 
+_WHITESPACE = sql_str(r"\s+")
+#: block sentinel; see the NUL note in ``extract_main_text``
+_NUL = sql_str("\x00")
 
-def _clean(fragment: Column) -> Column:
-    """Visible text of an html fragment: strip remaining (inline) tags,
-    decode the common entities, collapse whitespace, trim."""
-    text = F.regexp_replace(fragment, r"(?s)<[^>]*>", " ")
-    text = decode_entities(text)
-    return F.trim(F.regexp_replace(text, r"\s+", " "))
+
+def _clean(fragment: str) -> str:
+    """Visible text of an html fragment (SQL text): strip remaining
+    (inline) tags, decode the common entities, collapse whitespace, trim."""
+    text = decode_entities(f"regexp_replace({fragment}, {sql_str(r'(?s)<[^>]*>')}, ' ')")
+    return f"trim(regexp_replace({text}, {_WHITESPACE}, ' '))"
 
 
 def extract_main_text(
-    html: Column,
+    html: str,
     min_block_chars: int = 25,
     max_link_density: float = 0.5,
-) -> Column:
-    """Main-content text of one html page as a Catalyst expression.
+) -> str:
+    """Main-content text of one html page, as SQL text over the expression
+    ``html`` (binary or string).
 
     A block survives when its visible text has at least
     ``min_block_chars`` characters AND its anchor-text share (link
@@ -83,37 +90,20 @@ def extract_main_text(
         raise ValueError(
             f"max_link_density must be in [0,1], got {max_link_density}"
         )
-    raw = html.cast("string")
     # crawl payloads routinely carry stray NUL bytes; neutralize them
     # FIRST so the block sentinel below is guaranteed absent (an embedded
     # NUL must not split a content block mid-text and length-drop it)
-    raw = F.replace(raw, F.lit("\x00"), F.lit(" "))
-    raw = F.regexp_replace(raw, r"(?s)<!--.*?-->", " ")
-    raw = F.regexp_replace(raw, _SUBTREE_RE, " ")
-    blocks = F.split(F.regexp_replace(raw, _BLOCK_RE, "\x00"), "\x00")
-    scored = F.transform(
-        blocks,
-        lambda b: F.struct(
-            _clean(b).alias("text"),
-            F.length(
-                _clean(
-                    F.array_join(
-                        F.regexp_extract_all(b, F.lit(_ANCHOR_TEXT_RE), F.lit(1)),
-                        " ",
-                    )
-                )
-            ).alias("link_n"),
-        ),
+    raw = f"replace(CAST({html} AS STRING), {_NUL}, ' ')"
+    raw = f"regexp_replace({raw}, {sql_str(r'(?s)<!--.*?-->')}, ' ')"
+    raw = f"regexp_replace({raw}, {sql_str(_SUBTREE_RE)}, ' ')"
+    blocks = f"split(regexp_replace({raw}, {sql_str(_BLOCK_RE)}, {_NUL}), {_NUL}, -1)"
+    anchors = f"array_join(regexp_extract_all(b, {sql_str(_ANCHOR_TEXT_RE)}, 1), ' ')"
+    scored = f"transform({blocks}, b -> struct({_clean('b')} AS text, length({_clean(anchors)}) AS link_n))"
+    kept = (
+        f"filter({scored}, s -> length(s.text) >= {int(min_block_chars)} AND "
+        f"CAST(s.link_n AS DOUBLE) <= {float(max_link_density)!r}D * CAST(length(s.text) AS DOUBLE))"
     )
-    kept = F.filter(
-        scored,
-        lambda s: (F.length(s["text"]) >= F.lit(int(min_block_chars)))
-        & (
-            s["link_n"].cast("double")
-            <= F.lit(float(max_link_density)) * F.length(s["text"]).cast("double")
-        ),
-    )
-    return F.array_join(F.transform(kept, lambda s: s["text"]), "\n")
+    return f"array_join(transform({kept}, s -> s.text), '\\n')"
 
 
 def page_main_text(
@@ -126,11 +116,7 @@ def page_main_text(
     Derived column only — the ``text`` column (byte-identical extracted
     text per url, the hard invariant) is never touched; ``main_text`` is
     the curation view of the same page."""
-    return pages.select(
-        "url",
-        extract_main_text(
-            F.col("html"),
-            min_block_chars=min_block_chars,
-            max_link_density=max_link_density,
-        ).alias("main_text"),
+    main_text = extract_main_text(
+        "html", min_block_chars=min_block_chars, max_link_density=max_link_density
     )
+    return pages.selectExpr("url", f"{main_text} AS main_text")

@@ -2493,29 +2493,26 @@ def _register_web_graph() -> None:
         visible-length floor explicitly, so a future documents table with
         short or markup-bearing rows stays in parity instead of failing
         the gate on an unasserted precondition."""
+        from dere_spark.operators import sql_str
         from dere_spark.operators.boilerplate import extract_main_text
 
         d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        safe_text = F.regexp_replace(F.col("text"), r"[<>&\x00]", " ")
-        html = F.concat(
-            F.lit(
-                "<html><head><title>Site Title</title><style>p{color:red}"
-                '</style></head><body><nav><a href="/">Home</a> '
-                '<a href="/about">About us page</a></nav><article><p>'
-            ),
-            safe_text,
-            F.lit(
-                '</p></article><div><a href="/p">Products and Services</a> '
-                '<a href="/s">Customer Support Portal</a> '
-                '<a href="/d">Documentation Archive</a> hub</div>'
-                "<footer>(c) 2024 Example Site - all rights reserved"
-                "</footer></body></html>"
-            ),
+        unsafe = sql_str(r"[<>&\x00]")
+        safe_text = f"regexp_replace(text, {unsafe}, ' ')"
+        head = sql_str(
+            "<html><head><title>Site Title</title><style>p{color:red}"
+            '</style></head><body><nav><a href="/">Home</a> '
+            '<a href="/about">About us page</a></nav><article><p>'
         )
-        return d.select(
-            "doc_id",
-            extract_main_text(F.encode(html, "UTF-8")).alias("main_text"),
+        tail = sql_str(
+            '</p></article><div><a href="/p">Products and Services</a> '
+            '<a href="/s">Customer Support Portal</a> '
+            '<a href="/d">Documentation Archive</a> hub</div>'
+            "<footer>(c) 2024 Example Site - all rights reserved"
+            "</footer></body></html>"
         )
+        html = f"encode(concat({head}, {safe_text}, {tail}), 'UTF-8')"
+        return d.selectExpr("doc_id", f"{extract_main_text(html)} AS main_text")
 
     @register("web_pagerank", _pagerank_oracle_sql(iterations=5))
     def q_web_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

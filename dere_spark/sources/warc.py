@@ -21,9 +21,9 @@ Scale shape
 * The record parser runs inside ``mapInPandas`` — Arrow-batched at file
   granularity, not per-row Python over records of a DataFrame.
 * ``html_to_text`` is a pure Catalyst ``regexp_replace`` chain (JVM,
-  whole-stage codegen) — the baseline extractor for the ``text`` column.
-  It is deterministic and order-free; a browser-grade extractor would
-  slot into the same column contract.
+  whole-stage codegen), built as SQL text — the baseline extractor for
+  the ``text`` column.  It is deterministic and order-free; a
+  browser-grade extractor would slot into the same column contract.
 
 The output schema IS the input-hint schema, so ``web_pages_from_warc``
 feeds ``sources/documents.load_documents`` (which normalizes the web
@@ -36,8 +36,9 @@ import zlib
 from datetime import datetime, timezone
 from typing import Iterator, Optional
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from dere_spark.operators import sql_str
 
 #: parsed-record schema (one row per WARC record of a requested type)
 WARC_RECORD_SCHEMA = (
@@ -219,34 +220,36 @@ _ENTITIES = (
     ("&amp;", "&"),  # last, so &amp;lt; decodes to &lt; not <
 )
 
+_WHITESPACE = sql_str(r"\s+")
 
-def decode_entities(text: Column) -> Column:
-    """Decode the common named html entities (shared by ``html_to_text``
-    and the boilerplate block scorer; ``&amp;`` is applied last so
-    ``&amp;lt;`` decodes to ``&lt;``, not ``<``)."""
+
+def decode_entities(text: str) -> str:
+    """SQL text decoding the common named html entities in the string
+    expression ``text`` (shared by ``html_to_text`` and the boilerplate
+    block scorer; ``&amp;`` is applied last so ``&amp;lt;`` decodes to
+    ``&lt;``, not ``<``)."""
     for ent, repl in _ENTITIES:
-        text = F.replace(text, F.lit(ent), F.lit(repl))
+        text = f"replace({text}, {sql_str(ent)}, {sql_str(repl)})"
     return text
 
 
-def html_to_text(html: Column) -> Column:
-    """Baseline html -> text extraction as a Catalyst expression chain.
+def html_to_text(html: str) -> str:
+    """Baseline html -> text extraction as SQL text over the expression
+    ``html`` (binary or string).
 
     Drops <script>/<style> subtrees and <!-- comments -->, replaces every
     remaining tag with a space, decodes the common named entities, and
     collapses whitespace.  Entirely ``regexp_replace``/``replace`` on the
     JVM — no Python in the hot path; runs inside whole-stage codegen."""
-    text = html.cast("string")
-    text = F.regexp_replace(text, r"(?is)<(script|style)\b[^>]*>.*?</\1\s*>", " ")
-    text = F.regexp_replace(text, r"(?s)<!--.*?-->", " ")
-    text = F.regexp_replace(text, r"(?s)<[^>]*>", " ")
-    text = decode_entities(text)
-    text = F.regexp_replace(text, r"\s+", " ")
-    return F.trim(text)
+    text = f"CAST({html} AS STRING)"
+    for pattern in (r"(?is)<(script|style)\b[^>]*>.*?</\1\s*>", r"(?s)<!--.*?-->", r"(?s)<[^>]*>"):
+        text = f"regexp_replace({text}, {sql_str(pattern)}, ' ')"
+    return f"trim(regexp_replace({decode_entities(text)}, {_WHITESPACE}, ' '))"
 
 
-def _lang_expr(text: Column, markers: dict) -> Column:
-    """Map-side marker language-ID over one text column.
+def _lang_expr(text: str, markers: dict) -> str:
+    """Map-side marker language-ID over the string expression ``text``, as
+    SQL text.
 
     Same decision rule as ``operators/text.language_id`` (most marker
     hits wins, lexicographic ascending tie-break, 'und' on zero hits)
@@ -255,15 +258,15 @@ def _lang_expr(text: Column, markers: dict) -> Column:
     (that would scan + gunzip + parse every archive twice).  The marker
     table is a handful of constants, so literals are the right carrier.
     """
-    toks = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+    toks = f"filter(split(lower({text}), {_WHITESPACE}, -1), t -> t != '')"
     scored = []
     for lang, marks in sorted(markers.items()):
-        mset = F.array(*[F.lit(m) for m in sorted(set(marks))])
-        hits = F.size(F.filter(toks, lambda t: F.array_contains(mset, t)))
+        mset = ", ".join(sql_str(m) for m in sorted(set(marks)))
+        hits = f"size(filter({toks}, t -> array_contains(array({mset}), t)))"
         # sort key: (-hits, lang) ascending == hits desc, lang asc
-        scored.append(F.struct((-hits).alias("neg"), F.lit(lang).alias("lang")))
-    best = F.sort_array(F.array(*scored))[0]
-    return F.when(best["neg"] < 0, best["lang"]).otherwise(F.lit("und"))
+        scored.append(f"struct(-{hits} AS neg, {sql_str(lang)} AS lang)")
+    best = f"sort_array(array({', '.join(scored)}))[0]"
+    return f"CASE WHEN {best}.neg < 0 THEN {best}.lang ELSE 'und' END"
 
 
 def web_pages_from_warc(
@@ -279,13 +282,22 @@ def web_pages_from_warc(
     ``text`` is ``html_to_text(html)``; ``lang`` is the marker
     language-ID over the extracted text ('und' when no marker fires),
     computed MAP-SIDE so the archive scan runs exactly once — no join,
-    no shuffle, no second pass over 100 TB of gzip."""
+    no shuffle, no second pass over 100 TB of gzip.
+
+    The projection is SQL text (``lang`` reads ``text`` as a lateral
+    alias): a warm build makes 60 py4j round trips, where the same
+    expressions built through the Column API made 798 (pyspark 4.1.2;
+    pinned in tests/test_crawl_build.py)."""
     from dere_spark.operators.text import DEFAULT_MARKERS
 
     return (
         load_warc(spark, path, record_types=("response",), max_payload_bytes=max_payload_bytes)
-        .where(F.col("url").isNotNull())
-        .select("url", "warc_ts", "html")
-        .withColumn("text", html_to_text(F.col("html")))
-        .withColumn("lang", _lang_expr(F.col("text"), markers or DEFAULT_MARKERS))
+        .where("url IS NOT NULL")
+        .selectExpr(
+            "url",
+            "warc_ts",
+            "html",
+            f"{html_to_text('html')} AS text",
+            f"{_lang_expr('text', markers or DEFAULT_MARKERS)} AS lang",
+        )
     )

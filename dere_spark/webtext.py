@@ -19,9 +19,11 @@ path — so the whole plan runs inside one stage after the corpus shuffle
 and scales linearly with executors; documents are the unit of parallelism
 end to end. The corpus is scanned once and shuffled once (hash on doc_id
 in ``load_documents``): the tokenizer windows and the ±k neighbourhood
-window reuse that distribution. A warm kg_dense batch runs 3 Spark jobs
-(schema, scan, result); with the gazetteer, whitelist and entity
-dictionary as broadcast joins it ran 6 (numbers in operators/frames.py).
+window reuse that distribution. A warm kg_dense batch runs 3 Spark jobs:
+the scan up to the doc_id shuffle, the extraction up to the sink's
+rebalance on pred, and the write (pinned in tests/test_plan_shape.py);
+with the gazetteer, whitelist and entity dictionary as broadcast joins it
+ran 6 (numbers in operators/frames.py).
 
 The tokenizer is Treebank segmentation (`tokenize_treebank_sql`) — the
 reference tokenizes Treebank-style (span_classifier.py:361), and on the

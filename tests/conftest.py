@@ -52,3 +52,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def py4j_round_trips(fn) -> int:
+    """py4j round trips from Python to the JVM while ``fn()`` runs.
+    py4j's memory-release messages (``m d``) are not counted: py4j sends
+    them in batches as Python drops proxies, so their number follows
+    garbage timing, not the work ``fn`` does."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        fn()
+    finally:
+        ClientServerConnection.send_command = send
+    return len(sent)

@@ -31,7 +31,7 @@ PAGE = (
 def _extract(spark, html: str, **kw) -> str:
     df = spark.createDataFrame([(html,)], "html string")
     return df.select(
-        extract_main_text(F.col("html"), **kw).alias("t")
+        F.expr(extract_main_text("html", **kw)).alias("t")
     ).first()["t"]
 
 
@@ -119,6 +119,6 @@ def test_embedded_nul_does_not_split_blocks(spark):
 
 def test_parameter_validation():
     with pytest.raises(ValueError):
-        extract_main_text(F.lit("x"), min_block_chars=0)
+        extract_main_text("'x'", min_block_chars=0)
     with pytest.raises(ValueError):
-        extract_main_text(F.lit("x"), max_link_density=1.5)
+        extract_main_text("'x'", max_link_density=1.5)

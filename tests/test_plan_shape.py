@@ -13,6 +13,7 @@ import pytest
 
 from dere_spark.operators.triples import write_triples
 from dere_spark.webtext import build_stages
+from tests.conftest import py4j_round_trips
 
 
 def _executed_plan(df) -> str:
@@ -92,28 +93,11 @@ def test_build_stages_round_trip_budget(spark, sf_dir):
     py4j round trip per Column API call. The operators build their
     constant expressions as SQL text, so a warm ``build_stages`` stays
     within a pinned budget; an expression rebuilt through nested Column
-    calls (a 30-deep regexp_replace chain alone costs ~300) fails here.
-    py4j's memory-release messages (``m d``) are not counted: py4j sends
-    them in batches as Python drops proxies, so their number follows
-    garbage timing, not the plan."""
-    from py4j.clientserver import ClientServerConnection
-
+    calls (a 30-deep regexp_replace chain alone costs ~300) fails here."""
     build_stages(spark, sf_dir)  # warm: imports, class loading, parser
-    sent = []
-    send = ClientServerConnection.send_command
-
-    def counting(self, command, *args, **kwargs):
-        if not command.startswith("m\nd\n"):
-            sent.append(command)
-        return send(self, command, *args, **kwargs)
-
-    ClientServerConnection.send_command = counting
-    try:
-        build_stages(spark, sf_dir)
-    finally:
-        ClientServerConnection.send_command = send
-    assert len(sent) <= BUILD_ROUND_TRIP_BUDGET, (
-        f"build_stages made {len(sent)} py4j round trips "
+    sent = py4j_round_trips(lambda: build_stages(spark, sf_dir))
+    assert sent <= BUILD_ROUND_TRIP_BUDGET, (
+        f"build_stages made {sent} py4j round trips "
         f"(budget {BUILD_ROUND_TRIP_BUDGET})"
     )
 

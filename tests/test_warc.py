@@ -117,7 +117,7 @@ def test_load_warc_truncation_is_loud(spark, tmp_path):
 
 def test_html_to_text_extraction(spark):
     df = spark.createDataFrame([(HTML_A,)], "html binary").select(
-        html_to_text(F.col("html")).alias("text")
+        F.expr(html_to_text("html")).alias("text")
     )
     text = df.first()["text"]
     # script/style/comment subtrees dropped entirely
@@ -129,7 +129,7 @@ def test_html_to_text_extraction(spark):
 
 def test_html_to_text_amp_decodes_last(spark):
     df = spark.createDataFrame([(b"&amp;lt;x",)], "html binary").select(
-        html_to_text(F.col("html")).alias("text")
+        F.expr(html_to_text("html")).alias("text")
     )
     assert df.first()["text"] == "&lt;x"  # NOT '<x': &amp; decodes last
 
@@ -171,7 +171,7 @@ def test_web_pages_feed_load_documents(spark, tmp_path):
     # recomputing the extraction matches what was written: text is a pure
     # function of html, never mutated in place
     raw = spark.read.parquet(str(sf_dir / "documents.parquet"))
-    same = raw.select((F.col("text") == html_to_text(F.col("html"))).alias("s"))
+    same = raw.select((F.col("text") == F.expr(html_to_text("html"))).alias("s"))
     assert all(r["s"] for r in same.collect())
 
 
